@@ -102,6 +102,14 @@ def _connected_components_inner(
         labels = new_labels.select("id", F.col("new_label").alias("label"))
         if changed == 0:
             break
+    else:
+        # the last allowed round still moved a label: the labels are not
+        # components yet, and returning them would split clusters silently
+        raise RuntimeError(
+            f"min-label connected components did not converge in {max_iter} "
+            "rounds (the pair graph has a longer path); rerun with "
+            'cc_algorithm="star" (O(log^2 n) rounds) or a larger max_iter'
+        )
 
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
 

@@ -11,7 +11,8 @@ byte-level one:
 ``compress(in_dir, work_dir)``:
 
 1. ingest: ``sources.read_binary_dir`` -> ``ingest_documents`` (one row
-   per file: surrogate id, sniffed media type, UTF-8 text when valid);
+   per file: surrogate id from the relative path, sniffed media type,
+   UTF-8 text when valid);
 2. exact dedup of ALL payloads (FIX_OPTI analog for whole files): group
    by ``(length, crc32, xxhash64)``, keep the min-id member, then
    *verify* each dropped member's bytes against its keeper — a hash
@@ -80,8 +81,14 @@ def _raw_hex() -> "F.Column":
 
 
 def ingest(spark: SparkSession, in_dir: str) -> DataFrame:
-    return SRC.ingest_documents(SRC.read_binary_dir(spark, in_dir)).withColumn(
-        "rel", _rel_col(in_dir, "source")
+    """One row per file, keyed by ``xxhash64(rel)``: the id, and with it
+    the min-id choice of exact keepers and delta bases, depends only on
+    the tree's contents, not on where the tree is mounted."""
+    rel = _rel_col(in_dir, "source")
+    return (
+        SRC.ingest_documents(SRC.read_binary_dir(spark, in_dir))
+        .withColumn("rel", rel)
+        .withColumn("doc_id", F.xxhash64(rel))
     )
 
 
@@ -161,7 +168,7 @@ def compress(
 ) -> dict:
     _register_sidp(spark)
     docs = ingest(spark, in_dir).persist()
-    # the surrogate key is xxhash64(path); a collision would map two
+    # the surrogate key is xxhash64(rel); a collision would map two
     # files onto one identity and restore the wrong bytes SILENTLY —
     # fail loudly instead (at ~2^-64/pair this is a guard, not a path;
     # a real deployment widens the key to (xxhash64, length))

@@ -5,17 +5,37 @@ fresh feature tables per batch — ``/root/reference/idedup.c:308-313,
 824-830``). The north rule requires *global* dedup with per-partition
 lineage + metrics and resume-from-checkpoint. Design:
 
-* every expensive stage (signatures, verified pairs, clusters, spans)
-  materializes to ``<workdir>/<stage>/`` as Parquet (Iceberg when a catalog
-  is configured — this sandbox has no Iceberg jar, and SURVEY.md §7 allows
-  the Parquet-plus-manifest fallback);
+* every expensive stage materializes to ``<workdir>/<stage>/`` as Parquet
+  (Iceberg when a catalog is configured — this sandbox has no Iceberg jar,
+  and SURVEY.md §7 allows the Parquet-plus-manifest fallback). In run
+  order:
+
+  - ``recrawls`` (opt-in ``collapse_recrawls``): newest revision per
+    canonical URL, all input columns;
+  - ``signatures``: the single text pass before span extraction — one
+    ``(id, sig, shingle_set, n_set_true)`` row per valid doc, plus
+    ``fingerprint`` with ``exact_prepass``;
+  - ``exact_groups`` (``exact_prepass``): ``(id, exact_rep)`` per valid
+    doc, grouped from the signature stage's ``(id, fingerprint)`` rows —
+    the text is not read again;
+  - ``verified_pairs``: LSH candidates of the representatives' signature
+    rows, verified;
+  - ``clusters``: ``(id, cluster_id)`` per valid doc (members of an exact
+    group inherit their representative's cluster);
+  - ``spans`` and ``span_summary``: copy/insert spans against each
+    cluster's base;
+
 * a stage is complete iff ``<workdir>/<stage>/_LINEAGE.json`` exists — it is
   written *after* the Parquet commit, so a killed run can never leave a
   complete-looking stage behind (write-ahead ordering = idempotent resume);
-* the lineage record carries row count, config echo, and wall time — the
-  per-partition metrics the north rule asks for come from Spark's own
-  per-file Parquet statistics plus this manifest;
-* re-running a completed stage is a no-op read (tests/test_resume.py).
+* the lineage record carries row count (observed during the write, no
+  extra scan), config echo, wall time and a ``key``: a hash of the config,
+  ``id_col``, ``cc_algorithm``, ``collapse_recrawls``, the stage layout
+  version and the input files with their sizes. A completed stage whose
+  key differs from the run's is refused (``StaleStageError``) instead of
+  silently reused;
+* re-running a completed stage with the same key is a no-op read
+  (tests/test_resume.py).
 
 At 100 TB each stage boundary is also the natural operational boundary:
 signatures are ~40 bytes/doc (8 x 8-byte features + id), pairs and clusters
@@ -51,13 +71,14 @@ Exact Iceberg mapping of this fallback (what a cluster with the
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import time
 from dataclasses import asdict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import candidates as C
@@ -68,13 +89,23 @@ from .config import DedupConfig
 
 STAGES = (
     "recrawls",
-    "exact_groups",
     "signatures",
+    "exact_groups",
     "verified_pairs",
     "clusters",
     "spans",
     "span_summary",
 )
+
+#: bump when a stage's content changes for the same config and input, so
+#: workdirs written by older code are refused rather than reused.
+#: 2: ``signatures`` covers every valid doc (+ ``fingerprint``) and runs
+#: before ``exact_groups``.
+STAGE_LAYOUT_VERSION = 2
+
+
+class StaleStageError(RuntimeError):
+    """A completed stage was built for another config, input or layout."""
 
 
 class CheckpointedPipeline:
@@ -100,6 +131,8 @@ class CheckpointedPipeline:
         #: fan-outs) or "star" (large-star/small-star, O(log^2 n) rounds
         #: for adversarial long-chain pair graphs) — see clustering.py
         self.cc_algorithm = cc_algorithm
+        #: lineage key of the current run (set by ``run`` from its input)
+        self.key: str | None = None
         os.makedirs(workdir, exist_ok=True)
 
     # -- lineage -----------------------------------------------------------
@@ -112,31 +145,68 @@ class CheckpointedPipeline:
     def is_complete(self, stage: str) -> bool:
         return os.path.exists(self._lineage_path(stage))
 
+    def _key_fields(self) -> dict:
+        """Everything besides the input that decides what a stage holds."""
+        return {
+            "config": asdict(self.cfg),
+            "id_col": self.id_col,
+            "cc_algorithm": self.cc_algorithm,
+            "collapse_recrawls": self.collapse_recrawls,
+            "layout": STAGE_LAYOUT_VERSION,
+        }
+
+    def _input_files(self, docs: DataFrame) -> list[tuple[str, int]]:
+        """``(uri, bytes)`` of every file under ``docs``; empty for an
+        in-memory or cached frame, whose plan names no files."""
+        jvm = self.spark.sparkContext._jvm
+        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
+        out = []
+        for uri in sorted(docs.inputFiles()):
+            path = jvm.org.apache.hadoop.fs.Path(uri)
+            out.append((uri, path.getFileSystem(conf).getFileStatus(path).getLen()))
+        return out
+
+    def lineage_key(self, docs: DataFrame) -> str:
+        rec = dict(self._key_fields(), input=self._input_files(docs))
+        blob = json.dumps(rec, sort_keys=True).encode()
+        return hashlib.sha256(blob).hexdigest()
+
     def _commit(self, stage: str, df: DataFrame, started: float) -> DataFrame:
         path = self._stage_dir(stage)
         tmp = path + ".inprogress"
         shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
+        # the row count rides on the write job itself (no re-read + count)
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
+        rows = obs.get["rows"]
         shutil.rmtree(path, ignore_errors=True)
         os.replace(tmp, path)
-        out = self.spark.read.parquet(path)
         lineage = {
             "stage": stage,
-            "rows": out.count(),
+            "rows": rows,
             "n_files": len([f for f in os.listdir(path) if f.endswith(".parquet")]),
             "config": asdict(self.cfg),
+            "key": self.key,
             "wall_sec": round(time.time() - started, 3),
             "completed_at_epoch": int(time.time()),
         }
         with open(self._lineage_path(stage), "w") as fh:
             json.dump(lineage, fh, indent=2)
-        return out
+        return self._load(stage)
 
     def _load(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._stage_dir(stage))
 
     def _stage(self, stage: str, build) -> DataFrame:
         if self.is_complete(stage):
+            with open(self._lineage_path(stage)) as fh:
+                found = json.load(fh).get("key")
+            if found != self.key:
+                raise StaleStageError(
+                    f"stage {stage!r} in {self.workdir} was built for another "
+                    f"config, input or stage layout (key {found}, this run "
+                    f"{self.key}); use a fresh workdir or delete the stage"
+                )
             return self._load(stage)
         t0 = time.time()
         return self._commit(stage, build(), t0)
@@ -152,6 +222,7 @@ class CheckpointedPipeline:
     # -- stages --------------------------------------------------------------
     def run(self, docs: DataFrame) -> dict[str, DataFrame]:
         cfg, idc = self.cfg, self.id_col
+        self.key = self.lineage_key(docs)
 
         if self.collapse_recrawls:
             from . import weburl as WU
@@ -168,9 +239,26 @@ class CheckpointedPipeline:
             )
 
         valid = S.valid_documents(docs, cfg)
+        if (cfg.exact_prepass and cfg.short_doc_tokens > 0
+                and cfg.shingle_window > cfg.min_tokens):
+            # exact groups come from the signature rows, which need a full
+            # shingle window; valid docs below it would have no group
+            raise ValueError(
+                "exact_prepass with short_doc_tokens needs shingle_window <= min_tokens"
+            )
+
+        # the single text pass: Arrow/numpy kernel, bit-identical to the SQL
+        # forms (tests/test_signatures.py) but immune to the JVM
+        # interpreted-HOF / array_intersect allocation walls measured in
+        # BENCH/BASELINE.md. It applies the validity filter itself, and with
+        # the prepass also folds each doc's exact-dup fingerprint.
+        sig_all = self._stage(
+            "signatures",
+            lambda: S.signature_kernel_arrow(docs, cfg, idc, fingerprint=cfg.exact_prepass),
+        )
 
         exact_groups = None
-        lsh_input = valid
+        sig, lsh_input = sig_all, valid
         if cfg.exact_prepass:
             # FIX_OPTI analog: collapse identical texts to one representative
             # before the quadratic stages (2df.c:477-494 / index.c:254-264)
@@ -178,21 +266,12 @@ class CheckpointedPipeline:
 
             exact_groups = self._stage(
                 "exact_groups",
-                lambda: T.exact_dup_groups(valid, idc).select(idc, "exact_rep"),
+                lambda: T.exact_dup_groups(sig_all.select(idc, "fingerprint"), idc)
+                .select(idc, "exact_rep"),
             )
-            lsh_input = valid.join(
-                exact_groups.where(F.col(idc) == F.col("exact_rep")).select(idc),
-                idc,
-            )
-
-        # scale path: Arrow/numpy kernels, bit-identical to the SQL forms
-        # (tests/test_signatures.py, tests/test_candidates.py) but immune to
-        # the JVM interpreted-HOF / array_intersect allocation walls
-        # measured in BENCH/BASELINE.md
-        sig = self._stage(
-            "signatures",
-            lambda: S.signature_kernel_arrow(lsh_input, cfg, idc),
-        )
+            reps = exact_groups.where(F.col(idc) == F.col("exact_rep")).select(idc)
+            sig = sig_all.join(reps, idc, "left_semi")
+            lsh_input = valid.join(reps, idc, "left_semi")
 
         def _build_verified() -> DataFrame:
             pairs = C.candidate_pairs(S.explode_bands(sig, cfg, idc), cfg, idc)
@@ -234,6 +313,7 @@ class CheckpointedPipeline:
         return {
             "valid": valid,
             "signatures": sig,
+            "exact_groups": exact_groups,
             "verified_pairs": verified,
             "clusters": clusters,
             "spans": spans,

@@ -268,24 +268,22 @@ def _arange_segments(counts):
     return np.cumsum(ids)
 
 
-#: 31^j mod 2^31 table, grown on demand to the longest token seen.
-#: Per Python worker process (deterministic values, no sharing needed).
-_POW31 = None
+#: ``mult^j mod 2^31`` tables keyed by multiplier, grown on demand to the
+#: longest token (word hash) or document (fingerprint) seen. Per Python
+#: worker process (deterministic values, no sharing needed).
+_POW_TABLES: dict = {}
 
 
-def _pow31_table(n: int):
+def _pow_table(mult: int, n: int):
     import numpy as np
 
-    global _POW31
-    if _POW31 is None:
-        _POW31 = np.array(
-            [pow(WORD_MULT, j, HASH_MOD) for j in range(64)], dtype=np.uint64
-        )
-    while _POW31.size < n:
-        _POW31 = np.concatenate(
-            (_POW31, (_POW31[-1] * _POW31[1:]) % np.uint64(HASH_MOD))
-        )
-    return _POW31
+    tbl = _POW_TABLES.get(mult)
+    if tbl is None:
+        tbl = np.array([pow(mult, j, HASH_MOD) for j in range(64)], dtype=np.uint64)
+    while tbl.size < n:
+        tbl = np.concatenate((tbl, (tbl[-1] * tbl[1:]) % np.uint64(HASH_MOD)))
+    _POW_TABLES[mult] = tbl
+    return tbl
 
 
 def _flat_word_hashes(chunk_texts: list[str]):
@@ -310,7 +308,6 @@ def _flat_word_hashes(chunk_texts: list[str]):
     import numpy as np
 
     ndoc = len(chunk_texts)
-    M = np.uint64(HASH_MOD)
     MASK31 = np.uint64(HASH_MOD - 1)
     joined = " ".join(chunk_texts)
     cp = np.frombuffer(
@@ -335,13 +332,38 @@ def _flat_word_hashes(chunk_texts: list[str]):
     wlen = ends - starts
     pos = np.repeat(starts, wlen) + _arange_segments(wlen)
     off = np.repeat(ends, wlen) - 1 - pos
-    pw = _pow31_table(int(wlen.max()) + 1)
+    pw = _pow_table(WORD_MULT, int(wlen.max()) + 1)
     terms = (cp[pos].astype(np.uint64) * pw[off]) & MASK31
     wstarts = np.concatenate(([0], np.cumsum(wlen)[:-1]))
     wh_all = np.add.reduceat(terms, wstarts) & MASK31
     wdoc = np.searchsorted(doc_char_end, starts, side="right")
     n_tok = np.bincount(wdoc, minlength=ndoc)
     return wh_all, wdoc, n_tok
+
+
+def _doc_fingerprints(wh_all, n_tok):
+    """Whole-document fingerprint per doc from ``_flat_word_hashes``
+    output: the Horner fold ``(a*SHINGLE_MULT + h) % 2**31`` over the doc's
+    word hashes, 0 for a token-free doc (``textfns.fingerprint_sql``).
+
+    Mod 2^31 is a bitmask, so the fold equals ``sum(h_i * M^(n-1-i)) mod
+    2**31``: one power-table gather and one ``np.add.reduceat``, the same
+    form as the per-token word hash. Each term is below 2^31, so the
+    uint64 sum is exact for any doc under 2^33 tokens."""
+    import numpy as np
+
+    out = np.zeros(n_tok.size, dtype=np.int64)
+    has = n_tok > 0
+    cnt = n_tok[has]
+    if cnt.size == 0:
+        return out
+    mask31 = np.uint64(HASH_MOD - 1)
+    off = np.repeat(cnt, cnt) - 1 - _arange_segments(cnt)
+    pw = _pow_table(SHINGLE_MULT, int(cnt.max()))
+    terms = (wh_all * pw[off]) & mask31
+    starts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
+    out[has] = (np.add.reduceat(terms, starts) & mask31).astype(np.int64)
+    return out
 
 
 def _iter_text_chunks(id_vals, text_vals, chunk_docs: int = 64,
@@ -388,9 +410,17 @@ def _flat_shingles(wh, n_tok_k, win: int):
 
 
 def signature_kernel_arrow(
-    df: DataFrame, cfg: DedupConfig, id_col: str, text_col: str = "text"
+    df: DataFrame,
+    cfg: DedupConfig,
+    id_col: str,
+    text_col: str = "text",
+    fingerprint: bool = False,
 ) -> DataFrame:
     """mapInPandas signature kernel: ``(id, sig, shingle_set)`` rows.
+
+    ``fingerprint=True`` adds the whole-document ``fingerprint`` column
+    (``textfns.fingerprint`` arithmetic, folded from the same word hashes),
+    so the exact-duplicate pass needs no second read of the text.
 
     This is the SCALE path for the signature stage (the SQL-expression path
     in ``with_signature`` computes identical values but evaluates nested
@@ -398,8 +428,8 @@ def signature_kernel_arrow(
     ~8 threads per JVM — measured 60s@local[8] vs 186s@local[32] on the
     370k-doc bench corpus). Python workers are separate processes, so
     parallel efficiency survives any executor thread count. Rows failing
-    the validity filter are dropped (same contract as ``valid_documents``
-    + ``with_signature``).
+    the validity filter, and rows with NULL text, are dropped (same
+    contract as ``valid_documents`` + ``with_signature``).
 
     Physical form: **chunked-flat numpy over codepoint arrays** — no
     per-token Python at all. Each ~64-doc / <=256K-char slice of the Arrow
@@ -435,7 +465,7 @@ def signature_kernel_arrow(
     CHUNK_DOCS = 64          # L2-residency (see docstring measurements)
     CHUNK_CHARS = 1 << 18    # mega-doc guard: bounds flat temporaries
 
-    def _emit_chunk(chunk_texts, ids_chunk, ids, sigs, sets, nsets):
+    def _emit_chunk(chunk_texts, ids_chunk, ids, sigs, sets, nsets, fps):
         wh_all, wdoc, n_tok = _flat_word_hashes(chunk_texts)
         if wh_all.size == 0:
             return
@@ -444,6 +474,8 @@ def signature_kernel_arrow(
         nk = int(keep.sum())
         if nk == 0:
             return
+        if fingerprint:
+            fps.extend(_doc_fingerprints(wh_all, n_tok)[keep])
         wh = wh_all[keep[wdoc]]
         n_tok_k = n_tok[keep]
         sh, sh_starts, n_sh = _flat_shingles(wh, n_tok_k, win)
@@ -486,27 +518,32 @@ def signature_kernel_arrow(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            id_vals = pdf[id_col].values
-            text_vals = pdf[text_col].values
+            mask = pdf[text_col].notna().values
             if langs is not None:
-                mask = np.isin(pdf["lang"].values, langs)
-                id_vals = id_vals[mask]
-                text_vals = text_vals[mask]
-            ids, sigs, sets, nsets = [], [], [], []
+                mask &= np.isin(pdf["lang"].values, langs)
+            id_vals = pdf[id_col].values[mask]
+            text_vals = pdf[text_col].values[mask]
+            ids, sigs, sets, nsets, fps = [], [], [], [], []
             for chunk_texts, ids_chunk in _iter_text_chunks(
                 id_vals, text_vals, CHUNK_DOCS, CHUNK_CHARS
             ):
-                _emit_chunk(chunk_texts, ids_chunk, ids, sigs, sets, nsets)
-            yield pd.DataFrame(
-                {id_col: ids, "sig": sigs, "shingle_set": sets,
-                 "n_set_true": np.array(nsets, dtype=np.int32)}
-            )
+                _emit_chunk(chunk_texts, ids_chunk, ids, sigs, sets, nsets, fps)
+            if not ids:
+                # every doc dropped: an empty frame would type its list
+                # columns float64, which Arrow cannot convert
+                continue
+            out = {id_col: ids, "sig": sigs, "shingle_set": sets,
+                   "n_set_true": np.array(nsets, dtype=np.int32)}
+            if fingerprint:
+                out["fingerprint"] = np.array(fps, dtype=np.int64)
+            yield pd.DataFrame(out)
 
     id_field = df.schema[id_col]
     cols = [id_col, text_col] + (["lang"] if langs is not None else [])
     schema = (
         f"{id_col} {id_field.dataType.simpleString()}, "
         "sig array<bigint>, shingle_set binary, n_set_true int"
+        + (", fingerprint bigint" if fingerprint else "")
     )
     return df.select(*cols).mapInPandas(fn, schema=schema)
 

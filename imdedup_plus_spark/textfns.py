@@ -3,10 +3,12 @@
 Beyond the reference's own operator set (SURVEY.md §2.2): token counting,
 quality scoring, language-ID heuristic, document fingerprinting, SimHash.
 Every function is implemented twice from the same constants — as Spark
-built-in expressions (JVM-side) and as DuckDB oracle SQL — with arithmetic
-restricted to integers / well-ordered folds so the side-by-side check is
-bit-exact. ``floor()`` (not casts) converts ratios to integers: Spark CAST
-truncates while DuckDB CAST rounds, so casts on ratios would diverge.
+built-in expressions (JVM-side) or a numpy kernel, and as DuckDB oracle
+SQL — with arithmetic restricted to integers / well-ordered folds so the
+side-by-side check is bit-exact. ``fingerprint`` has only the kernel form,
+shared with the signature stage. ``floor()`` (not casts) converts ratios
+to integers: Spark CAST truncates while DuckDB CAST rounds, so casts on
+ratios would diverge.
 
 Scale notes: all are narrow per-row maps over ``tokens``; no shuffles
 except the final groupBys of the fingerprint dedup.
@@ -149,21 +151,55 @@ def lang_id(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
 
 def fingerprint(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Whole-document rolling hash (the FIX_OPTI exact-dup prepass analog,
-    ``/root/reference/2df.c:477-494``): fold the word-hash stream."""
-    whs = word_hashes_expr(tokens_expr(text_col))
-    return docs.select(
-        F.col(id_col),
-        F.expr(
-            f"aggregate({whs}, 0L, (a, h) -> (a * {SHINGLE_MULT} + h) % {HASH_MOD})"
-        ).alias("fingerprint"),
+    reference ``2df.c:477-494``): fold the word-hash stream with
+    ``(a*SHINGLE_MULT + h) % 2**31``. NULL text gives NULL, token-free
+    text 0 (``fingerprint_sql``).
+
+    The fold is the signature kernel's (``signatures._doc_fingerprints``
+    over ``_flat_word_hashes``), so this and the pipeline's single text
+    pass (``signature_kernel_arrow(..., fingerprint=True)``) agree bit for
+    bit."""
+    import numpy as np
+    import pandas as pd
+
+    from .signatures import _doc_fingerprints, _flat_word_hashes, _iter_text_chunks
+
+    def fn(batches):
+        for pdf in batches:
+            null = pdf[text_col].isna().values
+            texts = np.where(null, "", pdf[text_col].values)
+            fps = [np.empty(0, np.int64)]
+            for chunk, _ in _iter_text_chunks(range(len(texts)), texts):
+                wh_all, _, n_tok = _flat_word_hashes(chunk)
+                fps.append(_doc_fingerprints(wh_all, n_tok))
+            fp = pd.array(np.concatenate(fps), dtype="Int64")
+            fp[null] = pd.NA
+            yield pd.DataFrame({id_col: pdf[id_col].values, "fingerprint": fp})
+
+    id_type = docs.schema[id_col].dataType.simpleString()
+    return docs.select(id_col, text_col).mapInPandas(
+        fn, schema=f"{id_col} {id_type}, fingerprint bigint"
     )
 
 
 def exact_dup_groups(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Exact-duplicate assignment: every doc -> representative (min id of
     its identical-fingerprint group) + group size. The cheap pre-pass that
-    removes identical docs before LSH (SURVEY.md §4 FIX_OPTI row)."""
-    fp = fingerprint(docs, id_col, text_col)
+    removes identical docs before LSH (SURVEY.md §4 FIX_OPTI row).
+
+    ``docs`` may already carry ``fingerprint`` (the pipeline passes the
+    signature stage's ``(id, fingerprint)`` rows, so neither side of the
+    join below reads text); otherwise it is folded from ``text_col``.
+    Aggregate-then-join rather than a window: a huge group (one page
+    copied millions of times) stays a map-side partial aggregate plus a
+    skew-splittable join, never one buffered window partition. NULL-text
+    docs have no group (the equi-join drops them, as in
+    ``exact_dup_groups_sql``)."""
+    fp = (
+        docs.select(id_col, "fingerprint")
+        if "fingerprint" in docs.columns
+        else fingerprint(docs, id_col, text_col)
+    )
     grp = fp.groupBy("fingerprint").agg(
         F.min(id_col).alias("exact_rep"),
         F.count(F.lit(1)).cast("long").alias("group_size"),

@@ -4,8 +4,9 @@ oracle-checked operators.
 
 What a user of the reference would actually RUN to turn a crawl into
 training shards: the dedup pipeline (``pipeline.CheckpointedPipeline``
-— recrawl collapse, exact prepass, signatures, verified pairs,
-clusters) followed by
+— recrawl collapse, signatures (one text pass, which also folds the
+exact-dup fingerprint), exact groups, verified pairs, clusters) followed
+by
 
 * ``keepers``   — survivor per dup cluster (argmax quality; the
   scale-shaped ``clustering.cluster_keepers`` aggregate), every doc a
@@ -74,6 +75,9 @@ class TrainingPrepPipeline(CheckpointedPipeline):
         super().__init__(*args, **kw)
         self.n_shards = n_shards
 
+    def _key_fields(self) -> dict:
+        return dict(super()._key_fields(), n_shards=self.n_shards)
+
     def run_prep(self, docs: DataFrame) -> dict[str, DataFrame]:
         """Run everything; returns the dedup frames plus ``keepers``,
         ``verdict``, ``selected``, ``shards`` and ``packed``."""
@@ -94,8 +98,12 @@ class TrainingPrepPipeline(CheckpointedPipeline):
 
         def _build_verdict() -> DataFrame:
             # the corpus_select_verdict composition (driver-checked):
-            # every gate joined on the id, one shared CASE
-            ex = T.exact_dup_groups(valid, idc).select(
+            # every gate joined on the id, one shared CASE. The exact
+            # groups come from the dedup run when its prepass built them.
+            groups = out["exact_groups"]
+            if groups is None:
+                groups = T.exact_dup_groups(valid, idc)
+            ex = groups.select(
                 idc,
                 (F.col("exact_rep") != F.col(idc)).cast("int").alias(
                     "is_exact_dup"

@@ -17,7 +17,8 @@ corpus-scale inputs.
 
 On a cluster, ``--input`` is the Iceberg/Parquet documents table; the
 workdir holds per-stage checkpoints + lineage manifests; re-running with
-the same workdir resumes from the last completed stage (idempotent).
+the same workdir, config and input resumes from the last completed stage
+(idempotent); another config or input raises ``StaleStageError``.
 """
 
 from __future__ import annotations

@@ -65,27 +65,46 @@ def test_star_bounded_rounds_on_long_chain(spark):
     """The case min-label cannot handle: a path graph of n nodes needs
     O(n) min-label iterations (labels move one hop per round) but
     O(log^2 n) large-star/small-star rounds. n=300: min-label capped at
-    8 iterations leaves the chain un-merged; star converges, correctly,
-    in <= 10 rounds."""
+    8 iterations cannot merge the chain and raises instead of returning
+    the split labels; star converges, correctly, in <= 10 rounds."""
+    import pytest
+
     from imdedup_plus_spark.clustering import connected_components
 
     n = 300
     nodes = list(range(n))
     chain = [(i, i + 1) for i in range(n - 1)]
 
-    # min-label, capped: must NOT have converged (far end still wrong)
+    # min-label, capped: has not converged, so it must fail loudly
     ndf = spark.createDataFrame([(k,) for k in nodes], "id long")
     edf = spark.createDataFrame(chain, "id_a long, id_b long")
-    capped = {
-        r.id: r.cluster_id
-        for r in connected_components(ndf, edf, "id", max_iter=8).collect()
-    }
-    assert capped[n - 1] != 0, "chain too short to demonstrate the gap"
+    with pytest.raises(RuntimeError, match="did not converge in 8 rounds"):
+        connected_components(ndf, edf, "id", max_iter=8)
 
     stats: dict = {}
     got = _run_star(spark, nodes, chain, max_iter=50, stats=stats)
     assert set(got.values()) == {0}
     assert stats["rounds"] <= 10, stats
+
+
+def test_unconverged_minlabel_raises_and_star_clusters(spark):
+    """A 200-edge chain needs ~200 min-label rounds: under the default cap
+    (25) ``clusters_from_pairs`` raises and names the star algorithm,
+    which clusters the whole chain to one id."""
+    import pytest
+
+    from imdedup_plus_spark.clustering import clusters_from_pairs
+
+    n = 201
+    docs = spark.createDataFrame([(k,) for k in range(n)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match='cc_algorithm="star"'):
+        clusters_from_pairs(docs, pairs, "doc_id")
+    got = clusters_from_pairs(docs, pairs, "doc_id", algorithm="star").collect()
+    assert len(got) == n
+    assert {r.cluster_id for r in got} == {0}
 
 
 def test_clusters_from_pairs_star_flag(spark):

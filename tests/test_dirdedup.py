@@ -154,3 +154,33 @@ def test_delta_actually_deduplicates(spark, store):
         for f in fn
     )
     assert spans_on_disk < delta_bytes
+
+
+def test_roles_independent_of_mount_point(spark, corpus_dir, tmp_path):
+    """Ids hash the relative path, so the same tree compressed from two
+    roots of different depth picks the same keepers and delta bases:
+    identical ``(rel, role, ref rel)`` rows."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    moved = tmp_path / "deeper" / "mount" / "point"
+    shutil.copytree(corpus_dir, moved)
+
+    def linked(root: str, work: str):
+        DD.compress(spark, root, work)
+        names = spark.read.parquet(f"{work}/names.parquet")
+        refs = names.select(
+            F.col("doc_id").alias("ref_id"), F.col("rel").alias("ref_rel")
+        )
+        return sorted(
+            (r["rel"], r["role"], r["ref_rel"])
+            for r in names.join(refs, "ref_id", "left").collect()
+        )
+
+    a = linked(corpus_dir, str(tmp_path / "store_a"))
+    b = linked(str(moved), str(tmp_path / "store_b"))
+    assert a == b
+    assert {role for _rel, role, _ref in a} == {
+        DD.ROLE_STORED, DD.ROLE_EXACT, DD.ROLE_DELTA
+    }
