@@ -1,25 +1,29 @@
-"""Stage 1c — duplicate clusters via iterative min-label propagation.
+"""Stage 1c — duplicate clusters via large-star/small-star connected
+components.
 
 The reference chains target -> best-earlier-base greedily within a batch
-(``/root/reference/2df.c:459-498``), which implicitly builds base/target
-chains. We make the grouping explicit and order-free: connected components
-over the verified-pair graph, cluster id = min(id) of the component
+(``2df.c:459-498``), which implicitly builds base/target chains. We make
+the grouping explicit and order-free: connected components over the
+verified-pair graph, cluster id = min(id) of the component
 (deterministic representative, SURVEY.md §7 M4).
 
-Algorithm: min-label propagation — each node starts labeled with itself;
-every iteration each node takes the min of its own label and its neighbors'
-labels; converged when no label changes. Iterations are bounded by the
-component diameter; dedup components are variant fan-outs (tiny diameter),
-so a handful of iterations suffices. ``localCheckpoint`` every iteration
-cuts the lineage chain (otherwise plan depth grows linearly and the driver
-OOMs planning at scale).
+Algorithm: alternating large-star/small-star (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14) over the canonical edge set
+``(u, v)``, ``u > v``. Large-star hangs every neighbor larger than ``u``
+off ``min(N(u) + u)``, halving tree heights; small-star re-points every
+smaller neighbor at the local min. A round is a few edge-set-sized
+shuffles, and the rounds needed grow as O(log^2 n) in the component size
+whatever its shape, so a long chain of near-dup edits costs about as few
+rounds as a variant fan-out. The loop stops as soon as one aggregate job
+finds the edge set a star forest — every ``u`` has exactly one edge and
+no ``v`` is also a ``u`` — at which point each edge points a node at its
+component min and the labels are one left join. A graph still not a star
+forest after ``MAX_ROUNDS`` raises instead of returning split clusters.
 
-Scale notes (100 TB): each iteration is one shuffle (groupBy dst). The edge
-list is |verified pairs| * 2 — tiny relative to the corpus. For adversarial
-graph shapes (long chains) ``connected_components_star`` implements
-alternating large-star/small-star (O(log^2 n) rounds, any diameter) behind
-``clusters_from_pairs(..., algorithm="star")``; for web dedup the simple
-variant converges in < 5 iterations and stays the default.
+Scale notes (100 TB): every round works on the edge set only (|verified
+pairs|, tiny next to the corpus), which shrinks toward the star forest;
+each round's edges are ``localCheckpoint``-ed so plan depth stays flat.
+The corpus joins the result once, at the end.
 """
 
 from __future__ import annotations
@@ -27,237 +31,132 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: cap on large-star/small-star rounds; a 300-node chain needs <= 10
+MAX_ROUNDS = 50
+
+
+def _canonical(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """``(u, v)`` = (larger, smaller) end of each ``(a, b)`` edge,
+    self-loops and duplicates dropped."""
+    return (
+        edges.select(F.greatest(a, b).alias("u"), F.least(a, b).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large-star then one small-star step over canonical edges."""
+    # large-star: over the symmetric adjacency, attach every neighbor
+    # v > u to m = min(N(u) + u)
+    adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    mins = adj.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
+    e1 = _canonical(adj.join(mins, "u").where(F.col("v") > F.col("u")), "v", "m")
+    # small-star: neighbors of u are all < u here; re-point each at
+    # m = min(N(u)), and u itself at m
+    mins = e1.groupBy("u").agg(F.min("v").alias("m"))
+    return _canonical(
+        e1.join(mins, "u")
+        .select(F.col("v").alias("a"), "m")
+        .union(mins.select(F.col("u").alias("a"), "m")),
+        "a",
+        "m",
+    )
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """Every ``u`` has exactly one edge and no ``v`` is also a ``u``: one
+    groupBy over the edge ends and one ``limit(1).count()``."""
+    ends = e.select("u", F.lit(1).alias("n_out"), F.lit(0).alias("n_in")).union(
+        e.select(F.col("v").alias("u"), F.lit(0), F.lit(1))
+    )
+    bad = (
+        ends.groupBy("u")
+        .agg(F.sum("n_out").alias("n_out"), F.max("n_in").alias("n_in"))
+        .where((F.col("n_out") > 1) | ((F.col("n_out") > 0) & (F.col("n_in") > 0)))
+    )
+    return bad.limit(1).count() == 0
+
+
+def _star_forest(edges: DataFrame, stats: dict | None = None) -> DataFrame:
+    """Converged ``(u, v)`` edges of ``edges`` (``id_a``, ``id_b``; any
+    orientation): one row per node that is not its component's min, ``v``
+    = that min. ``stats``, if given, receives ``{"rounds": <int>}``."""
+    spark = edges.sparkSession
+    # The dup subgraph is tiny next to the corpus, but each round is a few
+    # shuffles + a checkpoint + the star-forest test; with the session's
+    # corpus-sized spark.sql.shuffle.partitions every tiny stage pays
+    # hundreds of empty tasks. Size the CC shuffles by the cluster, not the
+    # corpus, and restore the setting afterwards.
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    cc_parts = max(2 * spark.sparkContext.defaultParallelism, 8)
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(int(old_parts), cc_parts)))
+    try:
+        e = _canonical(edges, "id_a", "id_b").localCheckpoint(eager=True)
+        rounds = 0
+        while not _is_star_forest(e):
+            if rounds == MAX_ROUNDS:
+                # returning now would split clusters silently
+                raise RuntimeError(
+                    f"connected components did not reach a star forest in "
+                    f"{MAX_ROUNDS} large-star/small-star rounds"
+                )
+            e = _star_round(e).localCheckpoint(eager=True)
+            rounds += 1
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    if stats is not None:
+        stats["rounds"] = rounds
+    return e
+
+
+def _label(ids: DataFrame, forest: DataFrame, id_col: str) -> DataFrame:
+    """(id, cluster_id) per row of ``ids``: its star-forest root, or
+    itself when it has no edge."""
+    return ids.join(
+        forest.withColumnRenamed("u", id_col), id_col, "left"
+    ).select(F.col(id_col), F.coalesce("v", F.col(id_col)).alias("cluster_id"))
+
 
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str,
-    max_iter: int = 25,
-    checkpoint_every: int = 1,
+    stats: dict | None = None,
 ) -> DataFrame:
     """(id, cluster_id) for every node; singleton -> its own id.
 
     ``nodes``: one column ``id_col``; ``edges``: columns ``id_a``, ``id_b``
-    (undirected, any orientation).
+    (undirected, any orientation). ``stats``, if given, receives
+    ``{"rounds": <int>}``, the large-star/small-star rounds run.
     """
-    spark = nodes.sparkSession
-    # The dup subgraph is tiny next to the corpus (pairs only), but each
-    # iteration is 2 shuffles + a checkpoint + a convergence count; with
-    # the session's corpus-sized spark.sql.shuffle.partitions every tiny
-    # stage pays hundreds of empty tasks. Size the CC shuffles by the
-    # cluster, not the corpus, and restore the setting afterwards.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    cc_parts = max(2 * spark.sparkContext.defaultParallelism, 8)
-    spark.conf.set("spark.sql.shuffle.partitions", str(min(int(old_parts), cc_parts)))
-    try:
-        return _connected_components_inner(
-            nodes, edges, id_col, max_iter, checkpoint_every
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-
-def _connected_components_inner(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    max_iter: int,
-    checkpoint_every: int,
-) -> DataFrame:
-    spark = nodes.sparkSession
-    cc_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        # hash-partition the (static) edge list by join key ONCE; every
-        # iteration's join then only moves the (smaller) label side —
-        # EnsureRequirements recognizes the existing hashpartitioning
-        .repartition(cc_parts, "src")
-    )
-    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
-    labels = labels.localCheckpoint(eager=True)
-    sym = sym.localCheckpoint(eager=True)
-
-    for it in range(max_iter):
-        neigh = (
-            sym.join(labels, sym.src == labels.id, "inner")
-            .select(F.col("dst").alias("id"), F.col("label"))
-            .groupBy("id")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neigh, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias(
-                    "new_label"
-                ),
-                F.col("label").alias("old_label"),
-            )
-        )
-        if (it + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.where(F.col("new_label") != F.col("old_label")).limit(1).count()
-        labels = new_labels.select("id", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
-    else:
-        # the last allowed round still moved a label: the labels are not
-        # components yet, and returning them would split clusters silently
-        raise RuntimeError(
-            f"min-label connected components did not converge in {max_iter} "
-            "rounds (the pair graph has a longer path); rerun with "
-            'cc_algorithm="star" (O(log^2 n) rounds) or a larger max_iter'
-        )
-
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    max_iter: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (the
-    MapReduce CC algorithm of Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14) — converges in O(log^2 n) ROUNDS
-    regardless of component shape, where min-label propagation needs
-    O(diameter) iterations.
-
-    This is the adversarial-graph escape hatch named in the module
-    docstring, behind a flag rather than the default: web-dedup
-    components are shallow variant fan-outs where min-label converges in
-    < 5 rounds with fewer shuffles per round. Switch
-    (``clusters_from_pairs(..., algorithm="star")``) when the pair graph
-    contains long chains (e.g. chained near-dup edits A~B~C~...~Z where
-    consecutive docs pair but distant ones don't).
-
-    Per round: large-star hangs every neighbor larger than ``u`` off
-    ``min(N(u) + u)``, halving tree heights; small-star re-points every
-    smaller neighbor at the local min. Both are one groupBy + one join
-    over the CURRENT edge set (which only shrinks toward the star
-    forest), so each round costs a bounded number of dup-subgraph-sized
-    shuffles. Converged when the canonical edge set is stable; at that
-    point every node has a direct edge to its component min.
-
-    ``stats``, if given, receives {"rounds": <int>} — used by the
-    adversarial-chain test to prove bounded round counts.
-    """
-    spark = nodes.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    cc_parts = max(2 * spark.sparkContext.defaultParallelism, 8)
-    spark.conf.set("spark.sql.shuffle.partitions", str(min(int(old_parts), cc_parts)))
-    try:
-        return _connected_components_star_inner(nodes, edges, id_col, max_iter, stats)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-
-def _connected_components_star_inner(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    max_iter: int,
-    stats: dict | None,
-) -> DataFrame:
-    # canonical orientation (u > v), self-loops dropped
-    e = (
-        edges.select(
-            F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # --- large-star: over the symmetric adjacency, attach every
-        # neighbor v > u to m = min(N(u) + u) ---
-        adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = adj.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least("u", "mn").alias("m"))
-        e1 = (
-            adj.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(
-                F.greatest("v", "m").alias("u"), F.least("v", "m").alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # --- small-star: neighbors of u are all < u here; re-point each
-        # at m = min(N(u)), and u itself at m ---
-        mins2 = e1.groupBy("u").agg(F.min("v").alias("m"))
-        new_e = (
-            e1.join(mins2, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(mins2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-            .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        unchanged = (
-            new_e.exceptAll(e).limit(1).count() == 0
-            and e.exceptAll(new_e).limit(1).count() == 0
-        )
-        e = new_e
-        if unchanged:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    # converged star forest: every non-min node has a direct (u, min)
-    # edge; belt-and-braces, label = min over incident edges either way
-    adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    node_min = adj.groupBy("u").agg(F.min("v").alias("mn"))
-    return (
-        nodes.select(F.col(id_col))
-        .join(node_min.withColumnRenamed("u", id_col), id_col, "left")
-        .select(
-            F.col(id_col),
-            F.least(F.col(id_col), F.coalesce("mn", F.col(id_col))).alias("cluster_id"),
-        )
-    )
+    return _label(nodes.select(id_col), _star_forest(edges, stats), id_col)
 
 
 def clusters_from_pairs(
     valid_docs: DataFrame,
     verified_pairs: DataFrame,
     id_col: str,
-    max_iter: int = 25,
-    algorithm: str = "minlabel",
+    stats: dict | None = None,
 ) -> DataFrame:
-    """Cluster every valid document; docs in no pair become singletons.
+    """Cluster every valid document (and every endpoint of a pair of two
+    distinct ids); docs in no pair become singletons. ``stats`` as in
+    ``connected_components``.
 
-    Scale shape: the iterative part runs ONLY over pair members (a tiny
-    fraction of a web corpus); the singleton majority joins the result via
-    one left-anti pass at the end. At 10^12 docs this is the difference
-    between shuffling the corpus per CC iteration and shuffling just the
-    duplicate subgraph.
+    Scale shape: the iterative part runs ONLY over the pair edges (a tiny
+    fraction of a web corpus), read once; the singleton majority joins the
+    result via one left join at the end. At 10^12 docs this is the
+    difference between shuffling the corpus per CC round and shuffling
+    just the duplicate subgraph.
     """
-    # materialize the pair list once: it feeds three consumers (members,
-    # symmetric edges, singleton anti-join) and may be an expensive
-    # un-checkpointed plan when called outside the checkpointed pipeline
-    verified_pairs = verified_pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    members = (
-        verified_pairs.select(F.col("id_a").alias(id_col))
-        .union(verified_pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    cc = connected_components if algorithm == "minlabel" else connected_components_star
-    member_clusters = cc(members, verified_pairs, id_col, max_iter=max_iter)
-    singletons = (
+    forest = _star_forest(verified_pairs, stats)
+    ids = (
         valid_docs.select(id_col)
+        .union(forest.select(F.col("u").alias(id_col)))
+        .union(forest.select(F.col("v").alias(id_col)))
         .distinct()
-        .join(members, id_col, "left_anti")
-        .select(F.col(id_col), F.col(id_col).alias("cluster_id"))
     )
-    return member_clusters.unionByName(singletons)
+    return _label(ids, forest, id_col)
 
 
 def cluster_sizes(clusters: DataFrame) -> DataFrame:
@@ -333,8 +232,6 @@ def merge_remap(
     existing: DataFrame,
     new_pairs: DataFrame,
     id_col: str,
-    max_iter: int = 25,
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """(old_label, new_label) relabeling induced by merging ``new_pairs``
     into the ``existing`` (id, cluster_id) assignment — the core of
@@ -382,19 +279,12 @@ def merge_remap(
             lab.withColumnRenamed("id", "id_b").withColumnRenamed("qlabel", "lb"),
             "id_b",
         )
-        .where(F.col("la") != F.col("lb"))
         .select(F.col("la").alias("id_a"), F.col("lb").alias("id_b"))
-        .distinct()
     )
-    nodes_q = (
-        edges_q.select(F.col("id_a").alias("qnode"))
-        .union(edges_q.select(F.col("id_b").alias("qnode")))
-        .distinct()
-    )
-    cc = connected_components if algorithm == "minlabel" else connected_components_star
-    merged = cc(nodes_q, edges_q, "qnode", max_iter=max_iter)
-    return merged.where(F.col("qnode") != F.col("cluster_id")).select(
-        F.col("qnode").alias("old_label"), F.col("cluster_id").alias("new_label")
+    # the star forest has one edge per quotient node whose label changes,
+    # pointing at its component min: that edge set IS the remap
+    return _star_forest(edges_q).select(
+        F.col("u").alias("old_label"), F.col("v").alias("new_label")
     )
 
 
@@ -413,8 +303,6 @@ def update_clusters(
     new_docs: DataFrame,
     new_pairs: DataFrame,
     id_col: str,
-    max_iter: int = 25,
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Fold one epoch's arrivals into an existing cluster assignment
     WITHOUT recomputing connected components over the accumulated pair
@@ -444,7 +332,7 @@ def update_clusters(
     (streaming.update_cluster_store) avoids even the assignment rewrite
     by keeping the remap as data.
     """
-    remap = merge_remap(existing, new_pairs, id_col, max_iter, algorithm)
+    remap = merge_remap(existing, new_pairs, id_col)
     # the CC result behind remap is already localCheckpoint-ed, so this
     # count does not recompute the quotient CC
     if remap.count() <= BROADCAST_REMAP_MAX_ROWS:

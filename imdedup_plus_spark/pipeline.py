@@ -29,11 +29,11 @@ lineage + metrics and resume-from-checkpoint. Design:
   written *after* the Parquet commit, so a killed run can never leave a
   complete-looking stage behind (write-ahead ordering = idempotent resume);
 * the lineage record carries row count (observed during the write, no
-  extra scan), config echo, wall time and a ``key``: a hash of the config,
-  ``id_col``, ``cc_algorithm``, ``collapse_recrawls``, the stage layout
-  version and the input files with their sizes. A completed stage whose
-  key differs from the run's is refused (``StaleStageError``) instead of
-  silently reused;
+  extra scan), config echo, wall time (``clusters`` also its CC round
+  count, ``cc_rounds``) and a ``key``: a hash of the config, ``id_col``,
+  ``collapse_recrawls``, the stage layout version and the input files
+  with their sizes. A completed stage whose key differs from the run's is
+  refused (``StaleStageError``) instead of silently reused;
 * re-running a completed stage with the same key is a no-op read
   (tests/test_resume.py).
 
@@ -115,7 +115,6 @@ class CheckpointedPipeline:
         workdir: str,
         cfg: DedupConfig | None = None,
         id_col: str = "doc_id",
-        cc_algorithm: str = "minlabel",
         collapse_recrawls: bool = False,
     ) -> None:
         self.spark = spark
@@ -127,10 +126,6 @@ class CheckpointedPipeline:
         #: recrawl volume never reaches shingling. Requires url + warc_ts
         #: columns on the input (the input_hint shape).
         self.collapse_recrawls = collapse_recrawls
-        #: "minlabel" (default; O(diameter) rounds, fine for shallow web
-        #: fan-outs) or "star" (large-star/small-star, O(log^2 n) rounds
-        #: for adversarial long-chain pair graphs) — see clustering.py
-        self.cc_algorithm = cc_algorithm
         #: lineage key of the current run (set by ``run`` from its input)
         self.key: str | None = None
         os.makedirs(workdir, exist_ok=True)
@@ -150,7 +145,6 @@ class CheckpointedPipeline:
         return {
             "config": asdict(self.cfg),
             "id_col": self.id_col,
-            "cc_algorithm": self.cc_algorithm,
             "collapse_recrawls": self.collapse_recrawls,
             "layout": STAGE_LAYOUT_VERSION,
         }
@@ -171,7 +165,10 @@ class CheckpointedPipeline:
         blob = json.dumps(rec, sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()
 
-    def _commit(self, stage: str, df: DataFrame, started: float) -> DataFrame:
+    def _commit(
+        self, stage: str, df: DataFrame, started: float, extra: dict | None = None
+    ) -> DataFrame:
+        """Write ``df`` as ``stage``, then its lineage (plus ``extra``)."""
         path = self._stage_dir(stage)
         tmp = path + ".inprogress"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -189,6 +186,7 @@ class CheckpointedPipeline:
             "key": self.key,
             "wall_sec": round(time.time() - started, 3),
             "completed_at_epoch": int(time.time()),
+            **(extra or {}),
         }
         with open(self._lineage_path(stage), "w") as fh:
             json.dump(lineage, fh, indent=2)
@@ -197,7 +195,9 @@ class CheckpointedPipeline:
     def _load(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._stage_dir(stage))
 
-    def _stage(self, stage: str, build) -> DataFrame:
+    def _stage(self, stage: str, build, extra=None) -> DataFrame:
+        """Load ``stage`` if complete, else commit ``build()``; ``extra``,
+        if given, is called after the build for more lineage fields."""
         if self.is_complete(stage):
             with open(self._lineage_path(stage)) as fh:
                 found = json.load(fh).get("key")
@@ -209,7 +209,8 @@ class CheckpointedPipeline:
                 )
             return self._load(stage)
         t0 = time.time()
-        return self._commit(stage, build(), t0)
+        df = build()
+        return self._commit(stage, df, t0, extra() if extra else None)
 
     def lineage(self) -> list[dict]:
         out = []
@@ -285,10 +286,10 @@ class CheckpointedPipeline:
 
         verified = self._stage("verified_pairs", _build_verified)
 
+        cc_stats: dict = {}
+
         def _build_clusters() -> DataFrame:
-            rep_clusters = CL.clusters_from_pairs(
-                sig, verified, idc, algorithm=self.cc_algorithm
-            )
+            rep_clusters = CL.clusters_from_pairs(sig, verified, idc, stats=cc_stats)
             if exact_groups is None:
                 return rep_clusters
             # expand: every member inherits its representative's cluster id
@@ -299,7 +300,9 @@ class CheckpointedPipeline:
                 .select(idc, "cluster_id")
             )
 
-        clusters = self._stage("clusters", _build_clusters)
+        clusters = self._stage(
+            "clusters", _build_clusters, lambda: {"cc_rounds": cc_stats["rounds"]}
+        )
         spans = self._stage(
             "spans",
             lambda: SP.extract_spans(

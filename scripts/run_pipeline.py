@@ -43,8 +43,6 @@ def main() -> int:
                     help="0 = exact full-set Jaccard; k>0 = KMV bottom-k sketch verification (recall-equivalent at k>=96 on the planted corpus, ~|set|/k less verify shuffle)")
     ap.add_argument("--hot-window", type=int, default=0,
                     help="0 = drop buckets above --bucket-cap (reference parity); W>0 = sorted-neighborhood pairing inside hot buckets (SCALE_CONFIG uses 4 — the corpus-size-stable recall tier, see BENCH/BASELINE.md)")
-    ap.add_argument("--cc-algorithm", choices=("minlabel", "star"), default="minlabel",
-                    help="connected components: minlabel = O(diameter) rounds (default; web dup graphs are shallow); star = large-star/small-star, O(log^2 n) rounds for adversarial long-chain graphs")
     ap.add_argument("--collapse-recrawls", action="store_true",
                     help="canonicalize URLs and keep only the newest warc_ts revision per canonical URL before shingling (needs url+warc_ts columns; weburl.py)")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
@@ -73,7 +71,6 @@ def main() -> int:
     t0 = time.time()
     pipe = CheckpointedPipeline(
         spark, args.workdir, cfg, id_col=args.id_col,
-        cc_algorithm=args.cc_algorithm,
         collapse_recrawls=args.collapse_recrawls,
     )
     res = pipe.run(docs)

@@ -1,19 +1,38 @@
-"""Connected components on known graph shapes."""
+"""Connected components on known graph shapes, and against a pure-Python
+union-find on random graphs."""
 
 from __future__ import annotations
 
-from imdedup_plus_spark.clustering import connected_components
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from imdedup_plus_spark import clustering as CL
+from imdedup_plus_spark.clustering import clusters_from_pairs, connected_components
 
 
-def _run(spark, node_ids, edge_pairs):
+def _run(spark, node_ids, edge_pairs, stats=None):
     nodes = spark.createDataFrame([(n,) for n in node_ids], "id long")
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in edge_pairs] or [(None, None)], "id_a long, id_b long"
-    )
-    if not edge_pairs:
-        edges = edges.where("id_a IS NOT NULL")
-    out = connected_components(nodes, edges, "id")
+    edges = spark.createDataFrame(edge_pairs, "id_a long, id_b long")
+    out = connected_components(nodes, edges, "id", stats=stats)
     return {r.id: r.cluster_id for r in out.collect()}
+
+
+def _union_find(node_ids, edge_pairs):
+    """Reference: id -> min id of its component, singletons included."""
+    parent = {n: n for n in node_ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in node_ids}
 
 
 def test_triangle_plus_singleton(spark):
@@ -37,92 +56,77 @@ def test_no_edges_all_singletons(spark):
     assert got == {5: 5, 6: 6, 7: 7}
 
 
-# --- large-star/small-star (adversarial-graph escape hatch) ------------
-
-
-def _run_star(spark, node_ids, edge_pairs, max_iter=50, stats=None):
-    from imdedup_plus_spark.clustering import connected_components_star
-
-    nodes = spark.createDataFrame([(n,) for n in node_ids], "id long")
-    edges = spark.createDataFrame(edge_pairs, "id_a long, id_b long")
-    out = connected_components_star(nodes, edges, "id", max_iter=max_iter, stats=stats)
-    return {r.id: r.cluster_id for r in out.collect()}
-
-
-def test_star_matches_minlabel_on_mixed_graph(spark):
-    """Same components as min-label on a mix of shapes: triangle, chain,
-    star fan-out, isolated node."""
-    nodes = list(range(20))
-    edges = (
-        [(0, 1), (1, 2), (0, 2)]          # triangle
-        + [(3, 4), (4, 5), (5, 6)]        # chain
-        + [(10, k) for k in range(11, 16)]  # fan-out
-    )
-    assert _run_star(spark, nodes, edges) == _run(spark, nodes, edges)
-
-
-def test_star_bounded_rounds_on_long_chain(spark):
-    """The case min-label cannot handle: a path graph of n nodes needs
-    O(n) min-label iterations (labels move one hop per round) but
-    O(log^2 n) large-star/small-star rounds. n=300: min-label capped at
-    8 iterations cannot merge the chain and raises instead of returning
-    the split labels; star converges, correctly, in <= 10 rounds."""
-    import pytest
-
-    from imdedup_plus_spark.clustering import connected_components
-
+def test_star_bounded_rounds_on_long_chain(spark, monkeypatch):
+    """A path graph of n nodes needs O(log^2 n) large-star/small-star
+    rounds (label propagation would need O(n)): n=300 clusters to one id
+    in <= 10 rounds. Under a cap of 2 rounds the edge set is not a star
+    forest yet, so CC fails loudly instead of returning the split
+    labels."""
     n = 300
     nodes = list(range(n))
     chain = [(i, i + 1) for i in range(n - 1)]
 
-    # min-label, capped: has not converged, so it must fail loudly
-    ndf = spark.createDataFrame([(k,) for k in nodes], "id long")
-    edf = spark.createDataFrame(chain, "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="did not converge in 8 rounds"):
-        connected_components(ndf, edf, "id", max_iter=8)
-
     stats: dict = {}
-    got = _run_star(spark, nodes, chain, max_iter=50, stats=stats)
+    got = _run(spark, nodes, chain, stats=stats)
     assert set(got.values()) == {0}
-    assert stats["rounds"] <= 10, stats
+    assert 1 <= stats["rounds"] <= 10, stats
+
+    monkeypatch.setattr(CL, "MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="star forest in 2 "):
+        _run(spark, nodes, chain)
 
 
-def test_unconverged_minlabel_raises_and_star_clusters(spark):
-    """A 200-edge chain needs ~200 min-label rounds: under the default cap
-    (25) ``clusters_from_pairs`` raises and names the star algorithm,
-    which clusters the whole chain to one id."""
-    import pytest
-
-    from imdedup_plus_spark.clustering import clusters_from_pairs
-
+def test_long_chain_clusters_from_pairs_one_id(spark):
+    """A 200-edge chain: ``clusters_from_pairs`` puts every doc in the
+    cluster of its min id."""
     n = 201
     docs = spark.createDataFrame([(k,) for k in range(n)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match='cc_algorithm="star"'):
-        clusters_from_pairs(docs, pairs, "doc_id")
-    got = clusters_from_pairs(docs, pairs, "doc_id", algorithm="star").collect()
+    got = clusters_from_pairs(docs, pairs, "doc_id").collect()
     assert len(got) == n
     assert {r.cluster_id for r in got} == {0}
 
 
-def test_clusters_from_pairs_star_flag(spark):
-    """clusters_from_pairs(algorithm='star') produces the identical
-    (doc, cluster_id) assignment as the default path, singletons
-    included."""
-    from imdedup_plus_spark.clustering import clusters_from_pairs
-
-    docs = spark.createDataFrame([(k,) for k in range(12)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(1, 4), (4, 7), (2, 9)], "id_a long, id_b long"
+@st.composite
+def _graphs(draw):
+    """(n, edges over ids < n): chains, fan-outs, triangles, random pairs
+    and self-loops, some edges repeated as-is and reversed; ids in no
+    edge are isolated nodes."""
+    n = draw(st.integers(1, 40))
+    ids = st.integers(0, n - 1)
+    part = st.one_of(
+        st.lists(ids, min_size=2, max_size=8).map(lambda p: list(zip(p, p[1:]))),
+        st.tuples(ids, st.lists(ids, max_size=6)).map(
+            lambda t: [(t[0], k) for k in t[1]]
+        ),
+        st.tuples(ids, ids, ids).map(lambda t: [t[:2], t[1:], (t[2], t[0])]),
+        st.tuples(ids, ids).map(lambda t: [t]),
+        ids.map(lambda k: [(k, k)]),
     )
-    a = {r.doc_id: r.cluster_id
-         for r in clusters_from_pairs(docs, pairs, "doc_id").collect()}
-    b = {r.doc_id: r.cluster_id
-         for r in clusters_from_pairs(docs, pairs, "doc_id", algorithm="star").collect()}
-    assert a == b
-    assert a[7] == 1 and a[9] == 2 and a[0] == 0
+    edges = [e for p in draw(st.lists(part, max_size=6)) for e in p]
+    if edges:
+        again = draw(st.lists(st.sampled_from(edges), max_size=4))
+        edges += again + [(b, a) for a, b in again]
+    return n, draw(st.permutations(edges))
+
+
+@settings(max_examples=10, deadline=None)
+@given(graph=_graphs())
+def test_cc_matches_union_find_on_random_graphs(spark, graph):
+    """Both entry points give each node the min id of its component
+    (singletons label themselves), as a union-find computes it."""
+    n, edges = graph
+    nodes = list(range(n))
+    want = _union_find(nodes, edges)
+    assert _run(spark, nodes, edges) == want
+
+    docs = spark.createDataFrame([(k,) for k in nodes], "doc_id long")
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = clusters_from_pairs(docs, pairs, "doc_id").collect()
+    assert len(got) == n
+    assert {r.doc_id: r.cluster_id for r in got} == want
 
 
 def _keeper_rows(spark, rows, **kw):

@@ -5,8 +5,7 @@ existing assignment by running CC only over the quotient graph of touched
 cluster labels; these tests assert the result is bit-identical to
 ``clusters_from_pairs`` over the union of everything seen so far — on
 seeded random graphs with arbitrary epoch splits, on targeted merge
-shapes (bridges, late pairs, chain merges across epochs), and for both CC
-algorithms.
+shapes (bridges, late pairs, chain merges across epochs).
 """
 
 from __future__ import annotations
@@ -34,29 +33,26 @@ def _assign(df):
     return {r.doc_id: r.cluster_id for r in df.collect()}
 
 
-def _fold_epochs(spark, epochs, algorithm="minlabel"):
+def _fold_epochs(spark, epochs):
     """Apply epochs sequentially: full batch for epoch 0, update_clusters
     for the rest. Each epoch is (doc_ids, pairs)."""
     docs0, pairs0 = epochs[0]
     cur = clusters_from_pairs(
-        _docs_df(spark, docs0), _pairs_df(spark, pairs0), "doc_id",
-        algorithm=algorithm,
+        _docs_df(spark, docs0), _pairs_df(spark, pairs0), "doc_id"
     )
     for docs_k, pairs_k in epochs[1:]:
         cur = update_clusters(
-            cur, _docs_df(spark, docs_k), _pairs_df(spark, pairs_k), "doc_id",
-            algorithm=algorithm,
+            cur, _docs_df(spark, docs_k), _pairs_df(spark, pairs_k), "doc_id"
         )
     return _assign(cur)
 
 
-def _batch(spark, epochs, algorithm="minlabel"):
+def _batch(spark, epochs):
     all_docs = sorted(set().union(*(d for d, _ in epochs)))
     all_pairs = sorted(set().union(*(set(p) for _, p in epochs)))
     return _assign(
         clusters_from_pairs(
-            _docs_df(spark, all_docs), _pairs_df(spark, all_pairs), "doc_id",
-            algorithm=algorithm,
+            _docs_df(spark, all_docs), _pairs_df(spark, all_pairs), "doc_id"
         )
     )
 
@@ -121,10 +117,10 @@ def test_chain_built_one_edge_per_epoch(spark):
     assert got == _batch(spark, epochs)
 
 
-# one seed per algorithm: each fold chain is ~30 tiny Spark actions, so
-# wall time scales with the combo count, not the graph size
-@pytest.mark.parametrize("algorithm,seed", [("minlabel", 0), ("star", 1)])
-def test_random_graph_random_epoch_split(spark, algorithm, seed):
+# two seeds: each fold chain is ~30 tiny Spark actions, so wall time
+# scales with the seed count, not the graph size
+@pytest.mark.parametrize("seed", [0, 1])
+def test_random_graph_random_epoch_split(spark, seed):
     rng = random.Random(seed)
     n = 40
     ids = list(range(1, n + 1))
@@ -151,6 +147,4 @@ def test_random_graph_random_epoch_split(spark, algorithm, seed):
                     epoch_docs[k].add(e)
         seen |= epoch_docs[k]
     epochs = list(zip(epoch_docs, epoch_pairs))
-    assert _fold_epochs(spark, epochs, algorithm) == _batch(
-        spark, epochs, algorithm
-    )
+    assert _fold_epochs(spark, epochs) == _batch(spark, epochs)

@@ -11,6 +11,7 @@ from dataclasses import replace
 
 import pytest
 
+from imdedup_plus_spark import clustering as CL
 from imdedup_plus_spark.config import REFERENCE_CONFIG as CFG
 from imdedup_plus_spark.pipeline import CheckpointedPipeline, StaleStageError
 
@@ -51,8 +52,6 @@ def test_resume_is_noop_and_deterministic(spark, fixture_corpus, tmp_path):
     strict = replace(CFG, verify_jaccard_pct=95)
     with pytest.raises(StaleStageError, match="signatures"):
         CheckpointedPipeline(spark, wd, strict, id_col="url").run(docs)
-    with pytest.raises(StaleStageError):
-        CheckpointedPipeline(spark, wd, CFG, id_col="url", cc_algorithm="star").run(docs)
     # ... while the same workdir still resumes under its own config
     p4 = CheckpointedPipeline(spark, wd, CFG, id_col="url")
     p4.run(docs)
@@ -144,6 +143,13 @@ def test_lineage_written_after_data(spark, fixture_corpus, tmp_path):
         assert rec["rows"] > 0
         assert rec["rows"] == spark.read.parquet(d).count()
         assert not os.path.exists(d + ".inprogress")
+    # the clusters stage records its CC round count: the rounds a direct
+    # call over the stage's own verified pairs takes
+    with open(p._lineage_path("clusters")) as fh:
+        cc_rounds = json.load(fh)["cc_rounds"]
+    stats: dict = {}
+    CL.clusters_from_pairs(r["signatures"], r["verified_pairs"], "url", stats=stats)
+    assert cc_rounds == stats["rounds"] >= 1
 
 
 def test_dup_free_corpus_commits_empty_stages(spark, tmp_path):
