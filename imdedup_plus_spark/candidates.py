@@ -4,9 +4,9 @@ Recasts the reference's detection stage (``/root/reference/2df.c:428-549``):
 probing ``SF_NUM`` in-memory feature hash tables becomes a
 ``groupBy(band_id, band_hash)`` self-join — the shuffle *is* the hash table;
 the per-candidate matching-SF count and arg-max vote (``2df.c:459-499``)
-become an aggregate + window; the optional DC-coefficient check
-(FEATURE_CHECK, ``2df.c:471-475``) becomes signature-level verification
-(count of equal MinHash positions -> estimated Jaccard).
+become an aggregate + window; the DC-coefficient content check
+(FEATURE_CHECK, ``2df.c:471-475``) becomes exact shingle-set Jaccard
+verification (``verify_pairs``).
 
 Scale notes (100 TB):
 
@@ -26,6 +26,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
+
+#: buckets above this many members are salted into ceil(size/threshold)^2
+#: join tasks (exact grid blocking, ``candidate_pairs_salted``) so one hot
+#: bucket cannot become the stage straggler
+PAIR_SPLIT_THRESHOLD = 64
 
 
 def band_buckets(bands: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
@@ -52,18 +57,8 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig, id_col: str) -> DataFram
     recall path).
     """
     if cfg.hot_window > 0:
-        if "n_set" not in bands.columns:
-            # a silent fall-through to drop-only capping would quietly lose
-            # SCALE_CONFIG's size-stable-recall guarantee — fail loudly
-            raise ValueError(
-                "cfg.hot_window > 0 requires bands with an n_set column "
-                "(use the kernel signature path / explode_bands); refusing "
-                "to silently fall back to drop-only capping"
-            )
         return candidate_pairs_hotwindow(bands, cfg, id_col)
-    return candidate_pairs_salted(
-        bands, cfg, id_col, split_threshold=cfg.pair_split_threshold
-    )
+    return candidate_pairs_salted(bands, cfg, id_col)
 
 
 def candidate_pairs_direct(bands: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
@@ -74,14 +69,13 @@ def candidate_pairs_direct(bands: DataFrame, cfg: DedupConfig, id_col: str) -> D
     order-free). Buckets of size 1 or larger than the cap are pruned before
     the join, so the quadratic step only ever sees bounded buckets.
 
-    When the bands carry ``n_set`` (shingle-set sizes) and the config is in
-    jaccard-verify mode, pairs whose size ratio already bounds the Jaccard
-    below the verify threshold are pruned AT EMISSION — before the
-    per-pair aggregation shuffle. This is the same provable bound
+    When the bands carry ``n_set`` (shingle-set sizes), pairs whose size
+    ratio already bounds the Jaccard below the verify threshold are pruned
+    AT EMISSION — before the per-pair aggregation shuffle. This is the same provable bound
     ``J <= min(|A|,|B|)/max(|A|,|B|)`` applied as early as possible; the
     verified output is unchanged, only the candidate volume shrinks.
     """
-    has_set = "n_set" in bands.columns and cfg.verify_mode == "jaccard"
+    has_set = "n_set" in bands.columns
     w = Window.partitionBy("band_id", "band_hash")
     sized = bands.withColumn("bucket_size", F.count(F.col(id_col)).over(w))
     keep_cols = [id_col, "band_id", "band_hash"] + (["n_set"] if has_set else [])
@@ -107,12 +101,12 @@ def candidate_pairs_direct(bands: DataFrame, cfg: DedupConfig, id_col: str) -> D
         )
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_matching_bands"))
-        .where(F.col("n_matching_bands") >= cfg.band_match_threshold)
     )
 
 
 def candidate_pairs_salted(
-    bands: DataFrame, cfg: DedupConfig, id_col: str, split_threshold: int = 64
+    bands: DataFrame, cfg: DedupConfig, id_col: str,
+    split_threshold: int = PAIR_SPLIT_THRESHOLD,
 ) -> DataFrame:
     """Skew-defused pair generation — identical output to
     ``candidate_pairs`` (tested), different physical shape.
@@ -132,7 +126,7 @@ def candidate_pairs_salted(
     Buckets above ``cfg.bucket_cap`` are still dropped (boilerplate bands —
     the quadratic pair *count* is inherent, no salt fixes that).
     """
-    has_set = "n_set" in bands.columns and cfg.verify_mode == "jaccard"
+    has_set = "n_set" in bands.columns
     w = Window.partitionBy("band_id", "band_hash")
     sized = bands.withColumn("bucket_size", F.count(F.col(id_col)).over(w))
     kept = sized.where(
@@ -170,12 +164,11 @@ def candidate_pairs_salted(
         pairs0.select("id_a", "id_b")
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_matching_bands"))
-        .where(F.col("n_matching_bands") >= cfg.band_match_threshold)
     )
 
 
 def candidate_pairs_hotwindow(
-    bands: DataFrame, cfg: DedupConfig, id_col: str, window: int | None = None
+    bands: DataFrame, cfg: DedupConfig, id_col: str
 ) -> DataFrame:
     """Salted full pairing for buckets <= ``bucket_cap`` PLUS
     sorted-neighborhood pairing *inside* hot buckets, instead of dropping
@@ -190,8 +183,8 @@ def candidate_pairs_hotwindow(
 
     Fix (classic sorted-neighborhood blocking): members of a hot bucket
     are sorted by ``(n_set, id)`` and each member pairs with its
-    ``window`` successors — O(s*window) pairs per bucket instead of s^2
-    (linear in bucket size, so hot buckets are affordable at any N).
+    ``cfg.hot_window`` successors — O(s*window) pairs per bucket instead
+    of s^2 (linear in bucket size, so hot buckets are affordable at any N).
     True near-dups have near-equal shingle-set sizes, so group members
     sort adjacently and keep enough intra-pairs for connected components
     to merge the group; boilerplate interlopers of different lengths sort
@@ -205,20 +198,15 @@ def candidate_pairs_hotwindow(
     stop-shingle whose match carries no pair signal, and window-pairing
     it would add W*mass useless candidates to the verify shuffle.
     """
-    import dataclasses
-
-    if window is None:
-        window = cfg.hot_window
     if "n_set" not in bands.columns:
-        raise ValueError("hot-window pairing needs n_set on the bands")
-    # the band-match threshold must apply to the COMBINED quiet+hot count,
-    # so the quiet side is built threshold-free and filtered at the end
-    quiet = candidate_pairs_salted(
-        bands,
-        dataclasses.replace(cfg, band_match_threshold=1),
-        id_col,
-        split_threshold=cfg.pair_split_threshold,
-    )
+        # a silent fall-through to drop-only capping would quietly lose
+        # SCALE_CONFIG's size-stable-recall guarantee — fail loudly
+        raise ValueError(
+            "cfg.hot_window > 0 requires bands with an n_set column "
+            "(use the kernel signature path / explode_bands); refusing "
+            "to silently fall back to drop-only capping"
+        )
+    quiet = candidate_pairs_salted(bands, cfg, id_col)
 
     w = Window.partitionBy("band_id", "band_hash")
     sized = bands.withColumn("bucket_size", F.count(F.col(id_col)).over(w))
@@ -240,7 +228,8 @@ def candidate_pairs_hotwindow(
         F.col("n_set").alias("n_set_a"),
         F.explode(
             F.sequence(
-                F.col("r") + 1, F.least(F.col("r") + window, F.col("bucket_size"))
+                F.col("r") + 1,
+                F.least(F.col("r") + cfg.hot_window, F.col("bucket_size")),
             )
         ).alias("rp"),
     )
@@ -258,8 +247,6 @@ def candidate_pairs_hotwindow(
                 "least(n_set_a, n_set_b) * 100 >= "
                 f"greatest(n_set_a, n_set_b) * {cfg.verify_jaccard_pct}"
             )
-            if cfg.verify_mode == "jaccard"
-            else F.lit(True)
         )
         .select(
             F.least(F.col("ida"), F.col("idb")).alias("id_a"),
@@ -292,7 +279,6 @@ def candidate_pairs_hotwindow(
                 "n_matching_bands"
             ),
         )
-        .where(F.col("n_matching_bands") >= cfg.band_match_threshold)
     )
 
 
@@ -339,27 +325,21 @@ def verify_pairs(
     out = pairs.join(sa.hint("shuffle_hash"), "id_a").join(
         sb.hint("shuffle_hash"), "id_b"
     )
-    if cfg.verify_mode == "jaccard":
-        # provable upper bound J <= min(|A|,|B|)/max(|A|,|B|): prune pairs
-        # that cannot pass BEFORE the per-pair intersection (integer math,
-        # implied by the final filter -> output is unchanged)
-        out = out.where(
+    # provable upper bound J <= min(|A|,|B|)/max(|A|,|B|): prune pairs
+    # that cannot pass BEFORE the per-pair intersection (integer math,
+    # implied by the final filter -> output is unchanged)
+    out = (
+        out.where(
             F.expr(
                 "least(size(set_a), size(set_b)) * 100 >= "
                 f"greatest(size(set_a), size(set_b)) * {cfg.verify_jaccard_pct}"
             )
         )
-    out = (
-        out.withColumn("n_eq", F.expr(n_eq))
+        .withColumn("n_eq", F.expr(n_eq))
         .withColumn("inter", F.expr(inter))
         .withColumn("un", F.expr(un))
+        .where(F.col("inter") * 100 >= F.col("un") * cfg.verify_jaccard_pct)
     )
-    if cfg.verify_mode == "jaccard":
-        out = out.where(
-            F.col("inter") * 100 >= F.col("un") * cfg.verify_jaccard_pct
-        )
-    else:
-        out = out.where(F.col("n_eq") >= cfg.verify_threshold_num)
     return out.select("id_a", "id_b", "n_matching_bands", "n_eq", "inter", "un")
 
 
@@ -421,8 +401,7 @@ def verify_pairs_kernel(
         sb.hint("shuffle_hash"), "id_b"
     )
 
-    jac = cfg.verify_mode == "jaccard"
-    pct, thr = cfg.verify_jaccard_pct, cfg.verify_threshold_num
+    pct = cfg.verify_jaccard_pct
     sketch_k = cfg.verify_sketch_k
     id_type = pairs.schema["id_a"].dataType.simpleString()
     packed = dict(sig_df.dtypes).get("shingle_set") == "binary"
@@ -476,7 +455,7 @@ def verify_pairs_kernel(
                 # verification has a non-empty shingle set. The SQL twin
                 # (verify_pairs) and the chunked form below share the
                 # exact predicate, so all three agree if that ever changes.
-                keep = inter * 100 >= un * pct if jac else n_eq >= thr
+                keep = inter * 100 >= un * pct
                 yield pd.DataFrame(
                     {
                         "id_a": pdf["id_a"].values[keep],
@@ -554,9 +533,7 @@ def verify_pairs_kernel(
                 un[lo:hi_] = un_c
             # empty==empty auto-pass: deliberate, unreachable — see the
             # per-pair form above (min_tokens/shingle_window upstream)
-            keep = (
-                inter * 100 >= un * pct if jac else n_eq >= thr
-            )
+            keep = inter * 100 >= un * pct
             out = pd.DataFrame(
                 {
                     "id_a": pdf["id_a"].values[keep],
@@ -632,36 +609,21 @@ def short_doc_pairs(
     short = valid_docs.where(F.size("tokens") < cfg.short_doc_tokens)
     sh = simhash(short, id_col, text_col).select(F.col(id_col), F.col("simhash"))
 
-    w = Window.partitionBy("simhash")
-    sized = sh.withColumn("bucket_size", F.count(F.col(id_col)).over(w))
-
-    # quiet tier: full pairing via the salted grid (identical pair set to a
-    # plain self-join; bounded task size — see candidate_pairs_salted)
-    quiet = sized.where(
-        (F.col("bucket_size") >= 2) & (F.col("bucket_size") <= cfg.bucket_cap)
-    )
-    g = F.greatest(
-        F.lit(1), F.ceil(F.col("bucket_size") / cfg.pair_split_threshold)
-    ).cast("int")
-    salted = quiet.withColumn("g", g).withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(id_col)), F.col("g")).cast("int")
-    )
-    a = salted.select(
-        F.col(id_col).alias("id_a"), "simhash", F.col("salt").alias("ta"),
-        F.explode(F.sequence(F.lit(0), F.col("g") - 1)).alias("tb"),
-    )
-    b = salted.select(
-        F.col(id_col).alias("id_b"), "simhash", F.col("salt").alias("tb"),
-        F.explode(F.sequence(F.lit(0), F.col("g") - 1)).alias("ta"),
-    )
-    quiet_pairs = (
-        a.join(b, ["simhash", "ta", "tb"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
+    # quiet tier: full pairing via the band path's salted grid, with the
+    # SimHash as the one band (no n_set, so no size-ratio prune)
+    quiet_pairs = candidate_pairs_salted(
+        sh.select(
+            F.col(id_col), F.lit(0).alias("band_id"),
+            F.col("simhash").alias("band_hash"),
+        ),
+        cfg,
+        id_col,
+    ).select("id_a", "id_b")
 
     # hot tier: id-sorted neighborhood chain (window pairing)
     win = max(1, cfg.hot_window)
+    w = Window.partitionBy("simhash")
+    sized = sh.withColumn("bucket_size", F.count(F.col(id_col)).over(w))
     hot = sized.where(F.col("bucket_size") > cfg.bucket_cap)
     rw = Window.partitionBy("simhash").orderBy(F.col(id_col).asc())
     ranked = hot.withColumn("r", F.row_number().over(rw))
@@ -730,10 +692,7 @@ def containment_pairs(
     probed against a global shingle index — the CDC shared-chunk lane
     covers the exact-substring slice of that today).
     """
-    cand = candidate_pairs_salted(
-        bands.drop("n_set"), cfg, id_col,
-        split_threshold=cfg.pair_split_threshold,
-    )
+    cand = candidate_pairs_salted(bands.drop("n_set"), cfg, id_col)
     sigs = sig_df.select(F.col(id_col), F.col("shingle_set"))
     sa = (
         sigs.withColumnRenamed(id_col, "id_a")
@@ -785,10 +744,7 @@ def containment_pairs_kernel(
     import pandas as pd
     from collections.abc import Iterator
 
-    cand = candidate_pairs_salted(
-        bands.drop("n_set"), cfg, id_col,
-        split_threshold=cfg.pair_split_threshold,
-    )
+    cand = candidate_pairs_salted(bands.drop("n_set"), cfg, id_col)
     sigs = sig_df.select(F.col(id_col), F.col("shingle_set"))
     sa = (
         sigs.withColumnRenamed(id_col, "id_a")
@@ -861,7 +817,7 @@ def containment_pairs_sql(
   SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS BIGINT) AS n_matching_bands
   FROM kept_bands a JOIN kept_bands b
     ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.id < b.id
-  GROUP BY 1, 2 HAVING count(*) >= {cfg.band_match_threshold}
+  GROUP BY 1, 2
 ),
 cont AS (
   SELECT p.id_a, p.id_b, p.n_matching_bands,

@@ -109,16 +109,12 @@ class DedupConfig:
     ``shingle_window``== ``block_size``        (run.sh: 2)
     ``min_tokens``    : validity filter, analog of the decode filter that
                         rejects images < 64x64 (``/root/reference/jpeg.c:27-32``)
-    ``band_match_threshold`` : minimum matching bands to consider a pair
-    ``verify_mode``   : 'jaccard' (default) verifies candidates by exact
-                        shingle-set Jaccard — the FEATURE_CHECK analog
+    ``verify_jaccard_pct`` : integer percent; the FEATURE_CHECK analog
                         (``/root/reference/2df.c:471-475``): check real
-                        content, not just the sketch. 'sketch' uses equal
-                        signature positions instead (cheaper, noisier).
-    ``verify_jaccard_pct`` : integer percent; pair verified iff
-                        ``100 * |inter| >= pct * |union|`` (pure integer
-                        math so the DuckDB oracle is bit-exact)
-    ``verify_threshold_num`` : 'sketch' mode: min equal positions of n_perm
+                        content, not just the sketch. A candidate pair is
+                        verified iff ``100 * |inter| >= pct * |union|`` over
+                        the shingle sets (pure integer math so the DuckDB
+                        oracle is bit-exact)
     ``bucket_cap``    : LSH buckets larger than this are dropped (hot-band
                         boilerplate defense; the web-scale skew path). A
                         true near-dup group of size m populates ~m-sized
@@ -130,10 +126,6 @@ class DedupConfig:
                         volume drops 15.2M -> 5.6M (2.7x); true variant
                         groups are <= ~6 docs, so any cap far above that
                         only admits boilerplate bands.
-    ``pair_split_threshold`` : buckets above this are salted into
-                        ceil(size/threshold)^2 join tasks (exact grid
-                        blocking) so one hot bucket cannot become the
-                        stage straggler
     ``omit_low_delta``: minimum matched fraction before span extraction,
                         analog of OMIT_LOW_DELTA (``/root/reference/idelta.c:403-419``)
     """
@@ -142,12 +134,8 @@ class DedupConfig:
     rows_per_band: int = 1
     shingle_window: int = 2
     min_tokens: int = 2
-    band_match_threshold: int = 1
-    verify_mode: str = "jaccard"
     verify_jaccard_pct: int = 30
-    verify_threshold_num: int = 4    # of n_perm equal positions (>= 50% est. Jaccard)
     bucket_cap: int = 32
-    pair_split_threshold: int = 64
     #: bottom-k (KMV) sketch width for Jaccard verification. 0 = exact
     #: full-set Jaccard (the oracle-checked default). k>0 stores only the k
     #: smallest shingle hashes per doc and verifies with the standard KMV
@@ -159,8 +147,6 @@ class DedupConfig:
     #: separate int), so its bound remains provable.
     verify_sketch_k: int = 0
     omit_low_delta: float = 0.001
-    langs: tuple[str, ...] | None = None   # None = keep all languages
-    shuffle_partitions: int = 32
     #: FIX_OPTI analog (2df.c:477-494): collapse exact-duplicate texts to one
     #: representative BEFORE the LSH stages, then expand cluster ids back.
     #: Web corpora are 30-50% exact dups, so this removes a third of the

@@ -70,37 +70,28 @@ def pipeline_ctes(cfg: DedupConfig, id_col: str = "doc_id", table: str = "docume
     verified -> clusters.  Prepend ``WITH RECURSIVE`` and select from any
     stage. Mirrors, stage for stage, the Spark pipeline."""
     min_toks = max(cfg.min_tokens, cfg.shingle_window)
-    lang_filter = (
-        "" if cfg.langs is None else
-        " AND lang IN (" + ", ".join(f"'{l}'" for l in cfg.langs) + ")"
-    )
     n_eq = (
         f"CAST(len(list_filter(generate_series(1, {cfg.n_perm}), "
         f"i -> sa.sig[i] = sb.sig[i])) AS BIGINT)"
     )
-    early_ratio = (
-        f"WHERE least(a.n_set, b.n_set) * 100 >= "
+    ratio = (
+        f"least(a.n_set, b.n_set) * 100 >= "
         f"greatest(a.n_set, b.n_set) * {cfg.verify_jaccard_pct}"
-        if cfg.verify_mode == "jaccard"
-        else ""
     )
     inter = "CAST(len(list_intersect(sa.shingle_set, sb.shingle_set)) AS BIGINT)"
     un = f"CAST(len(sa.shingle_set) + len(sb.shingle_set) AS BIGINT) - ({inter})"
-    if cfg.verify_mode == "jaccard":
-        # same provable size-ratio prune as the Spark side (no semantic change)
-        verify_filter = (
-            f"least(len(sa.shingle_set), len(sb.shingle_set)) * 100 >= "
-            f"greatest(len(sa.shingle_set), len(sb.shingle_set)) * {cfg.verify_jaccard_pct} "
-            f"AND ({inter}) * 100 >= ({un}) * {cfg.verify_jaccard_pct}"
-        )
-    else:
-        verify_filter = f"({n_eq}) >= {cfg.verify_threshold_num}"
+    # same provable size-ratio prune as the Spark side (no semantic change)
+    verify_filter = (
+        f"least(len(sa.shingle_set), len(sb.shingle_set)) * 100 >= "
+        f"greatest(len(sa.shingle_set), len(sb.shingle_set)) * {cfg.verify_jaccard_pct} "
+        f"AND ({inter}) * 100 >= ({un}) * {cfg.verify_jaccard_pct}"
+    )
     return f"""
 docs AS (
   SELECT {id_col} AS id, text, {tokens_sql('text')} AS tokens FROM {table}
 ),
 valid AS (
-  SELECT * FROM docs WHERE len(tokens) >= {min_toks}{lang_filter}
+  SELECT * FROM docs WHERE len(tokens) >= {min_toks}
 ),
 wh AS (
   SELECT id, {word_hashes_sql('tokens')} AS whs FROM valid
@@ -130,7 +121,7 @@ kept_bands AS (
     ON s.band_id = b.band_id AND s.band_hash = b.band_hash
   WHERE s.bucket_size >= 2 AND s.bucket_size <= {cfg.bucket_cap}
 ),
-{_cand_pairs_ctes(cfg, early_ratio)}
+{_cand_pairs_ctes(cfg, ratio)}
 verified AS (
   SELECT p.id_a, p.id_b, p.n_matching_bands, {n_eq} AS n_eq,
          {inter} AS inter, {un} AS un
@@ -154,7 +145,7 @@ clusters AS (
 )"""
 
 
-def _cand_pairs_ctes(cfg: DedupConfig, early_ratio: str) -> str:
+def _cand_pairs_ctes(cfg: DedupConfig, ratio: str) -> str:
     """``cand_pairs`` CTE(s). With ``hot_window > 0``, hot buckets
     contribute sorted-neighborhood pairs instead of being dropped
     (mirrors ``candidates.candidate_pairs_hotwindow``): a band bucket is
@@ -166,20 +157,13 @@ def _cand_pairs_ctes(cfg: DedupConfig, early_ratio: str) -> str:
   FROM kept_bands a
   JOIN kept_bands b
     ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.id < b.id
-  {early_ratio}"""
+  WHERE {ratio}"""
     if cfg.hot_window <= 0:
         return f"""cand_pairs AS (
   SELECT id_a, id_b, CAST(count(*) AS BIGINT) AS n_matching_bands
   FROM ({quiet_emit})
   GROUP BY 1, 2
-  HAVING count(*) >= {cfg.band_match_threshold}
 ),"""
-    hot_ratio = (
-        f"AND least(a.n_set, b.n_set) * 100 >= "
-        f"greatest(a.n_set, b.n_set) * {cfg.verify_jaccard_pct}"
-        if cfg.verify_mode == "jaccard"
-        else ""
-    )
     return f"""hot_ranked AS (
   SELECT b.id, b.band_id, b.band_hash, b.n_set,
          CAST(row_number() OVER (PARTITION BY b.band_id, b.band_hash
@@ -195,13 +179,12 @@ cand_emissions AS (
   FROM hot_ranked a JOIN hot_ranked b
     ON a.band_id = b.band_id AND a.band_hash = b.band_hash
    AND b.r > a.r AND b.r <= a.r + {cfg.hot_window}
-  {hot_ratio}
+  AND {ratio}
 ),
 cand_pairs AS (
   SELECT id_a, id_b, CAST(count(DISTINCT band_id) AS BIGINT) AS n_matching_bands
   FROM cand_emissions
   GROUP BY 1, 2
-  HAVING count(DISTINCT band_id) >= {cfg.band_match_threshold}
 ),"""
 
 

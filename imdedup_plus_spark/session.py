@@ -7,6 +7,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_master() -> str:
+    """``$SPARK_GRAFT_MASTER``, else ``local[$SPARK_GRAFT_CPUS]``, else one
+    task thread per CPU this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "imdedup_plus_spark",
     master: str | None = None,
@@ -22,7 +29,7 @@ def get_spark(
     * shuffle partitions sized by env/CLI, not hard-coded (at 100 TB this is
       set to ~2-3x total cores by the submitter).
     """
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or default_master()
     # glibc malloc: keep large numpy buffers on the reusable heap instead of
     # mmap/munmap-ing them per Arrow batch. On fault-expensive hosts (this
     # VM: ~70us/page first touch, measured) the default re-faults every

@@ -140,10 +140,7 @@ def valid_documents(df: DataFrame, cfg: DedupConfig, text_col: str = "text") -> 
     pass-through output, mirroring the reference's verbatim write of
     undecodable files (``/root/reference/2df.c:545-548``).
     """
-    out = with_tokens(df, text_col).where(F.size("tokens") >= cfg.min_tokens)
-    if cfg.langs is not None:
-        out = out.where(F.col("lang").isin(list(cfg.langs)))
-    return out
+    return with_tokens(df, text_col).where(F.size("tokens") >= cfg.min_tokens)
 
 
 def with_signature(
@@ -460,7 +457,6 @@ def signature_kernel_arrow(
     min_toks = max(cfg.min_tokens, cfg.shingle_window)
     P = np.uint64(PERM_P)
     MASK31 = np.uint64(HASH_MOD - 1)
-    langs = None if cfg.langs is None else sorted(set(cfg.langs))
     sketch_k = cfg.verify_sketch_k
     CHUNK_DOCS = 64          # L2-residency (see docstring measurements)
     CHUNK_CHARS = 1 << 18    # mega-doc guard: bounds flat temporaries
@@ -519,8 +515,6 @@ def signature_kernel_arrow(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             mask = pdf[text_col].notna().values
-            if langs is not None:
-                mask &= np.isin(pdf["lang"].values, langs)
             id_vals = pdf[id_col].values[mask]
             text_vals = pdf[text_col].values[mask]
             ids, sigs, sets, nsets, fps = [], [], [], [], []
@@ -539,12 +533,11 @@ def signature_kernel_arrow(
             yield pd.DataFrame(out)
 
     id_field = df.schema[id_col]
-    cols = [id_col, text_col] + (["lang"] if langs is not None else [])
     schema = (
         f"{id_col} {id_field.dataType.simpleString()}, "
         "sig array<bigint>, shingle_set binary, n_set_true int"
         + (", fingerprint bigint" if fingerprint else "")
     )
-    return df.select(*cols).mapInPandas(fn, schema=schema)
+    return df.select(id_col, text_col).mapInPandas(fn, schema=schema)
 
 

@@ -91,7 +91,7 @@ def candidate_pairs_probe(
     to one store partition, so the pruned delta slice is complete for
     them); ``bands_all`` likewise only needs those buckets' members.
     """
-    has_set = "n_set" in bands_all.columns and cfg.verify_mode == "jaccard"
+    has_set = "n_set" in bands_all.columns
     if sizes is None:
         sizes = bands_all.groupBy("band_id", "band_hash").agg(
             F.count(F.lit(1)).alias("bucket_size")
@@ -155,15 +155,12 @@ def candidate_pairs_probe(
             F.col("r").alias("rp"),
         )
         warm_pairs = wa.join(wb, ["band_id", "band_hash", "rp"]).where(
-            F.col("new_a") | F.col("new_b")
-        )
-        if cfg.verify_mode == "jaccard":
-            warm_pairs = warm_pairs.where(
-                F.expr(
-                    "least(n_set_a, n_set_b) * 100 >= "
-                    f"greatest(n_set_a, n_set_b) * {cfg.verify_jaccard_pct}"
-                )
+            (F.col("new_a") | F.col("new_b"))
+            & F.expr(
+                "least(n_set_a, n_set_b) * 100 >= "
+                f"greatest(n_set_a, n_set_b) * {cfg.verify_jaccard_pct}"
             )
+        )
         emissions = emissions.unionByName(
             warm_pairs.select(
                 F.least(F.col("ida"), F.col("idb")).alias("id_a"),
@@ -172,10 +169,8 @@ def candidate_pairs_probe(
             )
         )
 
-    return (
-        emissions.groupBy("id_a", "id_b")
-        .agg(F.countDistinct("band_id").cast("long").alias("n_matching_bands"))
-        .where(F.col("n_matching_bands") >= cfg.band_match_threshold)
+    return emissions.groupBy("id_a", "id_b").agg(
+        F.countDistinct("band_id").cast("long").alias("n_matching_bands")
     )
 
 

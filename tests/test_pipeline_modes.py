@@ -90,6 +90,22 @@ def test_short_doc_pairs_hot_bucket_bounded_and_connected(spark):
     assert (100, 101) in got
 
 
+def test_short_doc_pairs_quiet_bucket_above_split_threshold(spark):
+    """A quiet SimHash bucket larger than the salting threshold (so g=2)
+    still pairs fully: 70 identical short docs -> all 70*69/2 pairs."""
+    from dataclasses import replace as rep
+
+    cfg = rep(CFG, short_doc_tokens=6, bucket_cap=100)
+    s = 70
+    assert s > C.PAIR_SPLIT_THRESHOLD
+    rows = [(i, "tiny dup text here") for i in range(s)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = C.short_doc_pairs(S.valid_documents(docs, cfg), cfg, "doc_id")
+    got = sorted((r.id_a, r.id_b, r.n_matching_bands) for r in pairs.collect())
+    assert got == [(a, b, 0) for a in range(s) for b in range(a + 1, s)]
+    assert len(got) == 2415
+
+
 def test_candidate_pairs_hot_window_without_n_set_raises(spark):
     import pytest
     from dataclasses import replace as rep
