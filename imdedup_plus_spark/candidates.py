@@ -372,7 +372,8 @@ def verify_pairs_kernel(
       flat streams ~40 MB of temporaries per batch and anti-scales on
       DRAM bandwidth (6.2 -> 11.2 us/pair from 1 -> 16 pinned procs);
       1024-pair chunks stay L2-resident at 4.7/6.9 us/pair, vs the
-      per-pair loop's 17.4/19.8 (scripts/bench_verify_forms.py).
+      per-pair loop's 17.4/19.8 (BENCH/BASELINE.md, "Data-size
+      re-measurement with this round's kernels").
       Requires the malloc env set by ``session.get_spark`` — without
       heap reuse each batch re-faults its working set at ~70us/page.
     * **exact mode (``verify_sketch_k == 0``, the oracle/reference
@@ -476,7 +477,8 @@ def verify_pairs_kernel(
             #     DRAM bandwidth (measured 6.2 -> 11.2 us/pair going
             #     1 -> 16 pinned procs). 1024-pair chunks keep the working
             #     set ~4 MB (L2-resident): 4.7 us/pair at 1 proc and 6.9
-            #     at 16 (scripts/bench_verify_forms.py). Chunking is
+            #     at 16 (BENCH/BASELINE.md, "Data-size re-measurement
+            #     with this round's kernels"). Chunking is
             #     output-invariant: every quantity is per-pair.
             set_a_vals = pdf["set_a"].values
             set_b_vals = pdf["set_b"].values

@@ -234,9 +234,10 @@ def distinct_shingle_estimate_kernel(sig_df: DataFrame, k: int | None = None) ->
     """SCALE form: per-chunk numpy bottom-k partials, then an exact merge.
 
     ``mapInPandas`` emits at most k candidate hashes per 1024-row chunk
-    (cache-resident, per the measured chunking rule in
-    scripts/bench_verify_forms.py), so the merge input is ~``n_chunks * k``
-    rows — the full shingle universe is never shuffled or distinct-ed.
+    (cache-resident, per the measured chunking rule in BENCH/BASELINE.md,
+    "Data-size re-measurement with this round's kernels"), so the merge
+    input is ~``n_chunks * k`` rows — the full shingle universe is never
+    shuffled or distinct-ed.
     Correct by the KMV union property: any global bottom-k member is a
     bottom-k member of its own chunk. Bit-identical to
     :func:`distinct_shingle_estimate` (tests/test_kmv.py parity).

@@ -145,17 +145,24 @@ def shuffle_shards_sql(
     epoch: int = 0,
 ) -> str:
     """DuckDB twin of ``shuffle_shards`` — identical permutation,
-    shard split and rank rule."""
+    shard split and rank rule, and the same two guards: an id that is
+    NULL or outside ``[0, PERM_P)`` and a duplicate id each raise (DuckDB
+    evaluates ``error()`` inside CASE per row, so valid rows pass)."""
     return f"""WITH d AS (
   SELECT {id_col},
-         {_perm_expr(id_col, epoch)} % {PERM_P} AS perm_h
+         CASE WHEN {id_col} IS NULL OR {id_col} < 0 OR {id_col} >= {PERM_P}
+              THEN error('shuffle_shards: id out of domain [0, {PERM_P}): '
+                         || coalesce(CAST({id_col} AS VARCHAR), 'NULL'))
+              ELSE {_perm_expr(id_col, epoch)} % {PERM_P} END AS perm_h
   FROM {table}
 ),
 s AS (SELECT {id_col}, perm_h, perm_h % {n_shards} AS shard FROM d)
 SELECT {id_col},
        CAST(perm_h AS BIGINT) AS perm_h,
        CAST(shard AS BIGINT) AS shard,
-       CAST(row_number() OVER (
-         PARTITION BY shard ORDER BY perm_h ASC, {id_col} ASC
-       ) - 1 AS BIGINT) AS pos
-FROM s"""
+       CAST(CASE WHEN lag(perm_h) OVER w = perm_h
+                 THEN error('shuffle_shards: duplicate id '
+                            || CAST({id_col} AS VARCHAR))
+                 ELSE row_number() OVER w - 1 END AS BIGINT) AS pos
+FROM s
+WINDOW w AS (PARTITION BY shard ORDER BY perm_h ASC, {id_col} ASC)"""

@@ -14,6 +14,17 @@ def default_master() -> str:
     return os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else a quarter of physical RAM. In
+    local mode the driver JVM is the executor, so its heap is the engine's
+    memory; a quarter leaves room for the Python workers and the page
+    cache. Too small a heap shows up as GC churn in the verify stage
+    (measured on a 32-core host: 8g capped its scaling long before cores
+    did)."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{ram // 4 >> 20}m"
+
+
 def get_spark(
     app_name: str = "imdedup_plus_spark",
     master: str | None = None,
@@ -46,7 +57,7 @@ def get_spark(
     # shuffles of tests/bench at sf0.1. CAUTION: tmpfs is RAM; at corpus
     # scale the verify shuffle (tens of GB) competes with the JVM heap and
     # can OOM-kill the process — corpus-scale runs set
-    # SPARK_GRAFT_LOCAL_DIR to a disk path (bench.py does automatically).
+    # SPARK_GRAFT_LOCAL_DIR to a disk path (scripts/scaling_data.py does).
     # A real cluster uses executor-local NVMe for the same reason.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/dev/shm"):
@@ -61,10 +72,7 @@ def get_spark(
         # Python data sources (container.py) prune shards via pushFilters
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
-        # local mode: the driver JVM IS the executor — size the heap for
-        # 32 array-heavy join threads (measured: 8g heap caps verify-stage
-        # scaling via GC churn long before cores do)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # zstd shuffle blocks are ~40% smaller than lz4 on the packed

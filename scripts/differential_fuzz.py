@@ -224,7 +224,7 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     seeds = [int(a) for a in args if a.isdigit()] or [1, 2, 3]
     only = [a for a in args if not a.isdigit()] or None
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     all_fail: dict[int, list[str]] = {}
     for s in seeds:

@@ -102,7 +102,7 @@ def main() -> int:
     import __spark_entry__ as E
 
     sf_small, sf_corr = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
 
     t0 = time.time()
     res = E.entry(spark)

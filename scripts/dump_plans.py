@@ -30,7 +30,7 @@ def formatted(df) -> str:
 
 
 def main() -> None:
-    spark = get_spark(master="local[4]")
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     sig = S.with_signature(S.valid_documents(docs, cfg), cfg).select(

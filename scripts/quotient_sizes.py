@@ -4,9 +4,10 @@ vs the full pair graph a batch recompute iterates — reconstructed from
 the surviving incremental state (old cumulative remap snapshots are kept
 per epoch, so the pre-wave assignment is re-derivable exactly).
 
-Usage: python scripts/quotient_sizes.py [state_dir]
-(default /tmp/incclust_state_300000, as left by
-scripts/bench_incremental_clusters.py)
+Usage: python scripts/quotient_sizes.py <state_dir>
+where ``state_dir`` is the ``--state`` of a ``scripts/run_incremental.py
+--clusters`` run (its ``pairs/``, ``clusters_base/`` and ``cluster_remap/``
+tables, keyed on ``url``).
 """
 
 from __future__ import annotations
@@ -25,8 +26,10 @@ from imdedup_plus_spark.session import get_spark
 
 
 def main() -> int:
-    state = sys.argv[1] if len(sys.argv) > 1 else "/tmp/incclust_state_300000"
-    spark = get_spark(master="local[16]", shuffle_partitions=64)
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    state = sys.argv[1]
+    spark = get_spark(shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
 
     epochs = ST.processed_epochs(state)

@@ -9,7 +9,7 @@ verification -> connected components). North-rule target: >= 0.99.
 
 Usage: python scripts/recall_check.py [n_base] [master]
   n_base  variant groups (default 300000 -> 1.11M docs; 1200000 -> 4.44M)
-  master  spark master (default local[16], this host's saturation point)
+  master  spark master (default: get_spark's, one task thread per CPU)
 
 Prints one JSON line and appends nothing — paste results into
 BENCH/BASELINE.md with the environment snapshot (load, /dev/shm state).
@@ -36,7 +36,7 @@ from imdedup_plus_spark.session import get_spark
 
 def main() -> None:
     n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 300000
-    master = sys.argv[2] if len(sys.argv) > 2 else "local[16]"
+    master = sys.argv[2] if len(sys.argv) > 2 else None
 
     spark = get_spark(
         master=master,
@@ -80,7 +80,7 @@ def main() -> None:
         json.dumps(
             {
                 "n_base": n_base,
-                "master": master,
+                "master": spark.sparkContext.master,
                 "n_docs": n_docs,
                 "n_clustered_rows": n_clustered,
                 "n_expected_pairs": n_exp,

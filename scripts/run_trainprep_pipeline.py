@@ -9,7 +9,7 @@ Usage::
     python scripts/run_trainprep_pipeline.py INPUT_PARQUET \
         --workdir /path/work --outdir /path/shards \
         [--id-col doc_id] [--n-shards 8] [--collapse-recrawls] \
-        [--master local[16]]
+        [--master <spark master; default: one thread per CPU>]
 
 Prints one JSON line per completed stage (the lineage records) and a
 final summary line with the shard-write manifest.
@@ -40,7 +40,7 @@ def main() -> int:
     )
     ap.add_argument("--n-shards", type=int, default=8)
     ap.add_argument("--collapse-recrawls", action="store_true")
-    ap.add_argument("--master", default="local[16]")
+    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
     from imdedup_plus_spark.config import REFERENCE_CONFIG

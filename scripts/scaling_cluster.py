@@ -17,16 +17,18 @@ cores-per-JVM, 3 repeated pairs"):
 Single-core executors are the standard K8s-Spark shape and make the JVM
 count the ONLY thing that changes between the halves. Resource model:
 
-* **Executor pool**: CPUs ``[0, 2*n_exec*cores)`` — 2 CPUs per executor
-  core (task thread + Python worker), exactly the budget a real worker
-  node allocates. The worker daemon launches executors, so it (and
-  everything it forks) is pinned here.
-* **Driver node**: CPUs ``DRIVER_CPUS`` (a fixed 4-CPU set, IDENTICAL at
-  both halves) host the master daemon, the driver JVM and driver Python —
-  the separate driver/master node of a real cluster. Without this split
-  the constant driver+daemon load eats a 2-CPU N half alive and the
-  efficiency ratio measures daemon crowding, not the job (the round-4
-  harness pinned everything into one mask for exactly that reason).
+* **Executor pool**: the lowest ``2*n_exec*cores`` mask CPUs outside the
+  driver node — 2 CPUs per executor core (task thread + Python worker),
+  exactly the budget a real worker node allocates. The worker daemon
+  launches executors, so it (and everything it forks) is pinned here.
+* **Driver node**: the ``DRIVER_NODE_CPUS`` highest CPUs of the affinity
+  mask (IDENTICAL at both halves) host the master daemon, the driver JVM
+  and driver Python — the separate driver/master node of a real cluster.
+  Without this split the constant driver+daemon load eats a 2-CPU N half
+  alive and the efficiency ratio measures daemon crowding, not the job
+  (the round-4 harness pinned everything into one mask for exactly that
+  reason). ``cpu_plan`` splits the mask; one too small for both exits
+  before any daemon or probe starts.
 
 Each half runs in a FRESH process (the BENCH/BASELINE.md protocol) and
 records a calibration probe taken under the half's own executor mask
@@ -53,15 +55,38 @@ sys.path.insert(0, REPO)
 
 import pyspark
 
+from scripts.scaling_data import timed_pipeline
+
 SPARK_DIR = os.path.dirname(pyspark.__file__)
 SPARK_CLASS = os.path.join(SPARK_DIR, "bin", "spark-class")
 MASTER_URL = "spark://127.0.0.1:7077"
 PYFILES_ZIP = os.path.join(REPO, "dist", "imdedup_plus_spark.zip")
 
-#: the fixed "driver node": master daemon + driver JVM + driver Python.
-#: Same 4 CPUs at BOTH halves so driver capacity is not part of the
+#: size of the fixed "driver node": master daemon + driver JVM + driver
+#: Python. Same CPUs at BOTH halves so driver capacity is not part of the
 #: scaled resource (on a real cluster the driver node does not grow).
-DRIVER_CPUS = {28, 29, 30, 31}
+DRIVER_NODE_CPUS = 4
+#: heap of each executor JVM; the worker offers n_exec times this
+EXECUTOR_MEM_GB = 6
+
+
+def cpu_plan(
+    mask: set[int], n_exec: int, exec_cores: int
+) -> tuple[set[int], set[int]]:
+    """``(driver_cpus, exec_cpus)`` for one half: the driver node is the
+    ``DRIVER_NODE_CPUS`` highest CPUs of ``mask``, the executor pool the
+    lowest ``2 * n_exec * exec_cores`` of the rest. Exits naming the CPU
+    count needed when ``mask`` cannot hold both."""
+    cpus = sorted(mask)
+    n_pool = 2 * n_exec * exec_cores
+    need = DRIVER_NODE_CPUS + n_pool
+    if len(cpus) < need:
+        raise SystemExit(
+            f"scaling_cluster: {n_exec} executor(s) x {exec_cores} core(s) "
+            f"need {need} CPUs ({DRIVER_NODE_CPUS} driver node + {n_pool} "
+            f"executor pool); the affinity mask has {len(cpus)}"
+        )
+    return set(cpus[-DRIVER_NODE_CPUS:]), set(cpus[:n_pool])
 
 
 def _kill_daemons() -> None:
@@ -132,14 +157,14 @@ def _probe(exec_cpus: set[int], n_workers: int) -> dict:
 
 
 def _start_cluster(
-    worker_cores: int, exec_cpus: set[int]
+    n_exec: int, exec_cores: int, driver_cpus: set[int], exec_cpus: set[int]
 ) -> list[subprocess.Popen]:
     env = dict(os.environ)
     env["SPARK_LOCAL_DIRS"] = "/dev/shm/spark-local"
     env.setdefault("SPARK_NO_DAEMONIZE", "1")
     procs = []
     # master on the driver node
-    os.sched_setaffinity(0, DRIVER_CPUS)
+    os.sched_setaffinity(0, driver_cpus)
     procs.append(
         subprocess.Popen(
             [SPARK_CLASS, "org.apache.spark.deploy.master.Master",
@@ -153,8 +178,8 @@ def _start_cluster(
     procs.append(
         subprocess.Popen(
             [SPARK_CLASS, "org.apache.spark.deploy.worker.Worker",
-             "--host", "127.0.0.1", "--cores", str(worker_cores),
-             "--memory", "64g", "--webui-port", "8091", MASTER_URL],
+             "--host", "127.0.0.1", "--cores", str(n_exec * exec_cores),
+             "--memory", f"{n_exec * EXECUTOR_MEM_GB}g", "--webui-port", "8091", MASTER_URL],
             stdout=open("/tmp/sc_worker.log", "w"), stderr=subprocess.STDOUT, env=env,
         )
     )
@@ -163,29 +188,26 @@ def _start_cluster(
 
 
 def run_half(n_exec: int, exec_cores: int, corpus: str) -> dict:
+    driver_cpus, exec_cpus = cpu_plan(os.sched_getaffinity(0), n_exec, exec_cores)
     cores_max = n_exec * exec_cores
-    exec_cpus = set(range(min(2 * cores_max, os.cpu_count() - len(DRIVER_CPUS))))
     # glibc heap reuse for the numpy kernels (CLAUDE.md page-fault fact);
     # exported before daemons fork so Python workers inherit it
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
-    cal = _probe(exec_cpus, n_workers=cores_max)
+    # a leftover daemon from an earlier half would load the probe
     _kill_daemons()
-    procs = _start_cluster(worker_cores=cores_max, exec_cpus=exec_cpus)
+    cal = _probe(exec_cpus, n_workers=cores_max)
+    procs = _start_cluster(n_exec, exec_cores, driver_cpus, exec_cpus)
     try:
         # driver JVM + driver Python live on the driver node
-        os.sched_setaffinity(0, DRIVER_CPUS)
-        from pyspark.sql import SparkSession, functions as F
-
-        from imdedup_plus_spark import candidates as C, clustering as CL
-        from imdedup_plus_spark import signatures as S
-        from imdedup_plus_spark.config import SCALE_CONFIG as CFG
+        os.sched_setaffinity(0, driver_cpus)
+        from pyspark.sql import SparkSession
 
         spark = (
             SparkSession.builder.appName(f"scaling-{n_exec}x{exec_cores}")
             .master(MASTER_URL)
             .config("spark.executor.cores", str(exec_cores))
-            .config("spark.executor.memory", "6g")
+            .config("spark.executor.memory", f"{EXECUTOR_MEM_GB}g")
             .config("spark.driver.memory", "4g")
             .config("spark.cores.max", str(cores_max))
             .config("spark.submit.pyFiles", PYFILES_ZIP)
@@ -203,40 +225,12 @@ def run_half(n_exec: int, exec_cores: int, corpus: str) -> dict:
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("ERROR")
-        docs = spark.read.parquet(corpus)
-        n_docs = docs.count()
-        idc = "url" if "url" in docs.columns else "doc_id"
-        if dict(docs.dtypes).get(idc) == "string":
-            docs = docs.withColumn("__doc_key__", F.xxhash64(F.col(idc)))
-            idc = "__doc_key__"
-        # warm executors/IO (untimed, identical at both sizes)
-        docs.select("text").write.format("noop").mode("overwrite").save()
-        t0 = time.time()
-        sig = S.signature_kernel_arrow(docs, CFG, idc).persist()
-        sig.count()
-        t1 = time.time()
-        bands = S.explode_bands(sig, CFG, idc)
-        ver = C.verify_pairs_kernel(
-            C.candidate_pairs(bands, CFG, idc), sig, CFG, idc
-        ).localCheckpoint(eager=True)
-        n_ver = ver.count()
-        t2 = time.time()
-        cl = CL.clusters_from_pairs(sig, ver, idc)
-        cl.write.format("noop").mode("overwrite").save()
-        t3 = time.time()
+        r = timed_pipeline(spark, corpus)
         spark.stop()
         return {
             "cluster": f"{n_exec} executors x {exec_cores} core(s) "
                        f"(cores.max={cores_max})",
-            "n_docs": n_docs,
-            "n_verified_pairs": n_ver,
-            "wall_sec": round(t3 - t0, 2),
-            "docs_per_sec": round(n_docs / (t3 - t0), 1),
-            "stage_sec": {
-                "signatures": round(t1 - t0, 2),
-                "pairs_verify": round(t2 - t1, 2),
-                "cc_clusters": round(t3 - t2, 2),
-            },
+            **r,
             "calibration": cal,
         }
     finally:

@@ -134,3 +134,23 @@ def test_guards_pass_on_valid_boundary_ids(spark):
     assert len(rows) == 3
     assert {r.doc_id for r in rows} == {0, PERM_P - 1, 123}
     assert all(0 <= r.perm_h < PERM_P for r in rows)
+
+
+@pytest.mark.parametrize(
+    "ids, match",
+    [([5, -2], "out of domain"), ([7, 7, 9], "duplicate id")],
+)
+def test_sql_twin_mirrors_the_guards(ids, match):
+    """The DuckDB twin raises where ``shuffle_shards`` does, instead of
+    computing a negative perm_h or a partition-order-dependent pos."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT)")
+    con.executemany("INSERT INTO documents VALUES (?)", [[i] for i in ids])
+    with pytest.raises(duckdb.InvalidInputException, match=match):
+        con.execute(ORD.shuffle_shards_sql("doc_id")).fetchall()
+    con.execute("DELETE FROM documents")
+    con.execute(f"INSERT INTO documents VALUES (0), ({PERM_P - 1}), (123)")
+    rows = con.execute(ORD.shuffle_shards_sql("doc_id")).fetchall()
+    assert sorted(r[0] for r in rows) == [0, 123, PERM_P - 1]
