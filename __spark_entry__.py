@@ -29,7 +29,7 @@ from imdedup_plus_spark.config import REFERENCE_CONFIG as CFG
 ID = "doc_id"
 
 # reference config + sorted-neighborhood hot-bucket pairing (the
-# corpus-size-stable recall path; see candidates.candidate_pairs_hotwindow)
+# corpus-size-stable recall path; see candidates._walk_buckets)
 import dataclasses as _dc
 
 HOTWIN_CFG = _dc.replace(CFG, hot_window=4)
@@ -65,16 +65,12 @@ def _sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = _sig(spark, sf_dir)
-    bands = S.explode_bands(sig, CFG, ID)
-    return C.verify_pairs_kernel(C.candidate_pairs(bands, CFG, ID), sig, CFG, ID)
+    return C.verified_pairs(_sig(spark, sf_dir), CFG, ID)
 
 
 def _clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _sig(spark, sf_dir)
-    bands = S.explode_bands(sig, CFG, ID)
-    ver = C.verify_pairs_kernel(C.candidate_pairs(bands, CFG, ID), sig, CFG, ID)
-    return CL.clusters_from_pairs(sig, ver, ID)
+    return CL.clusters_from_pairs(sig, C.verified_pairs(sig, CFG, ID), ID)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -388,7 +384,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     # --- hot-bucket sorted-neighborhood pairing (scale-stable recall) ---
-    q["dedup_candidate_pairs_hotwin"] = lambda spark, sf: C.candidate_pairs_hotwindow(
+    q["dedup_candidate_pairs_hotwin"] = lambda spark, sf: C.candidate_pairs(
         S.explode_bands(_sig(spark, sf), HOTWIN_CFG, ID), HOTWIN_CFG, ID
     )
 

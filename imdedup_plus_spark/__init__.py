@@ -6,11 +6,15 @@ Pipeline (SURVEY.md §3.1 step 5), as ``pipeline.CheckpointedPipeline``
 runs it:
 
 documents -> signature_kernel_arrow (validity filter + signatures)
-          -> explode_bands -> candidate_pairs -> verify_pairs_kernel
+          -> verified_pairs (explode_bands, one band-key exchange, a
+             sorted mapInArrow walk that pairs and verifies each bucket
+             run, one groupBy counting matching bands)
           -> clusters_from_pairs -> extract_spans -> metrics / sinks
 
 ``with_signature`` and ``verify_pairs`` are the SQL twins of the two
-kernels, kept as the references the kernel parity tests compare against.
+kernels, and ``candidate_pairs_direct`` the plain self-join twin of the
+walker's pair rules, kept as the references the parity tests compare
+against.
 """
 
 from .config import DedupConfig, REFERENCE_CONFIG  # noqa: F401

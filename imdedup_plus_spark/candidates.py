@@ -1,36 +1,40 @@
 """Stage 1b — LSH bucket self-pairing, verification, best-base vote.
 
 Recasts the reference's detection stage (``/root/reference/2df.c:428-549``):
-probing ``SF_NUM`` in-memory feature hash tables becomes a
-``groupBy(band_id, band_hash)`` self-join — the shuffle *is* the hash table;
-the per-candidate matching-SF count and arg-max vote (``2df.c:459-499``)
-become an aggregate + window; the DC-coefficient content check
-(FEATURE_CHECK, ``2df.c:471-475``) becomes exact shingle-set Jaccard
-verification (``verify_pairs``).
+probing ``SF_NUM`` in-memory feature hash tables becomes one
+``repartition(band_id, band_hash)`` of the band rows, sorted within each
+partition so every bucket is one contiguous run — the shuffle *is* the hash
+table. One mapInArrow kernel walks the runs and emits each bucket's pairs;
+``verified_pairs`` also checks each pair's content there (FEATURE_CHECK,
+``2df.c:471-475``, as exact shingle-set Jaccard) so the per-candidate
+matching-SF count (``2df.c:459-499``) is one ``groupBy`` of verified
+emissions.
 
 Scale notes (100 TB):
 
-* ``bucket_cap`` drops buckets bigger than the cap *before* pairing — a band
-  hash shared by millions of boilerplate pages would otherwise explode the
-  self-join quadratically. This is the single most important web-scale
-  defense; dropped buckets are observable via ``hot_buckets``.
-* The self-join key is (band_id, band_hash); AQE skew-join splitting handles
-  residual imbalance below the cap (enable ``spark.sql.adaptive.enabled``).
-* Everything here is expressible in ANSI SQL — the DuckDB oracle replays it
-  bit-for-bit (``oracle.py``).
+* Buckets are paired in three tiers by size: quiet (2..``bucket_cap``)
+  pair fully; warm (``bucket_cap``..``mega_cap``] pair each member with its
+  ``hot_window`` successors in ``(n_set, id)`` order, or are dropped when
+  ``hot_window == 0``; mega (> ``mega_cap``) are dropped. A band hash shared
+  by millions of boilerplate pages would otherwise explode quadratically;
+  dropped buckets are observable via ``hot_buckets``.
+* The walker streams: it carries at most ``mega_cap`` rows of an open
+  run into the next Arrow batch, so one stop-shingle bucket (512,610
+  members at 4.44M docs, ``config.py``) costs a scan, not memory.
+* Every pair rule is expressible in ANSI SQL — the DuckDB oracle replays
+  it bit-for-bit (``oracle._cand_pairs_ctes``).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from dataclasses import replace
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-
-#: buckets above this many members are salted into ceil(size/threshold)^2
-#: join tasks (exact grid blocking, ``candidate_pairs_salted``) so one hot
-#: bucket cannot become the stage straggler
-PAIR_SPLIT_THRESHOLD = 64
 
 
 def band_buckets(bands: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
@@ -49,16 +53,16 @@ def hot_buckets(bands: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
     """Within-bucket self-pairing -> (id_a, id_b, n_matching_bands).
 
-    Delegates to the salted grid-blocked implementation (identical output,
-    no stragglers); ``candidate_pairs_direct`` keeps the plain self-join
-    for tests and reference. With ``cfg.hot_window > 0`` hot buckets
-    additionally contribute sorted-neighborhood pairs instead of being
-    dropped (``candidate_pairs_hotwindow`` — the corpus-size-stable
-    recall path).
+    One sorted walk of the band rows (``_walk_buckets``) plus one
+    ``groupBy``; ``verified_pairs`` is the same walk with the content
+    check fused in. ``candidate_pairs_direct`` keeps the plain self-join
+    for tests and reference.
     """
-    if cfg.hot_window > 0:
-        return candidate_pairs_hotwindow(bands, cfg, id_col)
-    return candidate_pairs_salted(bands, cfg, id_col)
+    return (
+        _walk_buckets(bands, cfg, id_col)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_matching_bands"))
+    )
 
 
 def candidate_pairs_direct(bands: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
@@ -104,101 +108,48 @@ def candidate_pairs_direct(bands: DataFrame, cfg: DedupConfig, id_col: str) -> D
     )
 
 
-def candidate_pairs_salted(
-    bands: DataFrame, cfg: DedupConfig, id_col: str,
-    split_threshold: int = PAIR_SPLIT_THRESHOLD,
-) -> DataFrame:
-    """Skew-defused pair generation — identical output to
-    ``candidate_pairs`` (tested), different physical shape.
+def verified_pairs(sig_df: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
+    """``verify_pairs_kernel(candidate_pairs(explode_bands(sig)), sig)`` in
+    one exchange: the band rows carry ``sig`` and ``shingle_set``, the
+    walker verifies every pair it emits, and one ``groupBy`` counts the
+    verified emissions into ``n_matching_bands``.
 
-    Buckets larger than ``split_threshold`` get a salt ``s = pmod(
-    xxhash64(id), g)`` with ``g = ceil(size/threshold)`` and the pair space
-    is covered by the g x g salt-task grid: side A is replicated to tasks
-    ``(salt_a, j)`` for all j, side B to ``(i, salt_b)`` for all i, and the
-    join key is ``(band, ta, tb)``. An unordered pair {x, y} therefore
-    matches in exactly two cells — ``(salt_x, salt_y)`` with A=x and
-    ``(salt_y, salt_x)`` with A=y — and the ``id_a < id_b`` filter keeps
-    exactly one. One giant bucket becomes g^2 bounded join partitions
-    instead of one straggler task: the 'salted repartitioning of hot LSH
-    buckets' from SURVEY.md §4. Replication factor is g per side, i.e.
-    O(size^2 / threshold) work — the same pair count, spread evenly.
-
-    Buckets above ``cfg.bucket_cap`` are still dropped (boilerplate bands —
-    the quadratic pair *count* is inherent, no salt fixes that).
+    Sound because the verify result depends only on the pair, and a doc
+    sits in one bucket per band, so a pair is emitted at most once per
+    band: the count equals the oracle's ``count(DISTINCT band_id)``.
     """
-    has_set = "n_set" in bands.columns
-    w = Window.partitionBy("band_id", "band_hash")
-    sized = bands.withColumn("bucket_size", F.count(F.col(id_col)).over(w))
-    kept = sized.where(
-        (F.col("bucket_size") >= 2) & (F.col("bucket_size") <= cfg.bucket_cap)
-    )
-    g = F.greatest(
-        F.lit(1), F.ceil(F.col("bucket_size") / split_threshold)
-    ).cast("int")
-    salted = kept.withColumn("g", g).withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(id_col)), F.col("g")).cast("int")
-    )
-    a_cols = [
-        F.col(id_col).alias("id_a"), F.col("band_id"), F.col("band_hash"),
-        F.col("salt").alias("ta"),
-        F.explode(F.sequence(F.lit(0), F.col("g") - 1)).alias("tb"),
-    ] + ([F.col("n_set").alias("n_set_a")] if has_set else [])
-    b_cols = [
-        F.col(id_col).alias("id_b"), F.col("band_id"), F.col("band_hash"),
-        F.col("salt").alias("tb"),
-        F.explode(F.sequence(F.lit(0), F.col("g") - 1)).alias("ta"),
-    ] + ([F.col("n_set").alias("n_set_b")] if has_set else [])
-    a = salted.select(*a_cols)
-    b = salted.select(*b_cols)
-    pairs0 = a.join(b, ["band_id", "band_hash", "ta", "tb"], "inner").where(
-        F.col("id_a") < F.col("id_b")
-    )
-    if has_set:
-        pairs0 = pairs0.where(
-            F.expr(
-                "least(n_set_a, n_set_b) * 100 >= "
-                f"greatest(n_set_a, n_set_b) * {cfg.verify_jaccard_pct}"
-            )
-        )
+    from . import signatures as S
+
+    bands = S.explode_bands(sig_df, cfg, id_col, carry=("sig", "shingle_set"))
     return (
-        pairs0.select("id_a", "id_b")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_matching_bands"))
+        _walk_buckets(bands, cfg, id_col, verify=True)
+        .groupBy("id_a", "id_b", "n_eq", "inter", "un")
+        .agg(F.count(F.lit(1)).alias("n_matching_bands"))
+        .select("id_a", "id_b", "n_matching_bands", "n_eq", "inter", "un")
     )
 
 
-def candidate_pairs_hotwindow(
-    bands: DataFrame, cfg: DedupConfig, id_col: str
+def _walk_buckets(
+    bands: DataFrame, cfg: DedupConfig, id_col: str, verify: bool = False
 ) -> DataFrame:
-    """Salted full pairing for buckets <= ``bucket_cap`` PLUS
-    sorted-neighborhood pairing *inside* hot buckets, instead of dropping
-    them.
+    """One row per pair emission: ``(id_a, id_b)``, plus ``(n_eq, inter,
+    un)`` of the verified emissions when ``verify``.
 
-    Why: dropping hot buckets makes recall corpus-size-dependent —
-    measured on the planted corpus at cap=32, pair recall is 0.9996 at
-    1.11M docs but 0.9935 at 4.44M docs (BENCH/BASELINE.md), because the
-    collision mass of popular band values grows with N and pushes true
-    groups' buckets over the cap. Extrapolated to 10^12 docs the
-    drop-the-bucket design breaches the >=0.99 criterion.
-
-    Fix (classic sorted-neighborhood blocking): members of a hot bucket
-    are sorted by ``(n_set, id)`` and each member pairs with its
-    ``cfg.hot_window`` successors — O(s*window) pairs per bucket instead
-    of s^2 (linear in bucket size, so hot buckets are affordable at any N).
-    True near-dups have near-equal shingle-set sizes, so group members
-    sort adjacently and keep enough intra-pairs for connected components
-    to merge the group; boilerplate interlopers of different lengths sort
-    away from them. Requires ``n_set`` on the bands (the kernel signature
-    path provides it).
-
-    Three tiers by bucket size (masses measured at 4.44M docs in
-    config.py): quiet (2..bucket_cap] full salted pairing; warm
-    (bucket_cap..mega_cap] sorted-neighborhood window; mega (> mega_cap)
-    dropped — a band value shared by thousands+ of documents is a corpus
-    stop-shingle whose match carries no pair signal, and window-pairing
-    it would add W*mass useless candidates to the verify shuffle.
+    ``repartition(band_id, band_hash)`` puts each bucket in one partition
+    and ``sortWithinPartitions(band_id, band_hash, n_set, id)`` makes it
+    one run, so the kernel finds bucket boundaries with ``np.diff``. Runs
+    of 2..``bucket_cap`` rows emit every pair; runs up to ``mega_cap``
+    emit each member's ``hot_window`` successors (none when it is 0);
+    longer runs and singletons emit nothing. With ``n_set`` on the rows,
+    pairs whose size ratio bounds the Jaccard below the verify threshold
+    (``J <= min/max``) are pruned at emission. Pairs are oriented
+    ``id_a < id_b``; for string ids Python's code-point order equals
+    Spark's UTF-8 byte order.
     """
-    if "n_set" not in bands.columns:
+    import pyarrow as pa
+
+    has_set = "n_set" in bands.columns
+    if cfg.hot_window > 0 and not has_set:
         # a silent fall-through to drop-only capping would quietly lose
         # SCALE_CONFIG's size-stable-recall guarantee — fail loudly
         raise ValueError(
@@ -206,79 +157,106 @@ def candidate_pairs_hotwindow(
             "(use the kernel signature path / explode_bands); refusing "
             "to silently fall back to drop-only capping"
         )
-    quiet = candidate_pairs_salted(bands, cfg, id_col)
+    quiet_cap, win, pct = cfg.bucket_cap, cfg.hot_window, cfg.verify_jaccard_pct
+    # runs above `cap` are dropped; it is also the most rows of one run the
+    # walker ever holds across a batch boundary
+    cap = max(quiet_cap, cfg.mega_cap) if win > 0 else quiet_cap
+    n_perm, sketch_k = cfg.n_perm, cfg.verify_sketch_k
+    packed = verify and dict(bands.dtypes).get("shingle_set") == "binary"
+    id_type = bands.schema[id_col].dataType.simpleString()
 
-    w = Window.partitionBy("band_id", "band_hash")
-    sized = bands.withColumn("bucket_size", F.count(F.col(id_col)).over(w))
-    hot = sized.where(
-        (F.col("bucket_size") > cfg.bucket_cap)
-        & (F.col("bucket_size") <= cfg.mega_cap)
-    )
-    rw = Window.partitionBy("band_id", "band_hash").orderBy(
-        F.col("n_set").asc(), F.col(id_col).asc()
-    )
-    ranked = hot.withColumn("r", F.row_number().over(rw))
-    # NB: Spark's sequence(start, stop) DESCENDS when stop < start, so the
-    # last-ranked member (r == bucket_size) must not build a probe list at
-    # all — sequence(r+1, r) would yield [r+1, r] and pair it with itself
-    a = ranked.where(F.col("r") < F.col("bucket_size")).select(
-        F.col(id_col).alias("ida"),
-        "band_id",
-        "band_hash",
-        F.col("n_set").alias("n_set_a"),
-        F.explode(
-            F.sequence(
-                F.col("r") + 1,
-                F.least(F.col("r") + cfg.hot_window, F.col("bucket_size")),
+    def keys(t: pa.Table):
+        return t.column("band_id").to_numpy(), t.column("band_hash").to_numpy()
+
+    def emit(t: pa.Table) -> Iterator[pa.RecordBatch]:
+        """Pairs of the complete runs in ``t``."""
+        n = t.num_rows
+        if n < 2:
+            return
+        bid, bh = keys(t)
+        start = np.ones(n, dtype=bool)
+        start[1:] = (bid[1:] != bid[:-1]) | (bh[1:] != bh[:-1])
+        starts = np.flatnonzero(start)
+        sizes = np.diff(np.append(starts, n))
+        size = np.repeat(sizes, sizes)
+        # successors each row pairs with, in run order
+        reach = np.repeat(starts + sizes, sizes) - np.arange(n) - 1
+        reach = np.where(
+            size <= quiet_cap, reach,
+            np.where(size <= cap, np.minimum(reach, win), 0),
+        )
+        a = np.repeat(np.arange(n), reach)
+        if a.size == 0:
+            return
+        first = np.cumsum(reach) - reach
+        b = a + 1 + np.arange(a.size) - np.repeat(first, reach)
+        if has_set:
+            ns = t.column("n_set").to_numpy().astype(np.int64)
+            lo, hi = np.minimum(ns[a], ns[b]), np.maximum(ns[a], ns[b])
+            keep = lo * 100 >= hi * pct
+            a, b = a[keep], b[keep]
+            if a.size == 0:
+                return
+        checked = {}
+        if verify:
+            sig = t.column("sig").combine_chunks().flatten().to_numpy().reshape(n, n_perm)
+            sets = t.column("shingle_set")
+            keep, *vals = _verify_arith(
+                sig[a], sig[b],
+                sets.take(a).to_numpy(zero_copy_only=False),
+                sets.take(b).to_numpy(zero_copy_only=False),
+                pct, sketch_k, packed,
             )
-        ).alias("rp"),
-    )
-    b = ranked.select(
-        F.col(id_col).alias("idb"),
-        "band_id",
-        "band_hash",
-        F.col("n_set").alias("n_set_b"),
-        F.col("r").alias("rp"),
-    )
-    hot_pairs = (
-        a.join(b, ["band_id", "band_hash", "rp"])
-        .where(
-            F.expr(
-                "least(n_set_a, n_set_b) * 100 >= "
-                f"greatest(n_set_a, n_set_b) * {cfg.verify_jaccard_pct}"
-            )
-        )
-        .select(
-            F.least(F.col("ida"), F.col("idb")).alias("id_a"),
-            F.greatest(F.col("ida"), F.col("idb")).alias("id_b"),
-            "band_id",
-        )
-    )
-    all_emissions = quiet.select(
-        "id_a", "id_b", F.lit(None).cast("int").alias("band_id"), "n_matching_bands"
-    ).unionByName(
-        hot_pairs.select(
-            "id_a", "id_b", "band_id", F.lit(1).cast("long").alias("n_matching_bands")
-        )
-    )
-    # quiet-bucket counts are already aggregated; hot emissions add one per
-    # (pair, band). A pair can appear in both regimes (quiet in one band,
-    # hot in another) — sum the contributions.
+            a, b = a[keep], b[keep]
+            checked = {k: pa.array(v[keep]) for k, v in zip(("n_eq", "inter", "un"), vals)}
+        ids = t.column(id_col)
+        ia = ids.take(a).to_numpy(zero_copy_only=False)
+        ib = ids.take(b).to_numpy(zero_copy_only=False)
+        swap = ia > ib
+        yield pa.RecordBatch.from_pydict({
+            "id_a": pa.array(np.where(swap, ib, ia), type=ids.type),
+            "id_b": pa.array(np.where(swap, ia, ib), type=ids.type),
+            **checked,
+        })
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        held = None  # rows of the open run: the last run of the batch so far
+        skip = None  # key of an open run already longer than `cap`
+        for rb in batches:
+            t = pa.Table.from_batches([rb])
+            if t.num_rows == 0:
+                continue
+            if skip is not None:
+                bid, bh = keys(t)
+                rest = np.flatnonzero((bid != skip[0]) | (bh != skip[1]))
+                if rest.size == 0:
+                    continue
+                t, skip = t.slice(int(rest[0])), None
+            if held is not None:
+                t = pa.concat_tables([held, t]).combine_chunks()
+            bid, bh = keys(t)
+            n = t.num_rows
+            tail = np.flatnonzero((bid != bid[-1]) | (bh != bh[-1]))
+            last = int(tail[-1]) + 1 if tail.size else 0
+            if n - last > cap:
+                held, skip = None, (bid[-1], bh[-1])
+            else:
+                held = t.slice(last)
+            yield from emit(t.slice(0, last))
+        if held is not None:
+            yield from emit(held)
+
+    order = ["band_id", "band_hash"] + (["n_set"] if has_set else []) + [id_col]
+    cols = [id_col, "band_id", "band_hash"] + (["n_set"] if has_set else [])
+    schema = f"id_a {id_type}, id_b {id_type}"
+    if verify:
+        cols += ["sig", "shingle_set"]
+        schema += ", n_eq bigint, inter bigint, un bigint"
     return (
-        all_emissions.groupBy("id_a", "id_b")
-        .agg(
-            F.sum(
-                F.when(F.col("band_id").isNull(), F.col("n_matching_bands")).otherwise(0)
-            ).alias("quiet_bands"),
-            F.countDistinct(F.col("band_id")).alias("hot_bands"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("quiet_bands") + F.col("hot_bands")).cast("long").alias(
-                "n_matching_bands"
-            ),
-        )
+        bands.select(*cols)
+        .repartition("band_id", "band_hash")
+        .sortWithinPartitions(*order)
+        .mapInArrow(fn, schema)
     )
 
 
@@ -343,6 +321,127 @@ def verify_pairs(
     return out.select("id_a", "id_b", "n_matching_bands", "n_eq", "inter", "un")
 
 
+
+def _flat_sets(values, n: int, packed: bool):
+    """Concatenate a column of sets -> (flat int64 values, per-row
+    lengths). Packed cells are one buffer-join + one memcpy."""
+    if packed:
+        lens = np.fromiter((len(x) >> 2 for x in values), np.int64, n)
+        flat = np.frombuffer(b"".join(values), dtype="<i4").astype(np.int64)
+    else:
+        lens = np.fromiter((len(x) for x in values), np.int64, n)
+        flat = (
+            np.concatenate(list(values)).astype(np.int64)
+            if lens.sum()
+            else np.empty(0, np.int64)
+        )
+    return flat, lens
+
+
+def _verify_arith(sig_a, sig_b, set_a, set_b, pct: int, sketch_k: int, packed: bool):
+    """Per-pair content check of ``verify_pairs_kernel`` and
+    ``verified_pairs``: ``(keep, n_eq, inter, un)`` for ``n`` pairs, from
+    ``(n, n_perm)`` signature matrices and two length-``n`` sequences of
+    sorted-distinct shingle sets (packed int32 bytes or int arrays).
+
+    * **exact mode (``sketch_k == 0``, the oracle/reference path)** —
+      per-pair ``np.intersect1d`` loop: full sets (~300 elements at
+      web-page size) amortize the call overhead and stay L1-resident,
+      measured 2x FASTER than the flat form's ~10 extra memory passes.
+    * **KMV mode (``sketch_k > 0``, the SCALE_CONFIG path)** —
+      **chunked-flat**: 1024-pair slices are concatenated and every
+      per-pair quantity falls out of vectorized numpy passes, no per-pair
+      Python at all. The trick: tag each shingle hash with its pair index
+      in the high bits (``key = pair_idx * 2^31 + hash``; hashes live in
+      ``[0, 2^31)``). Sets are stored sorted-distinct and pair indices are
+      nondecreasing under ``np.repeat``, so the concatenated key arrays
+      are *globally* sorted — per-pair intersection sizes reduce to ONE
+      ``searchsorted`` of A-keys into B-keys plus a ``bincount`` of the
+      matches, and the KMV window to one mergesort + first-occurrence
+      dedup of the combined keys. Chunk size matters under concurrency:
+      whole-batch flat streams ~40 MB of temporaries per batch and
+      anti-scales on DRAM bandwidth (6.2 -> 11.2 us/pair from 1 -> 16
+      pinned procs); 1024-pair chunks stay L2-resident at 4.7/6.9
+      us/pair, vs the per-pair loop's 17.4/19.8 (BENCH/BASELINE.md,
+      "Data-size re-measurement with this round's kernels"). Requires the
+      malloc env set by ``session.get_spark`` — without heap reuse each
+      batch re-faults its working set at ~70us/page.
+
+    An empty-vs-empty pair (inter=un=0) passes the Jaccard predicate
+    (0 >= 0) — deliberate and unreachable: valid_documents filters to
+    >= min_tokens and a signature needs >= shingle_window tokens, so every
+    doc reaching verification has a non-empty shingle set. The SQL twin
+    (``verify_pairs``) shares the exact predicate, so all forms agree if
+    that ever changes.
+    """
+    n = len(set_a)
+    n_eq = (sig_a == sig_b).sum(axis=1).astype(np.int64)
+    inter = np.empty(n, dtype=np.int64)
+    un = np.empty(n, dtype=np.int64)
+    if not sketch_k:
+        for i in range(n):
+            if packed:
+                a = np.frombuffer(set_a[i], dtype="<i4")
+                b = np.frombuffer(set_b[i], dtype="<i4")
+            else:
+                a, b = np.asarray(set_a[i]), np.asarray(set_b[i])
+            # sets sorted+distinct by construction -> exact counts
+            ab = np.intersect1d(a, b, assume_unique=True)
+            inter[i] = ab.size
+            un[i] = a.size + b.size - ab.size
+        return inter * 100 >= un * pct, n_eq, inter, un
+
+    # chunking is output-invariant: every quantity is per-pair
+    CHUNK = 1024
+    for lo in range(0, n, CHUNK):
+        hi_ = min(lo + CHUNK, n)
+        m = hi_ - lo
+        va, la = _flat_sets(set_a[lo:hi_], m, packed)
+        vb, lb = _flat_sets(set_b[lo:hi_], m, packed)
+        ia = np.repeat(np.arange(m, dtype=np.int64), la)
+        ib = np.repeat(np.arange(m, dtype=np.int64), lb)
+        ka = ia * (1 << 31) + va
+        kb = ib * (1 << 31) + vb
+
+        # intersection mask over A-keys: (pair, hash) present in B
+        if kb.size:
+            pos = np.searchsorted(kb, ka)
+            hit = pos < kb.size
+            hit[hit] = kb[pos[hit]] == ka[hit]
+        else:
+            hit = np.zeros(ka.size, dtype=bool)
+
+        # KMV: bottom-k of the union (a, b are each bottom-k of their
+        # sets, so the union's true bottom-k is contained in merge(a, b));
+        # estimate J on that window. Union per pair = first-occurrence
+        # dedup of the combined sorted keys.
+        allk = np.sort(np.concatenate([ka, kb]), kind="mergesort")
+        if allk.size:
+            first = np.empty(allk.size, dtype=bool)
+            first[0] = True
+            np.not_equal(allk[1:], allk[:-1], out=first[1:])
+            uk = allk[first]
+        else:
+            uk = allk
+        upair = uk >> 31
+        seg_len = np.bincount(upair, minlength=m)
+        un_c = np.minimum(seg_len, sketch_k)
+        # k-th smallest union key per pair (the KMV window top)
+        seg_start = np.concatenate(([0], np.cumsum(seg_len)[:-1]))
+        hi_idx = seg_start + np.maximum(un_c, 1) - 1
+        hi_key = (
+            uk[np.minimum(hi_idx, max(uk.size - 1, 0))]
+            if uk.size
+            else np.zeros(m, dtype=np.int64)
+        )
+        # inter = intersection keys inside the window (key <= top; same
+        # pair prefix, so key order == hash order)
+        km, pm = ka[hit], ia[hit]
+        inter[lo:hi_] = np.bincount(pm[km <= hi_key[pm]], minlength=m)
+        un[lo:hi_] = un_c
+    return inter * 100 >= un * pct, n_eq, inter, un
+
+
 def verify_pairs_kernel(
     pairs: DataFrame, sig_df: DataFrame, cfg: DedupConfig, id_col: str
 ) -> DataFrame:
@@ -353,39 +452,13 @@ def verify_pairs_kernel(
     JVM, which boxes every element and allocates a hash set per row —
     measured ~355us/pair CPU *and* it anti-scales with executor threads
     (allocation-rate contention). Here the joins still co-locate
-    ``(sig, shingle_set)`` onto each candidate pair (that shuffle is
-    unavoidable and healthy), but n_eq / inter / un run in Arrow-batched
-    Python workers, with the physical form picked per mode:
-
-    * **KMV mode (``verify_sketch_k > 0``, the SCALE_CONFIG path)** —
-      **chunked-flat**: 1024-pair slices of the Arrow batch are
-      concatenated and every per-pair quantity falls out of vectorized
-      numpy passes, no per-pair Python at all. The trick: tag each
-      shingle hash with its pair index in the high bits
-      (``key = pair_idx * 2^31 + hash``; hashes live in ``[0, 2^31)``).
-      Sets are stored sorted-distinct and pair indices are nondecreasing
-      under ``np.repeat``, so the concatenated key arrays are *globally*
-      sorted — per-pair intersection sizes reduce to ONE ``searchsorted``
-      of A-keys into B-keys plus a ``bincount`` of the matches, and the
-      KMV window to one mergesort + first-occurrence dedup of the
-      combined keys. Chunk size matters under concurrency: whole-batch
-      flat streams ~40 MB of temporaries per batch and anti-scales on
-      DRAM bandwidth (6.2 -> 11.2 us/pair from 1 -> 16 pinned procs);
-      1024-pair chunks stay L2-resident at 4.7/6.9 us/pair, vs the
-      per-pair loop's 17.4/19.8 (BENCH/BASELINE.md, "Data-size
-      re-measurement with this round's kernels").
-      Requires the malloc env set by ``session.get_spark`` — without
-      heap reuse each batch re-faults its working set at ~70us/page.
-    * **exact mode (``verify_sketch_k == 0``, the oracle/reference
-      path)** — per-pair ``np.intersect1d`` loop: full sets (~300
-      elements at web-page size) amortize the call overhead and stay
-      L1-resident, measured 2x FASTER than the flat form's ~10 extra
-      memory passes. Exact mode at 100 TB would carry whole shingle sets
-      through the shuffle anyway — KMV is the scale path by design.
+    ``(sig, shingle_set)`` onto each candidate pair, but n_eq / inter / un
+    run in Arrow-batched Python workers (``_verify_arith``, shared with
+    ``verified_pairs``). The band pipeline uses ``verified_pairs``; this
+    form verifies pair lists that do not come from one band walk
+    (streaming probes, the short-doc lane).
     """
-    import numpy as np
     import pandas as pd
-    from collections.abc import Iterator
 
     sigs = sig_df.select(F.col(id_col), F.col("sig"), F.col("shingle_set"))
     sa = (
@@ -407,136 +480,17 @@ def verify_pairs_kernel(
     id_type = pairs.schema["id_a"].dataType.simpleString()
     packed = dict(sig_df.dtypes).get("shingle_set") == "binary"
 
-    def _flat(values, n):
-        """Concatenate a batch column of sets -> (flat int64 values,
-        per-row lengths). Packed cells are one buffer-join + one memcpy."""
-        if packed:
-            lens = np.fromiter((len(x) >> 2 for x in values), np.int64, n)
-            flat = np.frombuffer(b"".join(values), dtype="<i4").astype(np.int64)
-        else:
-            lens = np.fromiter((len(x) for x in values), np.int64, n)
-            flat = (
-                np.concatenate(list(values)).astype(np.int64)
-                if lens.sum()
-                else np.empty(0, np.int64)
-            )
-        return flat, lens
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            # --- n_eq: one (n, n_perm) equality reduction ---
-            sig_a = np.concatenate(list(pdf["sig_a"].values)).reshape(n, -1)
-            sig_b = np.concatenate(list(pdf["sig_b"].values)).reshape(n, -1)
-            n_eq = (sig_a == sig_b).sum(axis=1).astype(np.int64)
-
-            if not sketch_k:
-                # exact mode: full sets stay L1-resident per pair — the
-                # loop beats the flat form here (see docstring)
-                set_a = pdf["set_a"].values
-                set_b = pdf["set_b"].values
-                inter = np.empty(n, dtype=np.int64)
-                un = np.empty(n, dtype=np.int64)
-                for i in range(n):
-                    if packed:
-                        a = np.frombuffer(set_a[i], dtype="<i4")
-                        b = np.frombuffer(set_b[i], dtype="<i4")
-                    else:
-                        a, b = set_a[i], set_b[i]
-                    # sets sorted+distinct by construction -> exact counts
-                    ab = np.intersect1d(a, b, assume_unique=True)
-                    inter[i] = ab.size
-                    un[i] = a.size + b.size - ab.size
-                # NOTE an empty-vs-empty pair (inter=un=0) would pass the
-                # Jaccard predicate (0 >= 0) — deliberate and unreachable:
-                # valid_documents filters to >= min_tokens and a signature
-                # needs >= shingle_window tokens, so every doc reaching
-                # verification has a non-empty shingle set. The SQL twin
-                # (verify_pairs) and the chunked form below share the
-                # exact predicate, so all three agree if that ever changes.
-                keep = inter * 100 >= un * pct
-                yield pd.DataFrame(
-                    {
-                        "id_a": pdf["id_a"].values[keep],
-                        "id_b": pdf["id_b"].values[keep],
-                        "n_matching_bands": pdf["n_matching_bands"].values[keep],
-                        "n_eq": n_eq[keep],
-                        "inter": inter[keep],
-                        "un": un[keep],
-                    }
-                )
-                continue
-
-            # --- KMV: pair-tagged key spaces (globally sorted by
-            #     construction: sets are sorted-distinct, pair index is
-            #     nondecreasing), evaluated over CACHE-RESIDENT CHUNKS.
-            #     Whole-batch flat streams ~40 MB of int64 temporaries per
-            #     10k-pair batch; at 16 concurrent workers that saturates
-            #     DRAM bandwidth (measured 6.2 -> 11.2 us/pair going
-            #     1 -> 16 pinned procs). 1024-pair chunks keep the working
-            #     set ~4 MB (L2-resident): 4.7 us/pair at 1 proc and 6.9
-            #     at 16 (BENCH/BASELINE.md, "Data-size re-measurement
-            #     with this round's kernels"). Chunking is
-            #     output-invariant: every quantity is per-pair.
-            set_a_vals = pdf["set_a"].values
-            set_b_vals = pdf["set_b"].values
-            inter = np.empty(n, dtype=np.int64)
-            un = np.empty(n, dtype=np.int64)
-            CHUNK = 1024
-            for lo in range(0, n, CHUNK):
-                hi_ = min(lo + CHUNK, n)
-                m = hi_ - lo
-                va, la = _flat(set_a_vals[lo:hi_], m)
-                vb, lb = _flat(set_b_vals[lo:hi_], m)
-                ia = np.repeat(np.arange(m, dtype=np.int64), la)
-                ib = np.repeat(np.arange(m, dtype=np.int64), lb)
-                ka = ia * (1 << 31) + va
-                kb = ib * (1 << 31) + vb
-
-                # intersection mask over A-keys: (pair, hash) present in B
-                if kb.size:
-                    pos = np.searchsorted(kb, ka)
-                    hit = pos < kb.size
-                    hit[hit] = kb[pos[hit]] == ka[hit]
-                else:
-                    hit = np.zeros(ka.size, dtype=bool)
-
-                # KMV: bottom-k of the union (a, b are each bottom-k of
-                # their sets, so the union's true bottom-k is contained in
-                # merge(a, b)); estimate J on that window. Union per pair =
-                # first-occurrence dedup of the combined sorted keys.
-                allk = np.sort(np.concatenate([ka, kb]), kind="mergesort")
-                if allk.size:
-                    first = np.empty(allk.size, dtype=bool)
-                    first[0] = True
-                    np.not_equal(allk[1:], allk[:-1], out=first[1:])
-                    uk = allk[first]
-                else:
-                    uk = allk
-                upair = uk >> 31
-                seg_len = np.bincount(upair, minlength=m)
-                un_c = np.minimum(seg_len, sketch_k)
-                # k-th smallest union key per pair (the KMV window top)
-                seg_start = np.concatenate(([0], np.cumsum(seg_len)[:-1]))
-                hi_idx = seg_start + np.maximum(un_c, 1) - 1
-                hi_key = (
-                    uk[np.minimum(hi_idx, max(uk.size - 1, 0))]
-                    if uk.size
-                    else np.zeros(m, dtype=np.int64)
-                )
-                # inter = intersection keys inside the window (key <= top;
-                # same pair prefix, so key order == hash order)
-                km, pm = ka[hit], ia[hit]
-                inter[lo:hi_] = np.bincount(
-                    pm[km <= hi_key[pm]], minlength=m
-                )
-                un[lo:hi_] = un_c
-            # empty==empty auto-pass: deliberate, unreachable — see the
-            # per-pair form above (min_tokens/shingle_window upstream)
-            keep = inter * 100 >= un * pct
-            out = pd.DataFrame(
+            keep, n_eq, inter, un = _verify_arith(
+                np.concatenate(list(pdf["sig_a"].values)).reshape(n, -1),
+                np.concatenate(list(pdf["sig_b"].values)).reshape(n, -1),
+                pdf["set_a"].values, pdf["set_b"].values, pct, sketch_k, packed,
+            )
+            yield pd.DataFrame(
                 {
                     "id_a": pdf["id_a"].values[keep],
                     "id_b": pdf["id_b"].values[keep],
@@ -546,7 +500,6 @@ def verify_pairs_kernel(
                     "un": un[keep],
                 }
             )
-            yield out
 
     schema = (
         f"id_a {id_type}, id_b {id_type}, n_matching_bands bigint, "
@@ -597,7 +550,7 @@ def short_doc_pairs(
     Hot-bucket defense (same treatment as the band join): one popular short
     page (empty-ish boilerplate sharing a SimHash) would otherwise explode
     the self-join quadratically. Buckets up to ``cfg.bucket_cap`` pair fully
-    through the salted g x g grid; larger buckets chain by id-sorted
+    through the band walker; larger buckets chain by id-sorted
     neighborhood windows (``max(1, cfg.hot_window)`` successors per member)
     — every member of an equal-SimHash bucket has the same token
     distribution, so the chain keeps the whole bucket connected for
@@ -611,14 +564,14 @@ def short_doc_pairs(
     short = valid_docs.where(F.size("tokens") < cfg.short_doc_tokens)
     sh = simhash(short, id_col, text_col).select(F.col(id_col), F.col("simhash"))
 
-    # quiet tier: full pairing via the band path's salted grid, with the
-    # SimHash as the one band (no n_set, so no size-ratio prune)
-    quiet_pairs = candidate_pairs_salted(
+    # quiet tier: full pairing via the band walker, with the SimHash as
+    # the one band (no n_set, so no size-ratio prune)
+    quiet_pairs = candidate_pairs(
         sh.select(
             F.col(id_col), F.lit(0).alias("band_id"),
             F.col("simhash").alias("band_hash"),
         ),
-        cfg,
+        replace(cfg, hot_window=0),
         id_col,
     ).select("id_a", "id_b")
 
@@ -683,7 +636,7 @@ def containment_pairs(
     symmetric verify stage is designed to reject; consequently the
     candidate generation here must NOT apply the size-ratio emission
     prune (that prune is provable only for the Jaccard predicate), hence
-    ``bands.drop("n_set")`` before the salted pairing.
+    ``bands.drop("n_set")`` before the drop-only pairing.
 
     Recall honesty at scale: candidates still come from MinHash LSH,
     which recalls *resemblance*, not containment — an extreme-asymmetry
@@ -694,7 +647,7 @@ def containment_pairs(
     probed against a global shingle index — the CDC shared-chunk lane
     covers the exact-substring slice of that today).
     """
-    cand = candidate_pairs_salted(bands.drop("n_set"), cfg, id_col)
+    cand = candidate_pairs(bands.drop("n_set"), replace(cfg, hot_window=0), id_col)
     sigs = sig_df.select(F.col(id_col), F.col("shingle_set"))
     sa = (
         sigs.withColumnRenamed(id_col, "id_a")
@@ -742,11 +695,9 @@ def containment_pairs_kernel(
     boundary (|a/b - n| >= 1/b > n * 2^-53 for b < 2^53/n), so the two
     forms agree bit-for-bit.
     """
-    import numpy as np
     import pandas as pd
-    from collections.abc import Iterator
 
-    cand = candidate_pairs_salted(bands.drop("n_set"), cfg, id_col)
+    cand = candidate_pairs(bands.drop("n_set"), replace(cfg, hot_window=0), id_col)
     sigs = sig_df.select(F.col(id_col), F.col("shingle_set"))
     sa = (
         sigs.withColumnRenamed(id_col, "id_a")

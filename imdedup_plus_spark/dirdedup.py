@@ -19,7 +19,8 @@ byte-level one:
    collision demotes the member back to stored, so exactness never
    rests on a hash;
 3. near-dup dedup of the surviving text keepers: Arrow signature kernel
-   -> salted LSH pairs -> exact-Jaccard verify -> connected components;
+   -> LSH pairs verified by exact Jaccard in one band walk
+   (``candidates.verified_pairs``) -> connected components;
    cluster representative (min id) is the base, every other member
    becomes a byte-delta target (CDC-anchored suffix-array LCS over the
    RAW file bytes — ``bytedelta``);
@@ -36,7 +37,7 @@ bytes + container instructions; everything lands via the atomic
 is CHECK_DECOMPRESS: per-file byte identity as a DataFrame.
 
 Scale shape: every step is the engine's existing 100 TB lane (narrow
-ingest, salted pairing, pair-subgraph CC, per-pair kernels, manifest
+ingest, the verifying band walk, pair-subgraph CC, per-pair kernels, manifest
 sinks); this module only composes them, adds no new shuffle, and keeps
 whole-file bytes out of wide joins except the two places they must move
 (exact-verify against the keeper, delta kernel input).
@@ -138,10 +139,7 @@ def assign_roles(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     # near-dup clusters over text survivors (the engine's core lane)
     text_docs = survivors.where("media_type = 'text' AND text IS NOT NULL")
     sig = S.signature_kernel_arrow(text_docs, cfg, "doc_id")
-    ver = C.verify_pairs_kernel(
-        C.candidate_pairs(S.explode_bands(sig, cfg, "doc_id"), cfg, "doc_id"),
-        sig, cfg, "doc_id",
-    )
+    ver = C.verified_pairs(sig, cfg, "doc_id")
     cl = CL.clusters_from_pairs(sig.select("doc_id"), ver, "doc_id")
     delta_targets = cl.where(F.col("doc_id") != F.col("cluster_id")).select(
         "doc_id", F.col("cluster_id").alias("ref_id")

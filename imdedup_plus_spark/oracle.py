@@ -148,10 +148,10 @@ clusters AS (
 def _cand_pairs_ctes(cfg: DedupConfig, ratio: str) -> str:
     """``cand_pairs`` CTE(s). With ``hot_window > 0``, hot buckets
     contribute sorted-neighborhood pairs instead of being dropped
-    (mirrors ``candidates.candidate_pairs_hotwindow``): a band bucket is
-    either quiet (<= cap, full pairing) or hot (> cap, window pairing),
-    so ``count(DISTINCT band_id)`` over the union of per-band emissions
-    equals the Spark side's quiet-sum + hot-distinct-count."""
+    (mirrors ``candidates._walk_buckets``): a band bucket is either quiet
+    (<= cap, full pairing) or hot (> cap, window pairing), and a doc sits
+    in one bucket per band, so ``count(DISTINCT band_id)`` over the union
+    of per-band emissions equals the walker's per-emission count."""
     quiet_emit = f"""
   SELECT a.id AS id_a, b.id AS id_b, a.band_id
   FROM kept_bands a

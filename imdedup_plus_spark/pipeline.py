@@ -239,7 +239,6 @@ class CheckpointedPipeline:
                 "recrawls", lambda: WU.latest_revision(src, keep_cols=keep)
             )
 
-        valid = S.valid_documents(docs, cfg)
         if (cfg.exact_prepass and cfg.short_doc_tokens > 0
                 and cfg.shingle_window > cfg.min_tokens):
             # exact groups come from the signature rows, which need a full
@@ -258,8 +257,10 @@ class CheckpointedPipeline:
             lambda: S.signature_kernel_arrow(docs, cfg, idc, fingerprint=cfg.exact_prepass),
         )
 
+        # only the short-doc lane reads the token-level valid frame
+        valid = S.valid_documents(docs, cfg) if cfg.short_doc_tokens > 0 else None
         exact_groups = None
-        sig, lsh_input = sig_all, valid
+        sig = sig_all
         if cfg.exact_prepass:
             # FIX_OPTI analog: collapse identical texts to one representative
             # before the quadratic stages (2df.c:477-494 / index.c:254-264)
@@ -272,17 +273,24 @@ class CheckpointedPipeline:
             )
             reps = exact_groups.where(F.col(idc) == F.col("exact_rep")).select(idc)
             sig = sig_all.join(reps, idc, "left_semi")
-            lsh_input = valid.join(reps, idc, "left_semi")
+            if valid is not None:
+                valid = valid.join(reps, idc, "left_semi")
 
         def _build_verified() -> DataFrame:
-            pairs = C.candidate_pairs(S.explode_bands(sig, cfg, idc), cfg, idc)
-            if cfg.short_doc_tokens > 0:
-                pairs = (
-                    pairs.unionByName(C.short_doc_pairs(lsh_input, cfg, idc))
-                    .groupBy("id_a", "id_b")
-                    .agg(F.max("n_matching_bands").alias("n_matching_bands"))
-                )
-            return C.verify_pairs_kernel(pairs, sig, cfg, idc)
+            verified = C.verified_pairs(sig, cfg, idc)
+            if valid is None:
+                return verified
+            # a pair found by both lanes keeps its band count; the verify
+            # columns depend only on the pair, so they group with it
+            short_pairs = C.verify_pairs_kernel(
+                C.short_doc_pairs(valid, cfg, idc), sig, cfg, idc
+            )
+            return (
+                verified.unionByName(short_pairs)
+                .groupBy("id_a", "id_b", "n_eq", "inter", "un")
+                .agg(F.max("n_matching_bands").alias("n_matching_bands"))
+                .select(*verified.columns)
+            )
 
         verified = self._stage("verified_pairs", _build_verified)
 
@@ -312,14 +320,11 @@ class CheckpointedPipeline:
             ),
         )
         summary = self._stage("span_summary", lambda: SP.span_summary(spans))
-        uniques = C.unique_documents(valid, verified, idc)
         return {
-            "valid": valid,
             "signatures": sig,
             "exact_groups": exact_groups,
             "verified_pairs": verified,
             "clusters": clusters,
             "spans": spans,
             "span_summary": summary,
-            "uniques": uniques,
         }

@@ -166,15 +166,18 @@ def with_signature(
     )
 
 
-def explode_bands(sig_df: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
-    """``(id, sig)`` -> ``(id, band_id, band_hash)`` — one row per band.
+def explode_bands(
+    sig_df: DataFrame, cfg: DedupConfig, id_col: str, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """``(id, sig)`` -> ``(id, band_id, band_hash)`` — one row per band,
+    plus the ``carry`` columns of ``sig_df`` on every row.
 
-    The subsequent ``groupBy(band_id, band_hash)`` *is* the reference's
+    The subsequent ``repartition(band_id, band_hash)`` *is* the reference's
     ``SF_NUM`` in-memory feature hash tables (``/root/reference/2df.c:458,
     501-516``): the shuffle materializes the same value->members mapping.
     """
     band = F.explode(F.sequence(F.lit(0), F.lit(cfg.n_bands - 1))).alias("band_id")
-    cols = [F.col(id_col), F.col("sig"), band]
+    cols = [F.col(id_col), F.col("sig"), band] + [F.col(c) for c in carry if c != "sig"]
     has_set = "shingle_set" in sig_df.columns
     if has_set:
         # carry the shingle-set size: candidate_pairs uses it for the early
@@ -196,7 +199,7 @@ def explode_bands(sig_df: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame
     ]
     if has_set:
         proj.append(F.col("n_set"))
-    return out.select(*proj)
+    return out.select(*proj, *carry)
 
 
 # ---------------------------------------------------------------------------

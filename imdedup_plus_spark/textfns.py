@@ -284,7 +284,7 @@ def simhash_pairs(
     banding loses nothing — this is an exact near-dup join, not
     approximate. Scale shape: identical to the MinHash LSH stage (one
     shuffle on band key, quadratic only within buckets), so the same
-    cap+salt treatment applies at 10^12 docs.
+    bucket-cap treatment applies at 10^12 docs.
     """
     bits_per = SIMHASH_PAIR_BITS // n_bands
     sh = simhash_sh(docs, id_col, text_col)

@@ -54,6 +54,7 @@ from . import clustering as CL
 from . import hygiene as HG
 from . import ordering as ORD
 from . import selection as SEL
+from . import signatures as S
 from . import textfns as T
 from . import trainprep as TP
 from .pipeline import CheckpointedPipeline
@@ -79,8 +80,8 @@ class TrainingPrepPipeline(CheckpointedPipeline):
         return dict(super()._key_fields(), n_shards=self.n_shards)
 
     def run_prep(self, docs: DataFrame) -> dict[str, DataFrame]:
-        """Run everything; returns the dedup frames plus ``keepers``,
-        ``verdict``, ``selected``, ``shards`` and ``packed``."""
+        """Run everything; returns the dedup frames plus ``valid``,
+        ``keepers``, ``verdict``, ``selected`` and ``shards``."""
         if dict(docs.dtypes)[self.id_col] in ("string", "binary"):
             raise ValueError(
                 "TrainingPrepPipeline needs a numeric id_col (ordering/"
@@ -88,7 +89,10 @@ class TrainingPrepPipeline(CheckpointedPipeline):
             )
         out = self.run(docs)
         idc = self.id_col
-        valid, clusters = out["valid"], out["clusters"]
+        if self.collapse_recrawls:
+            docs = self._load("recrawls")
+        valid = out["valid"] = S.valid_documents(docs, self.cfg)
+        clusters = out["clusters"]
 
         def _build_keepers() -> DataFrame:
             ql = T.quality_score(valid, idc).select(idc, "quality_permille")

@@ -32,7 +32,7 @@ Scale notes (100 TB):
   (map-side-combined count), keep only hashes with count >= threshold
   (a tiny fraction of the universe), and join BACK on the same hash —
   the join reuses the aggregation's hash partitioning, and AQE handles
-  hot boilerplate hashes (the exact skew the band lane salts against).
+  hot boilerplate hashes (the exact skew the band lane caps).
   The per-document interval merge is a window over O(tokens-per-doc)
   rows — never corpus-wide.
 * Decontamination's benchmark n-gram set is tiny (benchmarks are KBs,

@@ -4,9 +4,10 @@ the evidence trail that the engine produces the plans we claim
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -42,13 +43,11 @@ def main() -> None:
 
     sig_k = S.signature_kernel_arrow(docs, cfg, "doc_id")
     bands_k = S.explode_bands(sig_k, cfg, "doc_id")
-    ver_k = C.verify_pairs_kernel(
-        C.candidate_pairs(bands_k, cfg, "doc_id"), sig_k, cfg, "doc_id"
-    )
+    ver_k = C.verified_pairs(sig_k, cfg, "doc_id")
 
     import dataclasses
 
-    hotwin = C.candidate_pairs_hotwindow(
+    hotwin = C.candidate_pairs(
         bands_k, dataclasses.replace(cfg, hot_window=4), "doc_id"
     )
 
@@ -79,22 +78,6 @@ def main() -> None:
         c1, sig_k.where(~even("doc_id")).select("doc_id"), p2, "doc_id"
     )
 
-    import shutil
-
-    from imdedup_plus_spark import bucketing as BK
-
-    # fixed path, cleared per run — mkdtemp would leak a table copy into
-    # /tmp on every plan refresh
-    broot = "/tmp/plans_bucketed"
-    shutil.rmtree(broot, ignore_errors=True)
-    spark.sql("DROP TABLE IF EXISTS plans_sig_bucketed")
-    BK.write_bucketed(sig_k, "plans_sig_bucketed", f"{broot}/sig", "doc_id", 8)
-    sig_b = BK.read_bucketed(spark, "plans_sig_bucketed")
-    ver_b = C.verify_pairs_kernel(
-        C.candidate_pairs(S.explode_bands(sig_b, cfg, "doc_id"), cfg, "doc_id"),
-        sig_b, cfg, "doc_id",
-    )
-
     from imdedup_plus_spark import textfns as T
 
     members = (
@@ -114,17 +97,16 @@ def main() -> None:
     sections = [
         ("signatures (narrow map; scan must prune to doc_id,text)", sig),
         ("bands explode (still narrow)", bands),
-        ("candidate_pairs (window + self-join on band keys)", pairs),
+        ("candidate_pairs (ONE exchange on the band key + sortWithinPartitions feeds the mapInArrow bucket-run walker; one groupBy counts matching bands)", pairs),
         ("verify_pairs (two id joins + array_intersect)", ver),
         ("signatures, scale path (single ArrowEvalPython/mapInPandas over the pruned scan)", sig_k),
-        ("verify_pairs_kernel, scale path (shuffle_hash joins feed one mapInPandas; no per-row Python)", ver_k),
-        ("candidate_pairs_hotwindow (tiered: salted grid + rank-window union; hot rank is one window per band key)", hotwin),
+        ("verified_pairs, scale path (the band rows carry sig + shingle_set through ONE band-key exchange; the mapInArrow walker verifies every pair it emits; one groupBy counts verified bands; no id join of the signatures)", ver_k),
+        ("candidate_pairs hot_window=4 (the same walker: warm runs pair each member with its hot_window successors in (n_set, id) order; still one exchange + one groupBy)", hotwin),
         ("ivf_ann_topk (broadcast codebook cross-join; one exchange on cell_id)", ivf),
         ("asof_join (union-interleave: ONE exchange on key, window, no range join)", asof),
         ("cosine_topk_blocked (block cross-join feeds one mapInPandas; NO driver collect in the plan)", ann.cosine_topk_blocked(emb)),
         ("extract_byte_spans (two id joins attach payload hex; shuffle-free mapInPandas kernel)", BD.extract_byte_spans(BD.pair_payloads(pairs.select("id_a", "id_b"), docs, "doc_id"), cfg)),
         ("update_clusters (incremental fold: BroadcastHashJoin relabels the assignment — no corpus exchange; quotient CC is checkpoint-isolated upstream)", inc),
-        ("verify_pairs_kernel over the BUCKETED signature store (the stable wide side is never reshuffled: its scans expose the bucket HashPartitioning, Exchanges remain only on the pair side)", ver_b),
         ("distinct_shingle_estimate_kernel (KMV: mapInPandas bottom-k partials — <=k rows per chunk — then the only exchange is over the tiny partial set; the shingle universe is never shuffled)", M.distinct_shingle_estimate_kernel(sig_k)),
         ("cluster_keepers (argmax survivor per cluster: partial max_by aggregate BEFORE the exchange — a mega cluster ships one candidate row per task, NOT its membership — then ShuffledHashJoin join-back; NO per-cluster row_number window sort anywhere in the plan)", keepers),
         ("dup_span_stats (Lee-et-al duplicated spans: ONE exchange for the n-gram frequency agg — partial HashAggregate before it — then a ShuffledHashJoin building on the FILTERED dup-hash side; the gram stream is never broadcast or sorted — Catalyst's static estimate of the mapInPandas explode would otherwise broadcast it, the measured 8G-HashedRelation crash at 1.11M docs; ONE exchange+sort on id shared by BOTH island windows, per-doc aggs reuse the id partitioning)", TP.dup_span_stats(docs, "doc_id")),
@@ -136,7 +118,7 @@ def main() -> None:
         ("decontaminate, SQL form (per-doc distinct = array_distinct per-row fold: the corpus gram stream never shuffles; only benchmark-HIT grams reach the per-doc agg, final join is a narrow 3-scalar-column id shuffle — but the interpreted HOF folds anti-scale: abandoned after 40 min at 1.11M docs; kept as the oracle-shaped reference form)", TP.decontaminate(docs, "doc_id")),
         ("decontaminate_kernel, production path (benchmark gram set collected once — it is bounded by definition — and closed over the kernel; ONE mapInPandas over the pruned (id,text) scan, ZERO corpus exchanges)", TP.decontaminate_kernel(docs, "doc_id")),
         ("semantic_dedup_kernel (SemDeDup: ONE mapInPandas scores each Arrow batch against the codebook held inside the kernel — no n x n_cells row blowup, no JVM HOF folds; then ONE exchange on cell_id feeds the per-cell applyInPandas pairing; keeper fold is inside the same kernel, no join-back)", ann.semantic_dedup_kernel(emb)),
-        ("containment_pairs_kernel (UNPRUNED salted candidate grid + two shuffle_hash id joins feed one mapInPandas — the same physical shape as verify_pairs_kernel, different predicate; the pair side is never sorted)", C.containment_pairs_kernel(bands_k, sig_k, cfg, "doc_id")),
+        ("containment_pairs_kernel (UNPRUNED drop-only band walk + two shuffle_hash id joins feed one mapInPandas — the same physical shape as verify_pairs_kernel, different predicate; the pair side is never sorted)", C.containment_pairs_kernel(bands_k, sig_k, cfg, "doc_id")),
         ("bloom_decontaminate, SQL form (Bloom bitmap as ONE dense broadcast row crossJoined onto the per-doc gram fold: BroadcastNestedLoopJoin of a single row, per-row forall probes — ZERO corpus exchanges, not even the hit-id shuffle of the exact lane)", BF.bloom_decontaminate(docs, "doc_id")),
         ("bloom_decontaminate_kernel, production path (bitmap + exact gram array closed over ONE mapInPandas; vectorized probe; zero exchanges)", BF.bloom_decontaminate_kernel(docs, "doc_id")),
         ("pii_scrub (narrow per-row JVM regex projection over the pruned scan: no shuffle, no join, no Python)", HG.pii_scrub(docs, "doc_id")),

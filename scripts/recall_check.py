@@ -59,10 +59,7 @@ def main() -> None:
     idc = "__doc_key__"
     t0 = time.time()
     sig = S.signature_kernel_arrow(docs, SCALE_CONFIG, idc).persist()
-    bands = S.explode_bands(sig, SCALE_CONFIG, idc)
-    ver = C.verify_pairs_kernel(
-        C.candidate_pairs(bands, SCALE_CONFIG, idc), sig, SCALE_CONFIG, idc
-    ).localCheckpoint(eager=True)
+    ver = C.verified_pairs(sig, SCALE_CONFIG, idc).localCheckpoint(eager=True)
     clusters = CL.clusters_from_pairs(sig, ver, idc).persist()
     n_clustered = clusters.count()
     wall = time.time() - t0

@@ -8,9 +8,10 @@
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from imdedup_plus_spark import dirdedup as DD
 from imdedup_plus_spark.session import get_spark

@@ -2,8 +2,8 @@
 
 ``timed_pipeline`` is the corpus-scale dedup run that both scaling scripts
 time: xxhash64 surrogate key -> Arrow signature kernel (persisted) ->
-bands -> ``candidate_pairs`` -> ``verify_pairs_kernel`` (localCheckpoint)
--> connected components -> noop write. ``scaling_cluster.py`` runs it on
+``verified_pairs`` (bands -> candidates -> verify in one exchange,
+localCheckpoint) -> connected components -> noop write. ``scaling_cluster.py`` runs it on
 a standalone cluster at N and 4N executors; this script runs it at a
 FIXED cluster size (the default master: one task thread per CPU in the
 affinity mask) on a corpus and on 4x that corpus. The north rule's
@@ -71,10 +71,7 @@ def timed_pipeline(spark, corpus: str) -> dict:
     sig = S.signature_kernel_arrow(docs, CFG, idc).persist()
     sig.count()
     t1 = time.time()
-    bands = S.explode_bands(sig, CFG, idc)
-    ver = C.verify_pairs_kernel(
-        C.candidate_pairs(bands, CFG, idc), sig, CFG, idc
-    ).localCheckpoint(eager=True)
+    ver = C.verified_pairs(sig, CFG, idc).localCheckpoint(eager=True)
     n_ver = ver.count()
     t2 = time.time()
     cl = CL.clusters_from_pairs(sig, ver, idc)

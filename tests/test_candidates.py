@@ -1,9 +1,11 @@
-"""Candidate generation: cap semantics, salted pairing equivalence."""
+"""Candidate generation: cap semantics, the sorted bucket-run walker against
+independent references, verification kernels."""
 
 from __future__ import annotations
 
 from dataclasses import replace
 
+import pytest
 from pyspark.sql import functions as F
 
 from imdedup_plus_spark import candidates as C, signatures as S
@@ -22,13 +24,13 @@ def _bands(spark, n_docs=60):
     return S.explode_bands(sig, CFG, "doc_id")
 
 
-def test_salted_pairs_identical_to_direct(spark):
+def test_walker_pairs_identical_to_direct(spark):
     bands = _bands(spark)
     direct = C.candidate_pairs_direct(bands, CFG, "doc_id")
-    salted = C.candidate_pairs_salted(bands, CFG, "doc_id", split_threshold=8)
+    walked = C.candidate_pairs(bands, CFG, "doc_id")
     d = sorted(tuple(r) for r in direct.collect())
-    s = sorted(tuple(r) for r in salted.collect())
-    assert d == s
+    w = sorted(tuple(r) for r in walked.collect())
+    assert d == w
     assert len(d) > 0
 
 
@@ -49,17 +51,21 @@ def test_pair_orientation_canonical(spark):
     assert all(r.id_a < r.id_b for r in pairs)
 
 
-def test_salted_handles_mixed_bucket_sizes(spark):
-    # small buckets (g=1) and large buckets (g>1) in one frame
-    bands = _bands(spark, n_docs=70)
-    salted = C.candidate_pairs_salted(bands, CFG, "doc_id", split_threshold=16)
-    direct = C.candidate_pairs_direct(bands, CFG, "doc_id")
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, direct.collect()))
+def test_walker_handles_mixed_bucket_sizes(spark):
+    # small buckets and 70-member boilerplate buckets in one frame: at each
+    # cap the walker pairs exactly what the plain self-join pairs
+    bands = _bands(spark, n_docs=70).persist()
+    for cap in (4, 16, 100):
+        cfg = replace(CFG, bucket_cap=cap)
+        walked = C.candidate_pairs(bands, cfg, "doc_id")
+        direct = C.candidate_pairs_direct(bands, cfg, "doc_id")
+        assert sorted(map(tuple, walked.collect())) == sorted(map(tuple, direct.collect()))
+    bands.unpersist()
 
 
 def test_verify_kernel_matches_sql(spark, fixture_corpus):
     """SQL verify on ARRAY sets == numpy kernel verify on packed BINARY
-    sets — same candidates, bit-identical verified output."""
+    sets == the fused walk on ARRAY sets — bit-identical verified output."""
     from imdedup_plus_spark import signatures as S, candidates as C
     from imdedup_plus_spark.config import REFERENCE_CONFIG as CFG
 
@@ -75,12 +81,15 @@ def test_verify_kernel_matches_sql(spark, fixture_corpus):
         tuple(r) for r in C.verify_pairs_kernel(cand, sig_bin, CFG, "url").collect()
     )
     assert sql_rows == ker_rows
+    # the fused walk verifies ARRAY sets with the same arithmetic
+    fused_rows = sorted(tuple(r) for r in C.verified_pairs(sig_sql, CFG, "url").collect())
+    assert fused_rows == sql_rows
     cand.unpersist(); sig_sql.unpersist(); sig_bin.unpersist()
 
 
-def test_hotwindow_equals_salted_when_no_hot_buckets(spark, fixture_corpus):
+def test_hotwindow_equals_drop_only_when_no_hot_buckets(spark, fixture_corpus):
     """With a cap no bucket reaches, window pairing adds nothing — output
-    must equal the plain salted pairing row-for-row."""
+    must equal the drop-only pairing row-for-row."""
     import dataclasses
 
     from imdedup_plus_spark import signatures as S
@@ -89,14 +98,15 @@ def test_hotwindow_equals_salted_when_no_hot_buckets(spark, fixture_corpus):
     cfg = DedupConfig(bucket_cap=10**6, hot_window=8)
     docs = fixture_corpus.select("url", "text")
     bands = S.explode_bands(S.signature_kernel_arrow(docs, cfg, "url"), cfg, "url")
-    hw = sorted(tuple(r) for r in C.candidate_pairs_hotwindow(bands, cfg, "url").collect())
+    hw = sorted(tuple(r) for r in C.candidate_pairs(bands, cfg, "url").collect())
     plain = sorted(
         tuple(r)
-        for r in C.candidate_pairs_salted(
+        for r in C.candidate_pairs(
             bands, dataclasses.replace(cfg, hot_window=0), "url"
         ).collect()
     )
     assert hw == plain
+    assert len(plain) > 0
 
 
 def test_hotwindow_recovers_groups_in_hot_buckets(spark, fixture_corpus):
@@ -277,3 +287,176 @@ def test_empty_vs_empty_verify_accepts_in_all_three_forms(spark):
         f"CAST(len(list_intersect([], [])) AS BIGINT)) * {pct}"
     ).fetchone()
     assert dk is True
+
+
+# ---------------------------------------------------------------------------
+# The sorted bucket-run walker (candidate_pairs / verified_pairs)
+# ---------------------------------------------------------------------------
+
+def _walker_cfgs():
+    from imdedup_plus_spark.config import SCALE_CONFIG, DedupConfig
+
+    return [
+        CFG,
+        SCALE_CONFIG,
+        DedupConfig(bucket_cap=4, hot_window=4),
+        # warm buckets with hot_window=0: dropped, never windowed
+        DedupConfig(bucket_cap=4),
+    ]
+
+
+def _oracle_cand_pairs(docs_pdf, cfg):
+    """DuckDB replay of the pair rules (``oracle._cand_pairs_ctes``)."""
+    import duckdb
+
+    from imdedup_plus_spark import oracle
+
+    con = duckdb.connect()
+    con.register("documents", docs_pdf)
+    sql = oracle.stage_query(
+        cfg, "SELECT id_a, id_b, n_matching_bands FROM cand_pairs", id_col="url"
+    )
+    return sorted(con.execute(sql).fetchall())
+
+
+@pytest.mark.parametrize("batch_rows", [None, 7], ids=["default_batches", "batch7"])
+def test_walker_matches_independent_references(spark, fixture_corpus, batch_rows):
+    """``candidate_pairs`` equals the plain self-join (hot_window == 0) or
+    the DuckDB replay (hot_window > 0), and ``verified_pairs`` equals
+    ``verify_pairs_kernel(candidate_pairs(...))`` row for row. With 7-row
+    Arrow batches nearly every bucket run straddles a batch boundary."""
+    docs = fixture_corpus.select("url", "text")
+    docs_pdf = docs.toPandas()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    if batch_rows:
+        spark.conf.set(key, str(batch_rows))
+    try:
+        for cfg in _walker_cfgs():
+            sig = S.signature_kernel_arrow(docs, cfg, "url").persist()
+            bands = S.explode_bands(sig, cfg, "url")
+            cand = C.candidate_pairs(bands, cfg, "url").persist()
+            got = sorted(tuple(r) for r in cand.collect())
+            if cfg.hot_window == 0:
+                ref = sorted(
+                    tuple(r) for r in C.candidate_pairs_direct(bands, cfg, "url").collect()
+                )
+            else:
+                ref = _oracle_cand_pairs(docs_pdf, cfg)
+            assert got == ref, cfg
+            assert len(got) > 0
+            fused = sorted(tuple(r) for r in C.verified_pairs(sig, cfg, "url").collect())
+            chain = sorted(
+                tuple(r) for r in C.verify_pairs_kernel(cand, sig, cfg, "url").collect()
+            )
+            assert fused == chain, cfg
+            assert len(fused) > 0
+            cand.unpersist()
+            sig.unpersist()
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _run_bands(spark, runs):
+    """Band rows for ``{band_hash: n_members}`` in band 0, long ids, equal
+    set sizes; returns (frame, {band_hash: ids})."""
+    rows, members, nxt = [], {}, 0
+    for h, n in runs.items():
+        members[h] = list(range(nxt, nxt + n))
+        rows += [(i, 0, h, 10) for i in members[h]]
+        nxt += n
+    df = spark.createDataFrame(rows, "doc_id long, band_id int, band_hash long, n_set int")
+    return df, members
+
+
+def test_walker_drops_a_mega_run_longer_than_one_batch(spark):
+    """A run longer than mega_cap and than one Arrow batch is dropped while
+    streaming; the quiet and warm runs around it in the same partition
+    still pair by their rules."""
+    from imdedup_plus_spark.config import DedupConfig
+
+    bands, m = _run_bands(spark, {5: 3, 9: 30, 13: 6, 17: 1})
+    cfg = DedupConfig(bucket_cap=4, mega_cap=10, hot_window=2)
+    confs = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+        "spark.sql.shuffle.partitions": "1",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        windowed = sorted(tuple(r) for r in C.candidate_pairs(bands, cfg, "doc_id").collect())
+        dropped = sorted(
+            tuple(r)
+            for r in C.candidate_pairs(bands, replace(cfg, hot_window=0), "doc_id").collect()
+        )
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    quiet = [(a, b, 1) for i, a in enumerate(m[5]) for b in m[5][i + 1:]]
+    warm = [(a, b, 1) for i, a in enumerate(m[13]) for b in m[13][i + 1:i + 3]]
+    assert windowed == sorted(quiet + warm)
+    assert dropped == quiet
+
+
+def test_walker_string_ids_orient_by_code_point(spark):
+    """Members sort by (n_set, id) inside a run, so the pair orientation is
+    decided per pair; string ids compare like Spark's UTF-8 byte order."""
+    from imdedup_plus_spark.config import DedupConfig
+
+    ids = ["b", "a", "Z", "é", "aa"]
+    rows = [(d, 0, 1, 10 + i) for i, d in enumerate(ids)]
+    bands = spark.createDataFrame(rows, "url string, band_id int, band_hash long, n_set int")
+    cfg = DedupConfig(verify_jaccard_pct=0)
+    got = sorted(tuple(r) for r in C.candidate_pairs(bands, cfg, "url").collect())
+    want = sorted(
+        (min(x, y), max(x, y), 1) for i, x in enumerate(ids) for y in ids[i + 1:]
+    )
+    assert got == want
+    spark_order = sorted(
+        (r.id_a, r.id_b)
+        for r in bands.alias("a").join(bands.alias("b"), "band_hash")
+        .where("a.url < b.url").select(F.col("a.url").alias("id_a"), F.col("b.url").alias("id_b"))
+        .collect()
+    )
+    assert spark_order == [(a, b) for a, b, _ in want]
+
+
+def test_walker_empty_and_singleton_inputs(spark):
+    """No rows, and a partition of singleton buckets, emit nothing."""
+    from imdedup_plus_spark.config import SCALE_CONFIG
+
+    schema = "doc_id long, band_id int, band_hash long, n_set int"
+    empty = spark.createDataFrame([], schema)
+    assert C.candidate_pairs(empty, SCALE_CONFIG, "doc_id").collect() == []
+    singles = spark.createDataFrame([(i, 0, i, 10) for i in range(50)], schema)
+    assert C.candidate_pairs(singles, SCALE_CONFIG, "doc_id").collect() == []
+    sig_schema = "doc_id long, sig array<bigint>, shingle_set binary, n_set_true int"
+    no_sig = spark.createDataFrame([], sig_schema)
+    assert C.verified_pairs(no_sig, SCALE_CONFIG, "doc_id").collect() == []
+
+
+def test_verified_pairs_stage_job_count(spark, fixture_corpus, tmp_path):
+    """The pipeline's verified_pairs stage (bands -> walker -> groupBy ->
+    parquet commit) runs at most 5 Spark jobs."""
+    from imdedup_plus_spark.config import SCALE_CONFIG
+    from imdedup_plus_spark.pipeline import CheckpointedPipeline
+
+    sc = spark.sparkContext
+    pipe = CheckpointedPipeline(
+        spark, str(tmp_path / "w"), replace(SCALE_CONFIG, exact_prepass=True), id_col="url"
+    )
+    commit = pipe._commit
+
+    def grouped(stage, *args, **kw):
+        if stage == "verified_pairs":
+            sc.setJobGroup("verified_pairs_stage", "verified_pairs")
+        try:
+            return commit(stage, *args, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    pipe._commit = grouped
+    pipe.run(fixture_corpus.select("url", "text"))
+    jobs = sc.statusTracker().getJobIdsForGroup("verified_pairs_stage")
+    assert 0 < len(jobs) <= 5, jobs

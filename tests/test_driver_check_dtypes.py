@@ -15,11 +15,12 @@ representation. These tests pin the two defenses added in round 5:
 Run without Spark — DuckDB + pandas only.
 """
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts.driver_check import audit_oracle_types, cell, rowset
 

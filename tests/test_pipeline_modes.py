@@ -91,13 +91,12 @@ def test_short_doc_pairs_hot_bucket_bounded_and_connected(spark):
 
 
 def test_short_doc_pairs_quiet_bucket_above_split_threshold(spark):
-    """A quiet SimHash bucket larger than the salting threshold (so g=2)
-    still pairs fully: 70 identical short docs -> all 70*69/2 pairs."""
+    """A quiet SimHash bucket of 70 members (under a cap of 100) pairs
+    fully: 70 identical short docs -> all 70*69/2 pairs."""
     from dataclasses import replace as rep
 
     cfg = rep(CFG, short_doc_tokens=6, bucket_cap=100)
     s = 70
-    assert s > C.PAIR_SPLIT_THRESHOLD
     rows = [(i, "tiny dup text here") for i in range(s)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = C.short_doc_pairs(S.valid_documents(docs, cfg), cfg, "doc_id")
