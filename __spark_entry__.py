@@ -132,9 +132,7 @@ _QUERY_ORDER = [
     "dedup_exact_groups",
     "text_pii_scrub", "text_c4_filters",
     # CCNet LM-perplexity bucketing (lmquality.py) — NEW in round 4,
-    # third rotation: the slot came from dedup_embedding_cosine (the
-    # threshold-pair variant of the embedding family; its official rows
-    # are emb_lsh/emb_ivf/emb_semantic_dedup, r01-r03-green, now tail)
+    # third rotation
     "text_lm_quality",
     "text_lang_id", "text_simhash",
     # training-data prep (round 4, trainprep.py): cross-document
@@ -145,13 +143,11 @@ _QUERY_ORDER = [
     # stratified sampling, and sequence packing. ALL seven rotated INTO
     # the window in round 4 so every genuinely new operator holds an
     # official green row (the r03 verdict's never-checked critique).
-    # Displaced (all r03-official-green derived/variant lanes, ledger in
-    # BENCH/BASELINE.md §rotation): mm_jpeg_ycbcr_stats, mm_png_resize,
-    # dedup_candidate_pairs_hotwin, dedup_jpeg_dct_pairs, emb_cosine_topk,
-    # tpch_top_orders_per_segment, orders_monthly_revenue,
-    # dedup_simhash_pairs (derived band-join of the in-window
-    # text_simhash lane; displaced by text_repetition_stats, the Gopher
-    # intra-document repetition gate).
+    # Displaced (r03-official-green derived/variant lanes, ledger in
+    # BENCH/BASELINE.md §rotation): dedup_candidate_pairs_hotwin,
+    # dedup_jpeg_dct_pairs, dedup_simhash_pairs (derived band-join of the
+    # in-window text_simhash lane; displaced by text_repetition_stats,
+    # the Gopher intra-document repetition gate).
     "dedup_dup_span_stats", "dedup_dup_spans", "dedup_span_clean",
     "dedup_decontaminate",
     # Bloom-filter decontamination (bloom.py): the documented scale
@@ -160,9 +156,7 @@ _QUERY_ORDER = [
     "dedup_bloom_decontaminate",
     # Count-Min-sketch over-represented-gram detection (cms.py) — NEW in
     # round 4, third rotation: completes the sketch family (KMV=distinct,
-    # Bloom=membership, CMS=frequency); the slot came from mm_frame_sample
-    # (deterministic frame-sampling projection of the in-window multimodal
-    # decode lanes, r03-official-green, now tail)
+    # Bloom=membership, CMS=frequency)
     "corpus_cms_heavy_hitters",
     # Mergeable top-k gram summary with a certified two-sided count
     # bracket (topk.py — TPUT/threshold-algorithm partial sums over
@@ -188,8 +182,7 @@ _QUERY_ORDER = [
     "corpus_sample_stratified", "train_pack_chunks",
     # deterministic training-order shuffle (ordering.py — reproducible
     # shard + position per doc, epoch re-keyed permutation) — NEW in
-    # round 4, fifth rotation: the slot came from emb_lsh_ann_topk
-    # (r01-r03-official-green; the embedding family keeps two in-window
+    # round 4, fifth rotation (the embedding family keeps two in-window
     # rows via emb_ivf_ann_topk + emb_semantic_dedup)
     "train_shuffle_shards",
     # data-selection lanes (selection.py) — NEW in round 4, fourth
@@ -197,11 +190,10 @@ _QUERY_ORDER = [
     # UniMax language-budget waterfill (Chung et al. 2023), and the
     # per-document selection VERDICT (every gate's flag + the
     # first-failing-reason string — the pipeline's decision record, the
-    # corpus analog of the reference's per-file dedup result). The three
-    # slots came from mm_html_extract, mm_png_roundtrip and
-    # mm_wav_features (r01-r03-official-green media projections; the
-    # codec family keeps its in-window row via dedup_jpeg_dct_signatures
-    # below). Ledger: BENCH/BASELINE.md §rotation.
+    # corpus analog of the reference's per-file dedup result). One slot
+    # came from mm_html_extract (r01-r03-official-green; the codec family
+    # keeps its in-window row via dedup_jpeg_dct_signatures below).
+    # Ledger: BENCH/BASELINE.md §rotation.
     "corpus_dsir_select", "corpus_unimax_alloc", "corpus_select_verdict",
     # dataset card (per-language release summary over the verdict
     # composition + token/quality/PII columns) — NEW in round 4, sixth
@@ -232,23 +224,18 @@ _QUERY_ORDER = [
     # dedup_cdc_chunks), now in the tail. Rotation ledger:
     # BENCH/BASELINE.md §rotation.
     "web_domain_dup_stats", "dedup_cluster_keepers",
-    # embeddings / ANN (the IVF scale lane; the exact-cosine baseline is
-    # r01-r03-official-green in the tail, and emb_lsh_ann_topk rotated
-    # to the tail in the fifth round-4 rotation for train_shuffle_shards)
+    # embeddings / ANN (the IVF scale lane)
     # + SemDeDup — NEW in round 4: semantic dedup over IVF cells (coarse
     # k-means cell -> exact intra-cell cosine -> farthest keeper)
     "emb_ivf_ann_topk", "emb_semantic_dedup",
     # product-quantization ADC top-k (pq.py — Jegou et al. 2011: one-
     # BIGINT codes, 32x candidate compression, integer-micro asymmetric
     # distances; coarse stage = the seedless hyperplane buckets) — NEW
-    # in round 4, sixth rotation: the slot came from events_sessionize
-    # (r01-r03-official-green; its §2.2 streaming/stateful categories
-    # stay officially covered by the in-window events_windowed_counts,
-    # and the sessionization parity battery remains in pytest)
+    # in round 4, sixth rotation (the §2.2 streaming category is covered
+    # by the in-window events_windowed_counts)
     "emb_pq_ann_topk",
     # relational / temporal / streaming: one official row per §2.2
-    # category stays in-window (rollup covers grouped revenue; the
-    # segment-window demo and monthly projection are r03-green, tail)
+    # category stays in-window (rollup covers grouped revenue)
     "tpch_pricing_summary",
     "events_json_extract",
     "orders_rollup_revenue", "events_windowed_counts", "events_orders_asof",
@@ -270,14 +257,6 @@ _QUERY_ORDER = [
     # dedup_jpeg_dct_pairs: derived join over the in-window
     # dedup_jpeg_dct_signatures; r03-official-green, rotated out r4
     "dedup_jpeg_dct_pairs",
-    # emb_cosine_topk: TEST-ONLY exact O(n^2) baseline (contract-guarded);
-    # official-green in r01+r02+r03; its scale lanes (LSH/IVF) hold the
-    # in-window rows
-    "emb_cosine_topk",
-    # tpch_top_orders_per_segment / orders_monthly_revenue:
-    # r03-official-green relational variants; tpch_pricing_summary and
-    # orders_rollup_revenue keep the in-window rows for their categories
-    "tpch_top_orders_per_segment", "orders_monthly_revenue",
     # emb_ivf_cells: observability projection of the IVF codebook; the IVF
     # lane's official row is emb_ivf_ann_topk (in the window)
     "emb_ivf_cells",
@@ -293,10 +272,6 @@ _QUERY_ORDER = [
     # dedup_cdc_shared_chunks: fold of dedup_cdc_chunks (checked
     # in-window); r03-official-green, rotated out in round 4
     "dedup_cdc_shared_chunks",
-    # mm_png_resize / mm_jpeg_ycbcr_stats: r03-official-green variant
-    # projections of the in-window PNG/JPEG decode lanes, rotated out in
-    # round 4 for the trainprep flagships above
-    "mm_png_resize", "mm_jpeg_ycbcr_stats",
     # web_line_clean_stats / text_repetition_stats: r04-official-green,
     # rotated to the tail in round 5 for web_line_stats +
     # web_line_newline_stats (their folds replayed inside the in-window
@@ -306,22 +281,14 @@ _QUERY_ORDER = [
     # text_simhash lane; r01+r02+r03-official-green, rotated out in
     # round 4 for text_repetition_stats
     "dedup_simhash_pairs",
-    # third round-4 rotation tail (ledger: BENCH/BASELINE.md §rotation):
-    # dedup_embedding_cosine = threshold-pair variant of the in-window
-    # embedding lanes (emb_lsh/emb_ivf/emb_semantic_dedup),
-    # r01-r03-official-green; mm_frame_sample = frame-sampling projection
-    # of the in-window multimodal decode lanes, r03-official-green
-    "dedup_embedding_cosine", "mm_frame_sample",
     # fourth round-4 rotation tail (ledger: BENCH/BASELINE.md §rotation):
-    # mm_html_extract / mm_png_roundtrip / mm_wav_features —
-    # r01-r03-official-green media decode projections, rotated out for
-    # the selection.py lanes; the codec family's in-window row is
+    # mm_html_extract — r01-r03-official-green media projection, rotated
+    # out for the selection.py lanes; the codec family's in-window row is
     # dedup_jpeg_dct_signatures. dedup_cdc_chunks — green r01-r03,
     # rotated out for corpus_cluster_split; its rolling-hash arithmetic
     # remains officially exercised via the in-window CDC-anchored
     # dedup_byte_spans lane.
-    "mm_html_extract", "mm_png_roundtrip", "mm_wav_features",
-    "dedup_cdc_chunks",
+    "mm_html_extract", "dedup_cdc_chunks",
     # fifth round-4 rotation tail (ledger: BENCH/BASELINE.md §rotation):
     # dedup_lsh_bands — the band-explosion projection whose output is
     # the direct input of the in-window dedup_candidate_pairs join;
@@ -329,19 +296,12 @@ _QUERY_ORDER = [
     # dedup_byte_roundtrip_check — the byte lane's zero-mismatch
     # invariant fold (r01-r03-official-green), rotated out for
     # corpus_topk_grams; restore stays byte-exact-tested in pytest.
-    # emb_lsh_ann_topk — r01-r03-official-green, rotated out for
-    # train_shuffle_shards; the embedding family keeps emb_ivf_ann_topk
-    # + emb_semantic_dedup in-window
-    "dedup_lsh_bands", "dedup_byte_roundtrip_check", "emb_lsh_ann_topk",
-    # sixth round-4 rotation tail: events_sessionize (r01-r03-official-
-    # green; stateful sessionization parity stays pytest-gated, §2.2
-    # streaming row = events_windowed_counts), rotated out for
-    # emb_pq_ann_topk. emb_pq_codes — the encode stage in
-    # emb_pq_ann_topk's direct lineage, tail from birth.
-    # text_token_stats — r01-r03-official-green; its token-count
-    # arithmetic is replayed verbatim inside the in-window
-    # corpus_datacard oracle (qf CTE), rotated out for that card.
-    "events_sessionize", "emb_pq_codes", "text_token_stats",
+    "dedup_lsh_bands", "dedup_byte_roundtrip_check",
+    # sixth round-4 rotation tail: text_token_stats —
+    # r01-r03-official-green; its token-count arithmetic is replayed
+    # verbatim inside the in-window corpus_datacard oracle (qf CTE),
+    # rotated out for that card.
+    "text_token_stats",
 ]
 
 
@@ -583,10 +543,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # --- SimHash near-dup lane: banded hamming-<=3 pairing ---
     q["dedup_simhash_pairs"] = lambda spark, sf: T.simhash_pairs_kernel(_docs(spark, sf), ID)
 
-    # --- embedding-cosine near-dup lane (blocked distributed kernel: no
-    #     driver collect; O(n^2) exact baseline behind a size guard) ---
-    q["dedup_embedding_cosine"] = lambda spark, sf: ann.cosine_neardup_pairs_blocked(_emb(spark, sf))
-
     # --- multimodal binary-column lane (metadata over UTF-8 payload) ---
     q["mm_binary_metadata"] = lambda spark, sf: MM.text_binary_metadata(_docs(spark, sf), ID)
 
@@ -594,15 +550,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     entity-escaped payload, extractor must invert it (per-row
     #     invariant, the jpeg.c:16-122 lossless-decode analog) ---
     q["mm_html_extract"] = lambda spark, sf: MM.html_extract_roundtrip(_docs(spark, sf), ID)
-
-    # --- REAL image/video codec lane (png.py, stdlib-zlib PNG): synth
-    #     per-doc pixels -> encode (all 5 filters) -> decode -> stats;
-    #     oracle recomputes stats from the pixel arithmetic with NO codec,
-    #     so parity proves encode/inflate/unfilter/resize/container-parse
-    #     (CHECK_DECOMPRESS discipline, jpeg.c:583-603) ---
-    q["mm_png_roundtrip"] = lambda spark, sf: MM.png_roundtrip_stats(_docs(spark, sf), ID)
-    q["mm_png_resize"] = lambda spark, sf: MM.png_resize_stats(_docs(spark, sf), ID)
-    q["mm_frame_sample"] = lambda spark, sf: MM.frame_sample_stats(_docs(spark, sf), ID)
 
     # --- REAL JPEG codec lane (jpeg.py, from-scratch baseline JFIF —
     #     the reference's native domain, jpeg.c:16-122): synth pixels ->
@@ -613,14 +560,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     coefficients exactly ---
     q["mm_jpeg_dct_stats"] = lambda spark, sf: MM.jpeg_dct_stats(_docs(spark, sf), ID)
 
-    # --- 3-component YCbCr 4:2:0 JPEG lane — the reference's decode
-    #     predicate (jpeg.c:27-32 accepts exactly-3-component streams;
-    #     Y/U/V plane fill jpeg.c:38-76): synth RGB -> fixed-point color
-    #     convert + 4:2:0 subsample -> interleaved-MCU JFIF encode ->
-    #     decode to THREE quantized DCT planes -> per-plane stats; oracle
-    #     replays color convert + subsample + DCT + dual quant tables ---
-    q["mm_jpeg_ycbcr_stats"] = lambda spark, sf: MM.jpeg_ycbcr_stats(_docs(spark, sf), ID)
-
     # --- IMAGE dedup in DCT space — the reference's headline capability
     #     (2df.c feature stage over jpeg.c coefficient planes): MinHash
     #     signatures over quantized-DCT sample streams of a planted image
@@ -629,11 +568,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     arithmetic + shingle fold + permutations + band join in SQL ---
     q["dedup_jpeg_dct_signatures"] = lambda spark, sf: MM.jpeg_dct_signatures(_docs(spark, sf), ID)
     q["dedup_jpeg_dct_pairs"] = lambda spark, sf: MM.jpeg_dct_pairs(_docs(spark, sf), ID)
-
-    # --- REAL audio codec lane (wav.py, RIFF PCM): synth int16 samples ->
-    #     container write -> parse -> integer features; oracled the same
-    #     way (DuckDB recomputes features from the sample arithmetic) ---
-    q["mm_wav_features"] = lambda spark, sf: MM.wav_features(_docs(spark, sf), ID)
 
     # --- content-defined chunking lane (rabin/gear feature variants,
     #     2df.c:272-396): divisor-test boundaries over the shingle stream,
@@ -645,22 +579,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     # --- similarity search over embeddings ---
-    q["emb_cosine_topk"] = lambda spark, sf: ann.cosine_topk_blocked(_emb(spark, sf))
-    q["emb_lsh_ann_topk"] = lambda spark, sf: ann.lsh_ann_topk(_emb(spark, sf))
     # IVF-flat lane: deterministic coarse quantizer -> inverted lists ->
-    # nprobe probing (third ANN lane; see ann.ivf_ann_topk docstring)
+    # nprobe probing (see ann.ivf_ann_topk docstring)
     q["emb_ivf_ann_topk"] = lambda spark, sf: ann.ivf_ann_topk(_emb(spark, sf))
-
-    # --- product quantization (pq.py): encode = kernel production path
-    #     (codebook closed over one mapInPandas; bit-identical to the
-    #     Column/SQL forms, tests/test_pq.py); ADC top-k = the checked
-    #     compressed-domain scorer over the hyperplane buckets ---
-    def _pq_codes(spark, sf):
-        from imdedup_plus_spark import pq as PQm
-
-        return PQm.pq_encode_kernel(_emb(spark, sf))
-
-    q["emb_pq_codes"] = _pq_codes
 
     def _pq_ann(spark, sf):
         from imdedup_plus_spark import pq as PQm
@@ -693,49 +614,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["tpch_pricing_summary"] = _pricing
 
-    def _top_orders(spark, sf):
-        from pyspark.sql import Window
-
-        cust = spark.read.parquet(f"{sf}/customer.parquet")
-        orders = spark.read.parquet(f"{sf}/orders.parquet")
-        j = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        w = Window.partitionBy("c_mktsegment").orderBy(
-            F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-        )
-        return (
-            j.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select(
-                "c_mktsegment",
-                "o_orderkey",
-                F.round("o_totalprice", 2).alias("o_totalprice"),
-                F.col("rank").cast("int"),
-            )
-        )
-
-    q["tpch_top_orders_per_segment"] = _top_orders
-
-    def _sessions(spark, sf):
-        from pyspark.sql import Window
-
-        ev = spark.read.parquet(f"{sf}/events.parquet")
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-        prev = F.lag(us).over(w)
-        gap = F.when(
-            prev.isNull() | (us - prev > 1800 * 1_000_000), 1
-        ).otherwise(0)
-        marked = ev.withColumn("new_session", gap)
-        return (
-            marked.groupBy("user_id")
-            .agg(
-                F.sum("new_session").cast("long").alias("n_sessions"),
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-            )
-        )
-
-    q["events_sessionize"] = _sessions
-
     # --- semi-structured: JSON prop extraction over events ---
     def _json(spark, sf):
         ev = spark.read.parquet(f"{sf}/events.parquet")
@@ -745,21 +623,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["events_json_extract"] = _json
-
-    # --- temporal rollup: monthly revenue ---
-    def _monthly(spark, sf):
-        orders = spark.read.parquet(f"{sf}/orders.parquet")
-        return (
-            orders.groupBy(
-                F.to_date(F.date_trunc("month", F.col("o_orderdate"))).alias("month")
-            )
-            .agg(
-                F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-                F.count(F.lit(1)).cast("long").alias("n_orders"),
-            )
-        )
-
-    q["orders_monthly_revenue"] = _monthly
 
     # --- multi-level aggregation: ROLLUP with grouping id (§2.2 "no
     #     grouping sets in the reference"; the engine provides them) ---
@@ -1324,10 +1187,7 @@ def oracle_sql() -> dict[str, str]:
         "text_lang_id": T.lang_id_sql(ID),
         "text_simhash": T.simhash_sql(ID),
         "dedup_simhash_pairs": T.simhash_pairs_sql(ID),
-        "dedup_embedding_cosine": ann.cosine_neardup_pairs_sql(),
         "mm_binary_metadata": MM.text_binary_metadata_sql(ID),
-        "emb_cosine_topk": ann.cosine_topk_sql(),
-        "emb_lsh_ann_topk": ann.lsh_ann_topk_sql(),
         "tpch_pricing_summary": """
 SELECT l_returnflag, l_linestatus,
   round(sum(l_quantity), 2) AS sum_qty,
@@ -1337,33 +1197,9 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY 1, 2""",
-        "tpch_top_orders_per_segment": """
-SELECT c_mktsegment, o_orderkey, round(o_totalprice, 2) AS o_totalprice, rank FROM (
-  SELECT c.c_mktsegment, o.o_orderkey, o.o_totalprice,
-         CAST(row_number() OVER (PARTITION BY c.c_mktsegment
-              ORDER BY o.o_totalprice DESC, o.o_orderkey ASC) AS INT) AS rank
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-) WHERE rank <= 5""",
-        "events_sessionize": """
-WITH marked AS (
-  SELECT user_id,
-    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800 * 1000000
-         THEN 1
-         WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-         THEN 1 ELSE 0 END AS new_session
-  FROM events
-)
-SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM marked GROUP BY 1""",
         "events_json_extract": """
 SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS prop_k
 FROM events""",
-        "orders_monthly_revenue": """
-SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-       round(sum(o_totalprice), 2) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_orders
-FROM orders GROUP BY 1""",
         "emb_ivf_ann_topk": ann.ivf_ann_topk_sql(),
         "emb_ivf_cells": ann.ivf_cells_sql(),
         "emb_semantic_dedup": ann.semantic_dedup_sql(),
@@ -1421,14 +1257,9 @@ FROM (
         ),
         "dedup_byte_roundtrip_check": BD.byte_roundtrip_sql(CFG, id_col=ID),
         "mm_html_extract": MM.html_extract_roundtrip_sql(ID),
-        "mm_png_roundtrip": MM.png_roundtrip_sql(ID),
-        "mm_png_resize": MM.png_resize_sql(ID),
-        "mm_frame_sample": MM.frame_sample_sql(ID),
         "mm_jpeg_dct_stats": MM.jpeg_dct_sql(ID),
-        "mm_jpeg_ycbcr_stats": MM.jpeg_ycbcr_sql(ID),
         "dedup_jpeg_dct_signatures": MM.jpeg_signature_sql(ID),
         "dedup_jpeg_dct_pairs": MM.jpeg_pairs_sql(ID),
-        "mm_wav_features": MM.wav_features_sql(ID),
         "dedup_cdc_chunks": CH.cdc_stage_query(
             CFG,
             "SELECT id AS doc_id, chunk_id, chunk_hash, chunk_len FROM cdc_chunks",
@@ -1482,7 +1313,6 @@ FROM lcq JOIN rpq ON rpq.{ID} = lcq.{ID}""",
 
     from imdedup_plus_spark import pq as PQm
 
-    o["emb_pq_codes"] = PQm.pq_encode_sql()
     o["emb_pq_ann_topk"] = PQm.pq_ann_topk_sql()
     o["text_lm_quality"] = LQ.lm_quality_sql(ID)
     o["text_pii_scrub"] = (

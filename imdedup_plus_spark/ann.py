@@ -1,8 +1,12 @@
-"""Similarity search over embedding vectors.
+"""Similarity search and semantic dedup over embedding vectors.
 
-Brute-force cosine top-k as the correctness baseline, and a random-
-hyperplane LSH-bucketed variant as the scale path (the 100-TB plan: bucket
-first, pair only within buckets — same shape as the text LSH stage).
+IVF-flat top-k (a trained coarse quantizer + inverted lists + nprobe
+probing) is the scale path: bucket first, score only within the probed
+cells — the same shape as the text LSH stage. SemDeDup runs exact cosine
+inside each IVF cell. Brute-force cosine top-k (``cosine_topk``) is the
+exact reference the IVF recall tests compare against. The random-
+hyperplane bucket id (``hyperplane_bucket_expr``/``_sql``) is the coarse
+stage of the PQ lane (``pq.py``).
 
 Float determinism: dot products are computed as an ordered left fold over
 the vector elements after casting each element to DOUBLE. IEEE-754 double
@@ -51,9 +55,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force all-pairs cosine, top-k neighbors per vector.
 
-    O(n^2) — the correctness baseline. At scale use ``lsh_ann_topk``; the
-    judge-facing plan note: this stage exists to *oracle* the approximate
-    one, exactly as the reference's CHECK_DECOMPRESS oracles compression.
+    O(n^2) — the correctness baseline. At scale use ``ivf_ann_topk``;
+    this stage exists to *oracle* the approximate one, exactly as the
+    reference's CHECK_DECOMPRESS oracles compression.
     """
     # norms are per-vector: compute once before the quadratic join (same
     # left-fold order as the oracle, so doubles stay bit-identical).
@@ -107,44 +111,6 @@ def hyperplane_bucket_expr(vec_col: str, n_planes: int, dim: int = DIM) -> str:
     return " + ".join(terms)
 
 
-def lsh_ann_topk(
-    emb: DataFrame, k: int = 3, n_planes: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding", dim: int = DIM,
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane buckets, exact cosine within a
-    bucket. One shuffle on bucket id; pairing cost is sum of bucket^2 (the
-    buckets are balanced by construction — sign bits of near-orthogonal
-    planes)."""
-    e = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("bucket", F.expr(hyperplane_bucket_expr(vec_col, n_planes, dim)))
-        .withColumn("nrm", F.expr(_norm_expr(vec_col, dim)))
-        .where(F.col("nrm") > 0)  # cosine domain excludes zero-norm vectors
-    )
-    a = e.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("va"), "bucket",
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vb"), "bucket",
-        F.col("nrm").alias("nb"),
-    )
-    cos = f"round({_dot_expr('va', 'vb', dim)} / (na * nb), 6)"
-    pairs = (
-        a.join(b, "bucket")
-        .where(F.col("vec_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.expr(cos))
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("vec_id", "bucket", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle SQL
 # ---------------------------------------------------------------------------
@@ -158,31 +124,9 @@ def _dot_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def cosine_topk_sql(k: int = 3, dim: int = DIM, table: str = "embeddings") -> str:
-    cos = f"round({_dot_sql('a.embedding', 'b.embedding', dim)} / (a.nrm * b.nrm), 6)"
-    return f"""
-WITH e AS (
-  SELECT * FROM (
-    SELECT vec_id, embedding, sqrt({_dot_sql('embedding', 'embedding', dim)}) AS nrm
-    FROM {table}
-  ) WHERE nrm > 0
-),
-pairs AS (
-  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id, {cos} AS cosine
-  FROM e a CROSS JOIN e b
-  WHERE a.vec_id != b.vec_id
-),
-ranked AS (
-  SELECT vec_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY vec_id ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
-  FROM pairs
-)
-SELECT vec_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}"""
-
-
 def hyperplane_bucket_sql(vec_col: str, n_planes: int, dim: int = DIM) -> str:
     """DuckDB twin of ``hyperplane_bucket_expr`` (same K_INDEX sign
-    bits, same ordered fold) — shared by the LSH and PQ lanes."""
+    bits, same ordered fold) — the coarse stage of the PQ lane."""
     terms = []
     for j in range(n_planes):
         bits = K_INDEX[j]
@@ -197,43 +141,6 @@ def hyperplane_bucket_sql(vec_col: str, n_planes: int, dim: int = DIM) -> str:
             f"CASE WHEN {dot} >= 0 THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
         )
     return " + ".join(terms)
-
-
-def lsh_ann_topk_sql(k: int = 3, n_planes: int = 8, dim: int = DIM,
-                     table: str = "embeddings") -> str:
-    terms = []
-    for j in range(n_planes):
-        bits = K_INDEX[j]
-        signs = ", ".join(("1" if (bits >> d) & 1 else "-1") for d in range(dim))
-        dot = (
-            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, {dim}), i -> "
-            f"CAST(embedding[i] AS DOUBLE) * CAST([{signs}][i] AS DOUBLE))), "
-            f"(x, y) -> x + y)"
-        )
-        terms.append(
-            f"CASE WHEN {dot} >= 0 THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-        )
-    bucket = " + ".join(terms)
-    cos = f"round({_dot_sql('a.embedding', 'b.embedding', dim)} / (a.nrm * b.nrm), 6)"
-    return f"""
-WITH e AS (
-  SELECT * FROM (
-    SELECT vec_id, embedding, {bucket} AS bucket,
-           sqrt({_dot_sql('embedding', 'embedding', dim)}) AS nrm
-    FROM {table}
-  ) WHERE nrm > 0
-),
-pairs AS (
-  SELECT a.vec_id AS vec_id, a.bucket AS bucket, b.vec_id AS neighbor_id, {cos} AS cosine
-  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id != b.vec_id
-),
-ranked AS (
-  SELECT vec_id, bucket, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY vec_id ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
-  FROM pairs
-)
-SELECT vec_id, bucket, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}"""
 
 
 # ---------------------------------------------------------------------------
@@ -392,12 +299,12 @@ def ivf_ann_topk(
     codebook cell (inverted lists), probe the ``nprobe`` nearest cells per
     query, exact cosine only within probed lists.
 
-    The third ANN lane next to brute force (oracle) and hyperplane LSH:
-    candidate volume is sum over probes of |cell| instead of n — with
-    balanced cells the pairing join touches ``nprobe/n_cells`` of the
-    corpus per query. One shuffle on ``cell_id`` co-locates each inverted
-    list; each vector lands in exactly one list, so a (query, neighbor)
-    pair can only arise once — no post-join dedup needed.
+    The scale lane next to brute force (its oracle): candidate volume is
+    sum over probes of |cell| instead of n — with balanced cells the
+    pairing join touches ``nprobe/n_cells`` of the corpus per query. One
+    shuffle on ``cell_id`` co-locates each inverted list; each vector
+    lands in exactly one list, so a (query, neighbor) pair can only
+    arise once — no post-join dedup needed.
     """
     scored = _ivf_scored(emb, n_cells, id_col, vec_col, dim)
     assign = scored.where("cell_rank = 1").select(
@@ -537,399 +444,6 @@ ranked AS (
 SELECT vec_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}"""
 
 
-# the driver's embeddings are unplanted random vectors (max pairwise cosine
-# ~0.5 at sf0.01), so the near-dup threshold is set where the corpus has a
-# real, small tail — the operator semantics are threshold-parametric anyway
-NEARDUP_COSINE_PERMILLE = 400
-
-
-def cosine_neardup_pairs(
-    emb: DataFrame, threshold_permille: int = NEARDUP_COSINE_PERMILLE,
-    id_col: str = "vec_id", vec_col: str = "embedding", dim: int = DIM,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (a, b) with a < b and
-    cosine >= threshold. The embedding lane of the dedup suite (next to
-    exact / MinHash / SimHash / n-gram Jaccard).
-
-    This is the brute-force correctness form (O(n^2) cross join); the
-    100-TB path reuses the hyperplane buckets of ``lsh_ann_topk`` —
-    a cosine-0.9 pair flips few sign bits, so multi-probe over Hamming-1
-    bucket neighbors keeps recall while cutting the join to bucket-local.
-    Threshold compares round(cosine, 6) against permille/1000 so Spark and
-    the DuckDB oracle make the identical keep/drop decision at the
-    boundary.
-    """
-    e = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("nrm", F.expr(_norm_expr(vec_col, dim)))
-        .where(F.col("nrm") > 0)  # cosine domain excludes zero-norm vectors
-    )
-    a = e.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("nrm").alias("na")
-    )
-    b = e.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col("nrm").alias("nb")
-    )
-    cos = f"round({_dot_expr('va', 'vb', dim)} / (na * nb), 6)"
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.expr(cos))
-        .where(F.col("cosine") >= threshold_permille / 1000.0)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def cosine_neardup_pairs_sql(
-    threshold_permille: int = NEARDUP_COSINE_PERMILLE, dim: int = DIM,
-    table: str = "embeddings",
-) -> str:
-    cos = f"round({_dot_sql('a.embedding', 'b.embedding', dim)} / (a.nrm * b.nrm), 6)"
-    return f"""
-WITH e AS (
-  SELECT * FROM (
-    SELECT vec_id, embedding, sqrt({_dot_sql('embedding', 'embedding', dim)}) AS nrm
-    FROM {table}
-  ) WHERE nrm > 0
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine
-FROM e a CROSS JOIN e b
-WHERE a.vec_id < b.vec_id
-  AND {cos} >= {threshold_permille} / 1000.0"""
-
-
-# ---------------------------------------------------------------------------
-# Distributed brute-force lanes: blocked matrix kernels (no driver collect)
-# ---------------------------------------------------------------------------
-
-#: rows per block in the blocked cosine kernels — 1024 x 64 doubles = 512 KB
-#: per block side, so a block-pair task works on ~1 MB of vector data and a
-#: 1024^2 cosine matrix (8 MB), comfortably in-executor
-COSINE_BLOCK_ROWS = 1024
-#: hard guard for the shipped brute-force queries: O(n^2) compute is BY
-#: CONTRACT (the exact baseline that oracles the approximate lanes), but
-#: above this row count the right lane is lsh_ann_topk / ivf_ann_topk
-COSINE_BRUTE_FORCE_MAX_ROWS = 200_000
-
-
-def _blocked_vectors(
-    emb: DataFrame, id_col: str, vec_col: str, dim: int,
-    block_rows: int, max_rows: int,
-) -> DataFrame:
-    """One row per block: (blk, ids, nrms, flat) with ids ascending and
-    ``flat`` the row-major concatenation of the block's vectors.
-
-    The count() is a single driver scalar (not a data collect) used to fix
-    the block count; block membership is a deterministic id hash, so the
-    result set is independent of the blocking.
-    """
-    e = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("nrm", F.expr(_norm_expr(vec_col, dim)))
-        .where(F.col("nrm") > 0)  # cosine domain excludes zero-norm vectors
-    )
-    n = e.count()
-    if n > max_rows:
-        raise ValueError(
-            f"brute-force cosine over {n} rows exceeds the guard "
-            f"({max_rows}): O(n^2) compute is the exact-baseline contract; "
-            "use lsh_ann_topk / ivf_ann_topk at this scale"
-        )
-    n_blocks = max(1, -(-n // block_rows))
-    b = e.withColumn(
-        "blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
-    )
-    rows = b.groupBy("blk").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("id"),
-                    F.col(vec_col).alias("v"),
-                    F.col("nrm").alias("nr"),
-                )
-            )
-        ).alias("rows")
-    )
-    return rows.select(
-        "blk",
-        F.expr("transform(rows, r -> r.id)").alias("ids"),
-        F.expr("transform(rows, r -> r.nr)").alias("nrms"),
-        F.expr("flatten(transform(rows, r -> r.v))").alias("flat"),
-    )
-
-
-def _block_pairs(blocks: DataFrame) -> DataFrame:
-    """Upper-triangle block-pair rows (blk_a <= blk_b) — the shared
-    blocking contract of the two blocked cosine kernels: each task scores
-    one block against another (both directions from one matmul)."""
-    a = blocks.select(
-        F.col("blk").alias("blk_a"), F.col("ids").alias("ids_a"),
-        F.col("nrms").alias("nrms_a"), F.col("flat").alias("flat_a"),
-    )
-    b = blocks.select(
-        F.col("blk").alias("blk_b"), F.col("ids").alias("ids_b"),
-        F.col("nrms").alias("nrms_b"), F.col("flat").alias("flat_b"),
-    )
-    return a.crossJoin(b).where(F.col("blk_a") <= F.col("blk_b"))
-
-
-def _block_pair_frames(bp_pdf, dim: int):
-    """Decode one Arrow batch of block-pair rows into numpy and yield
-    (ids_a, nrm_a, Va, ids_b, nrm_b, Vb, cos) per row — cos computed with
-    the SAME ordered left fold over dims as the SQL ``aggregate`` (acc +=
-    a_i * b_i, i ascending; vectorized across pairs, order per pair
-    unchanged), then round(..., 6): bit-identical to the oracle."""
-    import numpy as np
-
-    for ids_a, nrms_a, flat_a, ids_b, nrms_b, flat_b in zip(
-        bp_pdf["ids_a"].values, bp_pdf["nrms_a"].values, bp_pdf["flat_a"].values,
-        bp_pdf["ids_b"].values, bp_pdf["nrms_b"].values, bp_pdf["flat_b"].values,
-    ):
-        ia = np.asarray(ids_a)
-        ib = np.asarray(ids_b)
-        na = np.asarray(nrms_a, dtype=np.float64)
-        nb = np.asarray(nrms_b, dtype=np.float64)
-        Va = np.asarray(flat_a, dtype=np.float64).reshape(len(ia), dim)
-        Vb = np.asarray(flat_b, dtype=np.float64).reshape(len(ib), dim)
-        acc = np.zeros((len(ia), len(ib)), dtype=np.float64)
-        for d in range(dim):
-            acc += Va[:, d][:, None] * Vb[:, d][None, :]
-        cos = np.round(acc / (na[:, None] * nb[None, :]), 6)
-        yield ia, na, Va, ib, nb, Vb, cos
-
-
-def cosine_topk_blocked(
-    emb: DataFrame, k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int = DIM, block_rows: int = COSINE_BLOCK_ROWS,
-    max_rows: int = COSINE_BRUTE_FORCE_MAX_ROWS,
-) -> DataFrame:
-    """Distributed brute-force top-k — identical values to ``cosine_topk``
-    (same fold order, tested), no driver-side data collect.
-
-    Plan: block the vectors (ceil(n/block_rows) groups), cross-join the
-    block rows (upper triangle only — each block-pair task scores BOTH
-    directions from one matmul), emit per-direction local top-k inside the
-    kernel, then one global window re-ranks the k * n_blocks candidates
-    per query. Compute is O(n^2 / block^2) vectorized matmul tasks spread
-    over the cluster; no single node ever holds more than two blocks.
-    """
-    import pandas as pd
-    from collections.abc import Iterator
-
-    blocks = _blocked_vectors(emb, id_col, vec_col, dim, block_rows, max_rows)
-    bp = _block_pairs(blocks)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out_v, out_n, out_c = [], [], []
-
-            def emit_topk(q_ids, c_ids, mat, same):
-                for r in range(mat.shape[0]):
-                    row = mat[r]
-                    if same:
-                        mask = c_ids != q_ids[r]
-                        cand_ids, cand_cos = c_ids[mask], row[mask]
-                    else:
-                        cand_ids, cand_cos = c_ids, row
-                    # SQL order: cosine DESC, neighbor_id ASC
-                    sel = np.lexsort((cand_ids, -cand_cos))[:k]
-                    out_v.extend([q_ids[r]] * len(sel))
-                    out_n.extend(cand_ids[sel])
-                    out_c.extend(cand_cos[sel])
-
-            for ia, _, _, ib, _, _, cos in _block_pair_frames(pdf, dim):
-                same = len(ia) == len(ib) and bool(np.array_equal(ia, ib))
-                emit_topk(ia, ib, cos, same)
-                if not same:
-                    emit_topk(ib, ia, cos.T, same)
-            yield pd.DataFrame(
-                {"vec_id": out_v, "neighbor_id": out_n,
-                 "cosine": pd.array(out_c, dtype="float64")}
-            )
-
-    id_type = emb.schema[id_col].dataType.simpleString()
-    cand = bp.mapInPandas(
-        fn, schema=f"vec_id {id_type}, neighbor_id {id_type}, cosine double"
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
-
-
-def cosine_neardup_pairs_blocked(
-    emb: DataFrame, threshold_permille: int = NEARDUP_COSINE_PERMILLE,
-    id_col: str = "vec_id", vec_col: str = "embedding", dim: int = DIM,
-    block_rows: int = COSINE_BLOCK_ROWS,
-    max_rows: int = COSINE_BRUTE_FORCE_MAX_ROWS,
-) -> DataFrame:
-    """Distributed twin of ``cosine_neardup_pairs`` (identical values, no
-    driver collect): upper-triangle block pairs, threshold filter
-    in-kernel, each unordered pair emitted exactly once (ids within a
-    block are sorted, so the diagonal block keeps the strict upper
-    triangle; off-diagonal pairs orient by least/greatest)."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    thr = threshold_permille / 1000.0
-    blocks = _blocked_vectors(emb, id_col, vec_col, dim, block_rows, max_rows)
-    bp = _block_pairs(blocks)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out_a, out_b, out_c = [], [], []
-            for ia, _, _, ib, _, _, cos in _block_pair_frames(pdf, dim):
-                same = len(ia) == len(ib) and bool(np.array_equal(ia, ib))
-                keep = cos >= thr
-                if same:
-                    keep &= np.triu(np.ones_like(keep, dtype=bool), k=1)
-                r_idx, c_idx = np.nonzero(keep)
-                lo = np.minimum(ia[r_idx], ib[c_idx])
-                hi = np.maximum(ia[r_idx], ib[c_idx])
-                out_a.extend(lo)
-                out_b.extend(hi)
-                out_c.extend(cos[r_idx, c_idx])
-            yield pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b,
-                 "cosine": pd.array(out_c, dtype="float64")}
-            )
-
-    id_type = emb.schema[id_col].dataType.simpleString()
-    return bp.mapInPandas(
-        fn, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
-    )
-
-
-def cosine_topk_kernel(
-    emb: DataFrame, k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int = DIM,
-) -> DataFrame:
-    """TEST-ONLY oracle kernel (driver-side collect + broadcast): kept for
-    parity tests against the SQL form and the blocked distributed kernel.
-    The shipped contract queries route through ``cosine_topk_blocked`` —
-    this one dies at scale by construction (driver materializes the
-    matrix) and must not be in a query path.
-
-    Each Arrow batch scores its rows against the broadcast matrix with the
-    SAME per-pair left-fold order as the SQL ``aggregate`` (acc += a_i *
-    b_i, i ascending — vectorized across pairs, order per pair unchanged),
-    so doubles are bit-identical; top-k selection happens in-kernel.
-    """
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    e = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("nrm", F.expr(_norm_expr(vec_col, dim)))
-        .where(F.col("nrm") > 0)  # cosine domain excludes zero-norm vectors
-    )
-    rows = e.collect()
-    all_ids = np.array([r[0] for r in rows])
-    V = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    all_nrm = np.array([r[2] for r in rows], dtype=np.float64)
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((all_ids, V, all_nrm))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, Vb, nrm_b = bc.value
-        order_ids = ids_b
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values])
-            na = pdf["nrm"].values.astype(np.float64)
-            acc = np.zeros((n, len(ids_b)), dtype=np.float64)
-            for i in range(A.shape[1]):
-                acc += A[:, i][:, None] * Vb[:, i][None, :]
-            cos = np.round(acc / (na[:, None] * nrm_b[None, :]), 6)
-            out_v, out_n, out_c, out_r = [], [], [], []
-            my_ids = pdf[id_col].values
-            for r in range(n):
-                row = cos[r]
-                mask = order_ids != my_ids[r]
-                cand_ids = order_ids[mask]
-                cand_cos = row[mask]
-                # SQL order: cosine DESC, neighbor_id ASC (lexsort: last
-                # key is primary)
-                sel = np.lexsort((cand_ids, -cand_cos))[:k]
-                for rank, j in enumerate(sel, start=1):
-                    out_v.append(my_ids[r])
-                    out_n.append(cand_ids[j])
-                    out_c.append(cand_cos[j])
-                    out_r.append(rank)
-            yield pd.DataFrame(
-                {"vec_id": out_v, "neighbor_id": out_n,
-                 "cosine": np.array(out_c, dtype=np.float64),
-                 "rank": np.array(out_r, dtype=np.int32)}
-            )
-
-    id_type = emb.schema[id_col].dataType.simpleString()
-    return e.mapInPandas(
-        fn,
-        schema=f"vec_id {id_type}, neighbor_id {id_type}, cosine double, rank int",
-    )
-
-
-def cosine_neardup_pairs_kernel(
-    emb: DataFrame, threshold_permille: int = NEARDUP_COSINE_PERMILLE,
-    id_col: str = "vec_id", vec_col: str = "embedding", dim: int = DIM,
-) -> DataFrame:
-    """TEST-ONLY oracle kernel (driver-side collect + broadcast) — same
-    caveat as ``cosine_topk_kernel``; the shipped query routes through
-    ``cosine_neardup_pairs_blocked``. Only the above-threshold pairs cross
-    the Arrow boundary."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    e = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("nrm", F.expr(_norm_expr(vec_col, dim)))
-        .where(F.col("nrm") > 0)  # cosine domain excludes zero-norm vectors
-    )
-    rows = e.collect()
-    all_ids = np.array([r[0] for r in rows])
-    V = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    all_nrm = np.array([r[2] for r in rows], dtype=np.float64)
-    bc = emb.sparkSession.sparkContext.broadcast((all_ids, V, all_nrm))
-    thr = threshold_permille / 1000.0
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, Vb, nrm_b = bc.value
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values])
-            na = pdf["nrm"].values.astype(np.float64)
-            acc = np.zeros((n, len(ids_b)), dtype=np.float64)
-            for i in range(A.shape[1]):
-                acc += A[:, i][:, None] * Vb[:, i][None, :]
-            cos = np.round(acc / (na[:, None] * nrm_b[None, :]), 6)
-            my_ids = pdf[id_col].values
-            keep = (my_ids[:, None] < ids_b[None, :]) & (cos >= thr)
-            r_idx, c_idx = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"id_a": my_ids[r_idx], "id_b": ids_b[c_idx],
-                 "cosine": cos[r_idx, c_idx]}
-            )
-
-    id_type = emb.schema[id_col].dataType.simpleString()
-    return e.mapInPandas(
-        fn, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
-    )
-
-
 # ---------------------------------------------------------------------------
 # SemDeDup: semantic dedup over IVF cells (Abbas et al. 2023, arXiv
 # 2303.09540) — the embedding-space member of the dedup suite, next to
@@ -938,10 +452,10 @@ def cosine_neardup_pairs_kernel(
 # coarse k-means cell -> exact intra-cell cosine.
 # ---------------------------------------------------------------------------
 
-#: same corpus-calibrated threshold as the cosine near-dup lane: the
-#: driver embeddings are unplanted random vectors, so the threshold sits
-#: where the corpus has a real, small tail (semantics are parametric)
-SEMDEDUP_COSINE_PERMILLE = NEARDUP_COSINE_PERMILLE
+#: the driver embeddings are unplanted random vectors (max pairwise
+#: cosine ~0.5 at sf0.01), so the threshold sits where the corpus has a
+#: real, small tail (semantics are parametric)
+SEMDEDUP_COSINE_PERMILLE = 400
 
 #: hard guard for the per-cell pairwise stage: a cell above this is the
 #: IVF skew case (hot cell) — the production knob is n_cells (SemDeDup

@@ -47,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import HASH_MOD, SHINGLE_MULT, DedupConfig
+from .config import HASH_MOD, OMIT_LOW_DELTA, SHINGLE_MULT, DedupConfig
 from .multimodal import wrapped_html_col, wrapped_html_sql
 from .suffix import suffix_spans
 
@@ -136,7 +136,7 @@ def extract_byte_spans(pair_hex: DataFrame, cfg: DedupConfig) -> DataFrame:
     chunk tokens (``min_copy=1``, ``joiner=""``); OMIT_LOW_DELTA applies to
     the matched *chunk* fraction with the same float comparison as the
     token lane."""
-    omit = cfg.omit_low_delta
+    omit = OMIT_LOW_DELTA
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -31,7 +31,7 @@ multipliers/offsets are derived as ``k mod P`` / ``b mod P`` with ``P =
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # --- verbatim from /root/reference/2df.c:36-72 ------------------------------
 K_INDEX = [
@@ -77,6 +77,11 @@ HASH_MOD = 2**31          # word / shingle hash domain
 PERM_P = 2**31 - 1        # Mersenne prime for the LCG permutations
 SHINGLE_MULT = 1000003    # polynomial combiner for shingle windows
 WORD_MULT = 31            # per-character polynomial multiplier
+
+#: minimum matched fraction before span extraction keeps a pair, analog of
+#: OMIT_LOW_DELTA (``/root/reference/idelta.c:403-419``); the token, byte
+#: and oracle span lanes all read this one value
+OMIT_LOW_DELTA = 0.001
 
 # --- KMV distinct-shingle estimator (metrics.distinct_shingle_estimate) -----
 # spreading permutation h = (A*s + B) mod PERM_P applied before the global
@@ -126,8 +131,6 @@ class DedupConfig:
                         volume drops 15.2M -> 5.6M (2.7x); true variant
                         groups are <= ~6 docs, so any cap far above that
                         only admits boilerplate bands.
-    ``omit_low_delta``: minimum matched fraction before span extraction,
-                        analog of OMIT_LOW_DELTA (``/root/reference/idelta.c:403-419``)
     """
 
     n_bands: int = 8
@@ -146,7 +149,6 @@ class DedupConfig:
     #: The early size-ratio prune keeps using TRUE set sizes (carried as a
     #: separate int), so its bound remains provable.
     verify_sketch_k: int = 0
-    omit_low_delta: float = 0.001
     #: FIX_OPTI analog (2df.c:477-494): collapse exact-duplicate texts to one
     #: representative BEFORE the LSH stages, then expand cluster ids back.
     #: Web corpora are 30-50% exact dups, so this removes a third of the

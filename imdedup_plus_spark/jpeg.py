@@ -3,10 +3,9 @@
 The reference dedups JPEGs by decoding them to quantized-DCT coefficient
 planes and sketching THOSE, never the pixels (``/root/reference/jpeg.c:
 16-122``; its whole two-stage design runs in DCT space). Round 1/2 had to
-stub this lane because no JPEG library exists in this container; this
-module removes the stub the same way ``png.py`` did for PNG: a complete
-from-scratch implementation of the public format, written from the
-ISO/IEC 10918-1 (ITU T.81) spec.
+stub this lane because no JPEG library was available; this module
+removes the stub with a complete from-scratch implementation of the
+public format, written from the ISO/IEC 10918-1 (ITU T.81) spec.
 
 Scope: baseline sequential DCT, 8-bit, grayscale (1 component) AND
 YCbCr 4:2:0 (3 components, the reference's decode predicate — it accepts
@@ -254,10 +253,6 @@ def _decode_tree(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]
     for sym, (code, length) in _build_codes(bits, vals).items():
         out[(length, code)] = sym
     return out
-
-
-_DC_TREE = _decode_tree(DC_BITS, DC_VALS)
-_AC_TREE = _decode_tree(AC_BITS, AC_VALS)
 
 
 def _rdiv(a: np.ndarray) -> np.ndarray:

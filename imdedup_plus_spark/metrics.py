@@ -1,4 +1,4 @@
-"""Global metrics fold + similarity histogram.
+"""Similarity histogram, distinct-shingle sketches and the ratio fold.
 
 Analog of the reference's result accounting: ratio/bandwidth fold
 (``/root/reference/main.c:412-501``, ``idedup.c:952-978``) and the 20-bin
@@ -23,40 +23,6 @@ def similarity_histogram(verified: DataFrame, n_perm: int, bins: int = 20) -> Da
         verified.select(bin_expr)
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    )
-
-
-def dedup_metrics(
-    docs: DataFrame,
-    valid: DataFrame,
-    verified: DataFrame,
-    clusters: DataFrame,
-    id_col: str,
-) -> DataFrame:
-    """One-row global fold: the engine's ``result6.txt`` analog."""
-    n_docs = docs.count()
-    n_valid = valid.count()
-    n_pairs = verified.count()
-    agg = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
-    n_clusters = agg.count()
-    n_dup_docs = (
-        agg.where(F.col("sz") > 1).agg(F.sum("sz").alias("s")).collect()[0]["s"] or 0
-    )
-    spark = docs.sparkSession
-    return spark.createDataFrame(
-        [
-            (
-                int(n_docs),
-                int(n_valid),
-                int(n_docs - n_valid),
-                int(n_pairs),
-                int(n_clusters),
-                int(n_dup_docs),
-                int(n_dup_docs - (n_valid - n_clusters)),  # representatives kept
-            )
-        ],
-        "n_docs long, n_valid long, n_rejected long, n_verified_pairs long, "
-        "n_clusters long, n_docs_in_dup_clusters long, n_dup_representatives long",
     )
 
 

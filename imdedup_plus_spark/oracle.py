@@ -17,7 +17,9 @@ Equivalences relied on (each covered by tests/test_oracle_parity.py):
 
 from __future__ import annotations
 
-from .config import HASH_MOD, PERM_P, SHINGLE_MULT, WORD_MULT, DedupConfig
+from .config import (
+    HASH_MOD, OMIT_LOW_DELTA, PERM_P, SHINGLE_MULT, WORD_MULT, DedupConfig,
+)
 from .signatures import WS_CLASS
 
 
@@ -333,7 +335,7 @@ def span_ctes(cfg: DedupConfig, pair_sel: str, id_col: str = "doc_id",
 
     if min_copy is None:
         min_copy = MIN_COPY_LEN
-    omit = cfg.omit_low_delta
+    omit = OMIT_LOW_DELTA
     cand = (
         "list_filter(generate_series(0, len(p.A) - 1), "
         "q -> p.A[q + 1] = p.B[s.i + 1])"

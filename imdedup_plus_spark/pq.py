@@ -1,15 +1,15 @@
 """Product quantization (IVF-ADC family): compressed-domain similarity
 search for the embedding corpus.
 
-The fourth ANN lane (after brute-force cosine, hyperplane LSH and
-IVF-flat — ann.py): Jegou, Douze & Schmid 2011, "Product quantization
-for nearest neighbor search". The 100 TB story is MEMORY, not compute:
-a 64-dim float vector is 256 bytes; its PQ code here is ONE BIGINT
-(M=8 subspaces x 4 bits), a 32x compression that turns the candidate
-side of every ANN join into a narrow integer column and lets a whole
-inverted list live in executor cache. Scoring is asymmetric distance
-(ADC): the raw query subvectors against the candidates' codebook
-reconstructions — no decompression, one table lookup per subspace.
+The compressed-domain ANN lane next to IVF-flat (ann.py): Jegou, Douze &
+Schmid 2011, "Product quantization for nearest neighbor search". The 100
+TB story is MEMORY, not compute: a 64-dim float vector is 256 bytes; its
+PQ code here is ONE BIGINT (M=8 subspaces x 4 bits), a 32x compression
+that turns the candidate side of every ANN join into a narrow integer
+column and lets a whole inverted list live in executor cache. Scoring is
+asymmetric distance (ADC): the raw query subvectors against the
+candidates' codebook reconstructions — no decompression, one table
+lookup per subspace.
 
 Determinism/oracle discipline (the ann.py k-means recipe, L2 flavor):
 
@@ -31,16 +31,14 @@ The ANN readout (``pq_ann_topk``) composes with the engine's seedless
 hyperplane LSH buckets (``ann.hyperplane_bucket_expr``) as the coarse
 stage — the standard bucket -> compressed-domain-score -> (optional
 exact re-rank) production pattern; the exact re-rank is ann.py's
-existing cosine lanes, deliberately not duplicated here.
+cosine scoring, deliberately not duplicated here.
 
 Scale notes (100 TB): training touches a bounded smallest-id sample
 (PQ_TRAIN_MAX); the codebook is M*ks = 128 rows, broadcast everywhere;
-encode is one narrow map over the corpus (kernel twin: vectorized
-numpy argmin, zero shuffle); the ADC join's candidate side carries
-(id, bucket, code) = 24 bytes/vector, and the per-pair cost is M
-lookups. The checked Column/SQL forms explode the M subspace rows and
-join the broadcast codebook (oracle-shaped); the kernel encode path is
-the production form for the corpus-sized side.
+encode explodes the M subspace rows and joins the broadcast codebook
+(oracle-shaped, no shuffle of the codebook); the ADC join's candidate
+side carries (id, bucket, code) = 24 bytes/vector, and the per-pair cost
+is M lookups.
 """
 
 from __future__ import annotations
@@ -58,16 +56,11 @@ PQ_SUB = DIM // PQ_M
 PQ_ITERS = 3
 #: bounded deterministic training sample (smallest ids)
 PQ_TRAIN_MAX = 4096
-#: coarse-stage hyperplane count for pq_ann_topk (ann.lsh_ann_topk's
-#: bucket geometry, reused verbatim)
+#: coarse-stage hyperplane count for pq_ann_topk (the seedless
+#: ann.hyperplane_bucket_expr geometry)
 PQ_N_PLANES = 8
 
 assert PQ_SUB * PQ_M == DIM and PQ_KS <= 16  # 4-bit codes
-
-
-def _sub_expr(vec: str, m: int) -> str:
-    """Spark: the m-th subvector (1-based slice)."""
-    return f"slice({vec}, {m * PQ_SUB + 1}, {PQ_SUB})"
 
 
 def _sub_sql(vec: str, m_var: str) -> str:
@@ -225,63 +218,6 @@ def pq_encode(
     )
 
 
-def pq_encode_kernel(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents=None,
-) -> DataFrame:
-    """SCALE-path twin: the trained codebook is closed over a single
-    ``mapInPandas`` pass (128 rows — the bounded-collect contract);
-    vectorized numpy argmin over (chunk, M, ks) distance tensors,
-    cache-resident 1024-row chunks, zero shuffle. Bit-identical to
-    ``pq_encode`` (parity-tested): the same round-6-then-micro
-    arithmetic, ties to the smallest code via argmin's first-hit rule
-    over the c-ascending axis."""
-    import numpy as np
-    import pandas as pd
-
-    if cents is None:
-        cents = train_pq_codebooks(emb, id_col=id_col, vec_col=vec_col)
-    cb = np.zeros((PQ_M, PQ_KS, PQ_SUB), dtype=np.float64)
-    for m, c, v in cents:
-        cb[m, c] = v
-
-    def fn(batches):
-        for pdf in batches:
-            ids = pdf[id_col].values
-            col = pdf[vec_col]
-            for lo in range(0, len(col), 1024):
-                chunk = col.iloc[lo : lo + 1024]
-                if not len(chunk):
-                    continue
-                X = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in chunk]
-                ).reshape(-1, PQ_M, 1, PQ_SUB)
-                # (n, M, ks) round-6 squared distances
-                d = np.round(((X - cb[None]) ** 2).sum(axis=3), 6)
-                codes = d.argmin(axis=2)  # first (smallest c) on ties
-                errs = np.round(
-                    np.take_along_axis(d, codes[..., None], 2)[..., 0]
-                    * 1e6
-                ).astype(np.int64)
-                packed = (
-                    codes.astype(np.int64)
-                    << (4 * np.arange(PQ_M, dtype=np.int64))[None]
-                ).sum(axis=1)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids[lo : lo + 1024],
-                        "pq_code": packed,
-                        "quant_err_micro": errs.sum(axis=1),
-                    }
-                )
-
-    return emb.select(id_col, vec_col).mapInPandas(
-        fn, schema=f"{id_col} long, pq_code long, quant_err_micro long"
-    )
-
-
 def pq_ann_topk(
     emb: DataFrame,
     k: int = 3,
@@ -430,17 +366,12 @@ codes AS (
 )"""
 
 
-def pq_encode_sql(table: str = "embeddings") -> str:
-    """DuckDB twin of ``pq_encode`` (training replayed in CTEs)."""
-    return f"""WITH {_pq_encode_ctes(table)}
-SELECT vec_id, pq_code, quant_err_micro FROM codes"""
-
-
 def pq_ann_topk_sql(
     k: int = 3, n_planes: int = PQ_N_PLANES, table: str = "embeddings"
 ) -> str:
     """DuckDB twin of ``pq_ann_topk`` — same bucket geometry
-    (ann.lsh bucket bits), code extraction and integer-micro ADC."""
+    (ann.hyperplane_bucket_sql bits), code extraction and integer-micro
+    ADC."""
     from .ann import hyperplane_bucket_sql
 
     bucket = hyperplane_bucket_sql("embedding", n_planes, DIM)

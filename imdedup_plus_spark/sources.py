@@ -51,9 +51,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: magic-prefix -> media_type, JVM-side (hex of the leading bytes).
-#: JPEG/PNG/RIFF-WAV match the real container magics the codec modules
-#: parse; FPNG is this repo's length-prefixed frame container
-#: (multimodal.pack_frames).
+#: JPEG/PNG/RIFF-WAV are the real container magics; FPNG marks a
+#: length-prefixed frame stream, which is binary, not text, even when
+#: its bytes happen to be valid UTF-8.
 _MAGIC_CASES = (
     ("FFD8FF", "jpeg"),
     ("89504E470D0A1A0A", "png"),

@@ -16,7 +16,7 @@ Recasts the reference's index+delta stages over token sequences:
   cross-algorithm twin (bit-identical at ``max_pos=inf``,
   tests/test_suffix.py) and for bounded-memory comparison;
 * OMIT_LOW_DELTA (``idelta.c:403-419``) -> drop pairs whose matched
-  fraction is below ``cfg.omit_low_delta``.
+  fraction is below ``config.OMIT_LOW_DELTA``.
 
 Execution shape: after the ``best_base`` join each (base, target) row is
 independent -> ``mapInPandas`` (Arrow-batched, no shuffle). At 100 TB the
@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import DedupConfig
+from .config import OMIT_LOW_DELTA, DedupConfig
 from .signatures import ascii_tokens
 from .suffix import suffix_spans
 
@@ -126,7 +126,7 @@ def extract_spans(pair_texts: DataFrame, cfg: DedupConfig,
     even on boilerplate-heavy pages where the greedy probe degrades.
     """
     min_copy = MIN_COPY_LEN
-    omit = cfg.omit_low_delta
+    omit = OMIT_LOW_DELTA
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -424,8 +424,8 @@ def incremental_dedup_batch(
         # parquet bytes (shingle_set alone 79%, KMV bottom-64 truncated;
         # untruncated stores skew further), so the supersede probe reads
         # ~a fifth of what an unpruned scan would.
-        # On a bucketed/Iceberg layout (bucketing.py) the same lookup is a
-        # bucket-local sorted probe instead of a scan.
+        # On a table bucketed by id (Iceberg ``bucket(N, id)``) the same
+        # lookup is a bucket-local sorted probe instead of a scan.
         bid_parts = [
             r[0]
             for r in sig_new.select(id_part(id_col).alias("p")).distinct().collect()
@@ -1274,163 +1274,4 @@ def windowed_event_counts(
             "event_type",
             "n_events",
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Custom stateful streaming operator: per-user sessionization via
-# applyInPandasWithState (arbitrary keyed state + event-time timeouts) —
-# the Structured Streaming pattern for operators windowed aggs can't
-# express. Twin of the batch `events_sessionize` gap rule (30-min gap).
-# ---------------------------------------------------------------------------
-
-SESSION_GAP_SECONDS = 1800
-
-_SESSION_OUT_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, n_events long"
-)
-_SESSION_STATE_SCHEMA = "start_us long, last_us long, n long"
-
-
-def sessionize_stream(
-    events: DataFrame,
-    gap_seconds: int = SESSION_GAP_SECONDS,
-    watermark_delay: str = "30 minutes",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming sessionizer with arbitrary keyed state: one state tuple
-    (session start/last/event count, microseconds) per user; a session
-    CLOSES — and is emitted, exactly once, in append mode — when
-
-    * a later event of the same user arrives more than ``gap_seconds``
-      after the session's last event (closed-by-successor, any batch), or
-    * the event-time watermark (max seen ts − ``watermark_delay``) passes
-      ``last + gap_seconds`` with no successor (closed-by-timeout, so idle
-      users don't pin state forever — the state-store analog of the
-      band-store eviction story).
-
-    Same gap rule as the batch ``events_sessionize`` query; parity is
-    pytest-gated (stream over file batches == batch sessions). In-watermark
-    out-of-order arrivals keep sorted-order semantics against the OPEN
-    session: events inside its span bump the count, earlier events extend
-    it backwards or form their own stray session when a full gap separates
-    them (the one unavoidable append-mode divergence: a straggler older
-    than a session that was already emitted cannot reopen it — the
-    watermark bounds how stale such an event can be).
-
-    Scale shape: state is partitioned by ``user_col`` (one shuffle), the
-    per-key state is three longs regardless of history length, and
-    timeouts bound state size by idleness — this is the pattern the
-    100 TB event stream needs, NOT a growing in-memory event buffer.
-    """
-    import pandas as pd
-
-    gap_us = gap_seconds * 1_000_000
-
-    def fn(key, pdfs, state):
-        def session_row(start_us: int, last_us: int, n: int):
-            return pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(last_us, unit="us")],
-                    "n_events": [n],
-                }
-            )
-
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield session_row(start_us, last_us, n)
-            return
-
-        ts_us = sorted(
-            int(t)
-            for pdf in pdfs
-            for t in pdf[ts_col].astype("datetime64[us]").astype("int64").values
-        )
-        if state.exists:
-            start_us, last_us, n = state.get
-            # In-watermark stragglers can arrive BEHIND the open session.
-            # Batch-gap-rule parity demands sorted-order semantics, so the
-            # batch splits around the open span [start_us, last_us]:
-            # events inside it only bump the count (they cannot open a
-            # gap), events before it sessionize among themselves and merge
-            # into the open session iff the chain reaches within the gap
-            # (a naive `last_us = t` would REGRESS session_end and split
-            # sessions the batch query keeps whole).
-            before = [t for t in ts_us if t < start_us]
-            n += sum(1 for t in ts_us if start_us <= t <= last_us)
-            after = [t for t in ts_us if t > last_us]
-            if before:
-                c_start, c_last, c_n = before[0], before[0], 1
-                for t in before[1:]:
-                    if t - c_last > gap_us:
-                        yield session_row(c_start, c_last, c_n)
-                        c_start, c_last, c_n = t, t, 1
-                    else:
-                        c_last, c_n = t, c_n + 1
-                if start_us - c_last > gap_us:
-                    # stray chain: a full gap still separates it from the
-                    # open session — it is its own (already-complete) session
-                    yield session_row(c_start, c_last, c_n)
-                else:
-                    start_us, n = c_start, n + c_n
-        else:
-            start_us, last_us, n = None, None, 0
-            after = ts_us
-        for t in after:
-            if last_us is None:
-                start_us, last_us, n = t, t, 1
-            elif t - last_us > gap_us:
-                yield session_row(start_us, last_us, n)
-                start_us, last_us, n = t, t, 1
-            else:
-                last_us, n = t, n + 1
-        if last_us is not None:
-            state.update((start_us, last_us, n))
-            # GroupState timestamps are epoch-millis
-            state.setTimeoutTimestamp(last_us // 1000 + gap_seconds * 1000)
-
-    return (
-        events.withWatermark(ts_col, watermark_delay)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_SESSION_OUT_SCHEMA,
-            stateStructType=_SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
-    )
-
-
-def run_sessionize_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap_seconds: int = SESSION_GAP_SECONDS,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain ``landing_dir`` (parquet event files) through the stateful
-    sessionizer with availableNow, appending closed sessions to
-    ``out_dir``. One file per micro-batch so cross-batch state transitions
-    (close-by-successor, close-by-timeout) actually happen in tests."""
-    schema = spark.read.parquet(landing_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    (
-        sessionize_stream(stream, gap_seconds=gap_seconds)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )

@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import HASH_MOD, SHINGLE_MULT, K_INDEX
-from .signatures import ascii_tokens, tokens_expr, word_hashes_expr
+from .config import HASH_MOD, SHINGLE_MULT
+from .signatures import tokens_expr, word_hashes_expr
 
 STOPWORDS = {
     "en": ("the", "a", "of", "and", "to", "in", "is", "for", "on", "that"),
@@ -29,7 +29,6 @@ STOPWORDS = {
     "es": ("el", "los", "y", "es", "en", "un", "una", "por", "para", "con"),
 }
 LANG_ORDER = ("en", "de", "fr", "es")
-PUNCT = ".,!?;:"
 SIMHASH_BITS = 32
 
 

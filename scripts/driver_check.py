@@ -37,8 +37,9 @@ def norm(v):
     if isinstance(v, _dt.date):
         # covers date / datetime / pd.Timestamp. The official gate equates
         # Spark DATE with DuckDB date_trunc's midnight TIMESTAMP
-        # (orders_monthly_revenue was hash-green in r1/r3 with exactly
-        # that shape), so canonicalize all temporals to one ISO string.
+        # (a monthly date_trunc rollup was hash-green in r1/r3 with
+        # exactly that shape), so canonicalize all temporals to one ISO
+        # string.
         if not isinstance(v, _dt.datetime):
             v = _dt.datetime(v.year, v.month, v.day)
         return v.isoformat()

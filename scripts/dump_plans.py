@@ -104,7 +104,6 @@ def main() -> None:
         ("candidate_pairs hot_window=4 (the same walker: warm runs pair each member with its hot_window successors in (n_set, id) order; still one exchange + one groupBy)", hotwin),
         ("ivf_ann_topk (broadcast codebook cross-join; one exchange on cell_id)", ivf),
         ("asof_join (union-interleave: ONE exchange on key, window, no range join)", asof),
-        ("cosine_topk_blocked (block cross-join feeds one mapInPandas; NO driver collect in the plan)", ann.cosine_topk_blocked(emb)),
         ("extract_byte_spans (two id joins attach payload hex; shuffle-free mapInPandas kernel)", BD.extract_byte_spans(BD.pair_payloads(pairs.select("id_a", "id_b"), docs, "doc_id"), cfg)),
         ("update_clusters (incremental fold: BroadcastHashJoin relabels the assignment — no corpus exchange; quotient CC is checkpoint-isolated upstream)", inc),
         ("distinct_shingle_estimate_kernel (KMV: mapInPandas bottom-k partials — <=k rows per chunk — then the only exchange is over the tiny partial set; the shingle universe is never shuffled)", M.distinct_shingle_estimate_kernel(sig_k)),
@@ -129,7 +128,6 @@ def main() -> None:
         ("dsir_model_counts_kernel (per-partition dense bucket-count partials from ONE mapInPandas pass: the exchange is bounded at tasks x DSIR_V rows regardless of corpus size)", SEL.dsir_model_counts_kernel(docs, "doc_id")),
         ("distinct_shingle_hll_kernel (HLL: mapInPandas register partials — <=m rows per task — merged by ONE bounded groupBy(j).max exchange; the register fold is a 512-row agg; the shingle universe is never shuffled, distinct-ed OR sorted — cheaper combine than even the KMV bottom-k's distinct+limit)", M.distinct_shingle_hll_kernel(sig_k)),
         ("topk_gram_bracket_kernel (mergeable top-k: chunked-numpy (g,h,c) partials with map-side combine; the per-group rank window partitions by the id-range group — BOUNDED partitions by construction, never a corpus-keyed window; after pruning the merge joins n_groups*k rows against the broadcast threshold table; the exact verification term reuses the same partials, no second corpus pass)", TK.topk_gram_bracket_kernel(docs, "doc_id")),
-        ("pq_encode_kernel (PQ codes: ONE mapInPandas over the pruned (id, vector) scan — the 128-row codebook lives in the closure, ZERO shuffle; output is 16 bytes/vector)", PQm.pq_encode_kernel(emb, cents=_pq_cents)),
         ("pq_ann_topk (ADC over hyperplane buckets: the candidate side is (id, bucket, code) — 24 bytes/vector, the raw neighbor vectors never join; per-pair M-row explode joins the BROADCAST codebook; one bucket-keyed exchange + the per-query rank window)", PQm.pq_ann_topk(emb, cents=_pq_cents)),
     ]
     out = ["# PLANS — formatted physical plans of the hot path\n"]

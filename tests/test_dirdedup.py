@@ -17,8 +17,6 @@ from imdedup_plus_spark import dirdedup as DD
 def corpus_dir(tmp_path_factory):
     """Arbitrary-byte corpus: near-dup text WITH newlines/punctuation
     (token-joining would NOT be byte-exact), exact dups, binaries."""
-    from imdedup_plus_spark.png import encode_png
-
     root = tmp_path_factory.mktemp("dircorpus")
     base = (
         "Chapter one.\n\nIt was a dark and stormy night; the rain fell\n"
@@ -37,7 +35,7 @@ def corpus_dir(tmp_path_factory):
     # exact duplicate of a BINARY payload
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, size=(12, 12)).astype(np.uint8)
-    png = encode_png(img)
+    png = b"\x89PNG\r\n\x1a\n" + img.tobytes()
     (root / "img1.png").write_bytes(png)
     (root / "img2.png").write_bytes(png)
     # unique text + unique binary + nested file

@@ -138,8 +138,9 @@ def test_no_hugeint_in_any_registered_oracle():
 
 def test_rowset_equates_date_and_midnight_timestamp():
     """The official gate equates Spark DATE with DuckDB date_trunc's
-    midnight TIMESTAMP (orders_monthly_revenue was hash-green in r1/r3
-    with that shape) — the mirror must not be stricter than the gate."""
+    midnight TIMESTAMP (a monthly date_trunc rollup was hash-green in
+    r1/r3 with that shape) — the mirror must not be stricter than the
+    gate."""
     import datetime as dt
 
     import pandas as pd
@@ -150,3 +151,42 @@ def test_rowset_equates_date_and_midnight_timestamp():
     # but a non-midnight timestamp differs from the date
     c = rowset(["m"], [(pd.Timestamp("1995-01-01 12:00:00"),)])
     assert a != c
+
+
+#: the driver checks only the first 50 entries of queries(), in order;
+#: this is the window as it stands, copied literally so that a deletion
+#: or insertion that shifts a checked query out of it fails here
+_WINDOW = [
+    "doc_filter_valid", "dedup_minhash_signatures", "dedup_candidate_pairs",
+    "dedup_verified_pairs", "dedup_containment_pairs", "dedup_best_base",
+    "dedup_unique_docs", "dedup_clusters", "dedup_incremental_clusters",
+    "dedup_global_metrics", "dedup_distinct_estimate", "dedup_hll_estimate",
+    "dedup_spans", "dedup_roundtrip_check", "dedup_byte_spans",
+    "web_recrawl_dedup", "dedup_exact_groups", "text_pii_scrub",
+    "text_c4_filters", "text_lm_quality", "text_lang_id", "text_simhash",
+    "dedup_dup_span_stats", "dedup_dup_spans", "dedup_span_clean",
+    "dedup_decontaminate", "dedup_bloom_decontaminate",
+    "corpus_cms_heavy_hitters", "corpus_topk_grams", "web_line_stats",
+    "web_line_newline_stats", "corpus_sample_stratified", "train_pack_chunks",
+    "train_shuffle_shards", "corpus_dsir_select", "corpus_unimax_alloc",
+    "corpus_select_verdict", "corpus_datacard", "corpus_cluster_split",
+    "dedup_jpeg_dct_signatures", "web_domain_dup_stats",
+    "dedup_cluster_keepers", "emb_ivf_ann_topk", "emb_semantic_dedup",
+    "emb_pq_ann_topk", "tpch_pricing_summary", "events_json_extract",
+    "orders_rollup_revenue", "events_windowed_counts", "events_orders_asof",
+]
+
+
+def test_driver_window_is_pinned():
+    """The first 50 queries are the checked window, name for name."""
+    import __spark_entry__ as E
+
+    assert list(E.queries())[:50] == _WINDOW
+
+
+def test_every_query_has_exactly_one_oracle():
+    """No query without an oracle and no oracle left behind by a deleted
+    query."""
+    import __spark_entry__ as E
+
+    assert set(E.oracle_sql()) == set(E.queries())

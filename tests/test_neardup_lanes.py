@@ -1,5 +1,5 @@
 """Semantic checks for the auxiliary near-dup lanes (SimHash banding,
-embedding cosine) beyond the bit-exact oracle parity tests."""
+IVF embedding search) beyond the bit-exact oracle parity tests."""
 
 from __future__ import annotations
 
@@ -50,21 +50,9 @@ def test_simhash_pairs_banding_is_exact(spark, fixture_corpus):
     assert bset == gset
 
 
-def test_cosine_neardup_threshold_and_symmetry(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pairs = ann.cosine_neardup_pairs(emb).collect()
-    assert pairs, "threshold should keep a non-empty tail on the testdata"
-    for r in pairs:
-        assert r.id_a < r.id_b
-        assert r.cosine >= ann.NEARDUP_COSINE_PERMILLE / 1000.0
-
-
 def test_kernel_twins_match_sql_forms(spark, fixture_corpus):
-    """numpy kernel twins produce bit-identical rows to the SQL forms."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = sorted(tuple(r) for r in ann.cosine_topk(emb).collect())
-    b = sorted(tuple(r) for r in ann.cosine_topk_kernel(emb).collect())
-    assert a == b
+    """The numpy SimHash pair kernel produces bit-identical rows to the
+    SQL form."""
     docs = fixture_corpus.select(F.col("url").alias("doc_id"), "text").limit(150)
     c = sorted(tuple(r) for r in T.simhash_pairs(docs, "doc_id").collect())
     d = sorted(tuple(r) for r in T.simhash_pairs_kernel(docs, "doc_id").collect())
@@ -103,30 +91,6 @@ def test_ivf_ann_structure_and_recall(spark):
     # inverted lists partition the corpus
     cells = ann.ivf_cells(emb).collect()
     assert sum(r.cell_size for r in cells) == n
-
-
-def test_blocked_cosine_kernels_match_sql_forms(spark):
-    """The DISTRIBUTED brute-force kernels (shipped contract queries — no
-    driver collect) are bit-identical to the SQL forms, with a block size
-    small enough to force many block-pairs (upper triangle + both-direction
-    emission + global re-rank all exercised)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = sorted(tuple(r) for r in ann.cosine_topk(emb).collect())
-    b = sorted(tuple(r) for r in ann.cosine_topk_blocked(emb, block_rows=7).collect())
-    assert a == b
-    c = sorted(tuple(r) for r in ann.cosine_neardup_pairs(emb).collect())
-    d = sorted(
-        tuple(r) for r in ann.cosine_neardup_pairs_blocked(emb, block_rows=7).collect()
-    )
-    assert c == d
-
-
-def test_blocked_cosine_size_guard(spark):
-    import pytest
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with pytest.raises(ValueError, match="guard"):
-        ann.cosine_topk_blocked(emb, max_rows=3).collect()
 
 
 def test_ivf_trained_codebook_recall_on_planted_clusters(spark):

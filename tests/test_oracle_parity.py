@@ -19,9 +19,7 @@ KEYS = [
     "dedup_clusters",
     "dedup_global_metrics",
     "text_simhash",
-    "emb_cosine_topk",
     "dedup_simhash_pairs",
-    "dedup_embedding_cosine",
     "mm_binary_metadata",
     "emb_ivf_ann_topk",
     "emb_ivf_cells",

@@ -17,8 +17,6 @@ def raw_dir(tmp_path_factory):
     """A mixed-media input directory: text, JPEG, PNG, WAV, junk, plus a
     nested subdir (the reference's two-level layout, idedup.c:94-100)."""
     from imdedup_plus_spark.jpeg import encode_jpeg
-    from imdedup_plus_spark.png import encode_png
-    from imdedup_plus_spark.wav import encode_wav
 
     root = tmp_path_factory.mktemp("rawcorpus")
     (root / "a.txt").write_text("the quick brown fox jumps over the lazy dog")
@@ -26,9 +24,11 @@ def raw_dir(tmp_path_factory):
     rng = np.random.default_rng(7)
     img = (rng.integers(0, 256, size=(16, 16))).astype(np.uint8)
     (root / "img.jpg").write_bytes(encode_jpeg(img))
-    (root / "img.png").write_bytes(encode_png(img))
+    # classification reads only the container magic: the PNG signature
+    # and a RIFF/WAVE header ahead of raw samples
+    (root / "img.png").write_bytes(b"\x89PNG\r\n\x1a\n" + img.tobytes())
     (root / "tone.wav").write_bytes(
-        encode_wav((np.sin(np.arange(256) / 5) * 3000).astype(np.int16))
+        b"RIFF\x24\x02\x00\x00WAVEfmt " + img.tobytes()
     )
     (root / "junk.bin").write_bytes(b"\x00\xfe\xff garbage not utf8 \xc3\x28")
     sub = root / "nested"

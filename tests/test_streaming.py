@@ -399,117 +399,6 @@ def test_incremental_probe_is_partition_pruned(spark, fixture_corpus, tmp_path):
         assert any(f"bh_part={t}/" in f for t in touched)
 
 
-def _batch_sessions(ev_df, gap_seconds=1800):
-    """Ground-truth sessions (start_us, last_us, n) per user via the same
-    gap rule as the batch events_sessionize query."""
-    rows = sorted(
-        (r["user_id"], int(r["us"]))
-        for r in ev_df.select(
-            "user_id", F.unix_micros(F.col("ts")).alias("us")
-        ).collect()
-    )
-    out, cur = {}, {}
-    gap_us = gap_seconds * 1_000_000
-    for uid, us in rows:
-        st = cur.get(uid)
-        if st is None or us - st[1] > gap_us:
-            if st is not None:
-                out.setdefault(uid, []).append(tuple(st))
-            cur[uid] = [us, us, 1]
-        else:
-            cur[uid][1] = us
-            cur[uid][2] += 1
-    open_sessions = {u: tuple(s) for u, s in cur.items()}
-    return out, open_sessions
-
-
-def _collected_sessions(spark, out_dir):
-    return {
-        (r["user_id"], int(r["su"]), int(r["eu"]), r["n_events"])
-        for r in spark.read.parquet(out_dir)
-        .select(
-            "user_id",
-            F.unix_micros("session_start").alias("su"),
-            F.unix_micros("session_end").alias("eu"),
-            "n_events",
-        )
-        .collect()
-    }
-
-
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """Sentinel-closure parity: a far-future event per user forces every
-    real session closed, so the streamed closed-session set must equal
-    the batch gap-rule sessions exactly (sentinel sessions stay open and
-    unemitted)."""
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    for uid in range(6):
-        t = base + dt.timedelta(minutes=uid * 7)
-        for s in range(1 + uid % 3):          # sessions per user
-            for k in range(1 + (uid + s) % 4):  # events per session
-                rows.append((eid, t, uid))
-                eid += 1
-                t += dt.timedelta(minutes=5)
-            t += dt.timedelta(minutes=31)     # > gap -> next session
-    ev = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long")
-    sentinel = spark.createDataFrame(
-        [(10_000 + u, base + dt.timedelta(days=30), u) for u in range(6)],
-        "event_id long, ts timestamp, user_id long",
-    )
-    landing = str(tmp_path / "landing")
-    # 3 real files + sentinel file -> 4 micro-batches, state crosses batches
-    for i, part in enumerate([ev.where("user_id % 3 = 0"),
-                              ev.where("user_id % 3 = 1"),
-                              ev.where("user_id % 3 = 2")]):
-        part.coalesce(1).write.parquet(landing, mode="append")
-    sentinel.coalesce(1).write.parquet(landing, mode="append")
-
-    out, ckpt = str(tmp_path / "sessions"), str(tmp_path / "ckpt")
-    ST.run_sessionize_stream(spark, landing, out, ckpt)
-
-    expected_closed, _open = _batch_sessions(ev)
-    want = {
-        (uid, s[0], s[1], s[2]) for uid, ss in expected_closed.items() for s in ss
-    }
-    # every real (non-sentinel) session has a sentinel successor -> closed
-    for uid, s in _batch_sessions(ev)[1].items():
-        want.add((uid, s[0], s[1], s[2]))
-    assert _collected_sessions(spark, out) == want
-
-
-def test_sessionize_stream_timeout_closes_idle_user(spark, tmp_path):
-    """Close-by-timeout: user 1's only session ends early; a later batch
-    of OTHER users' events advances the watermark past start+gap+delay,
-    so the idle session must be emitted without any successor event."""
-    import datetime as dt
-
-    base = dt.datetime(2024, 6, 1)
-    f1 = spark.createDataFrame(
-        [(1, base, 1), (2, base + dt.timedelta(minutes=5), 1)],
-        "event_id long, ts timestamp, user_id long",
-    )
-    f2 = spark.createDataFrame(
-        [(3, base + dt.timedelta(hours=6), 2)],
-        "event_id long, ts timestamp, user_id long",
-    )
-    f3 = spark.createDataFrame(
-        [(4, base + dt.timedelta(hours=12), 2)],
-        "event_id long, ts timestamp, user_id long",
-    )
-    landing = str(tmp_path / "landing")
-    for part in (f1, f2, f3):
-        part.coalesce(1).write.parquet(landing, mode="append")
-    out, ckpt = str(tmp_path / "sessions"), str(tmp_path / "ckpt")
-    ST.run_sessionize_stream(spark, landing, out, ckpt)
-    got = _collected_sessions(spark, out)
-    su = int(base.timestamp() * 1_000_000)
-    assert (1, su, su + 300 * 1_000_000, 2) in got
-
-
 # --- incremental cluster maintenance over the streaming state -----------
 
 
