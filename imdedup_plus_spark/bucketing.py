@@ -16,9 +16,9 @@ catalog notes), and the streaming band store's ``bh_part``/``id_part``
 dirs are the same idea enforced manually for partition-pruned *reads*.
 
 The reference has no analog — its feature tables are in-heap hashmaps
-rebuilt per batch (``/root/reference/2df.c:458-516``); bucketing is what
-replaces "rebuild the hashmap" when the index is a table that outlives
-any single job.
+rebuilt per batch; bucketing is what replaces "rebuild the hashmap" when
+the index is a table that outlives any single job. No pipeline stage
+calls this module yet; ``tests/test_bucketing.py`` is its only consumer.
 
 Bucket-count sizing: buckets are fixed at write time and every reader
 task maps 1:1 to a bucket, so size for the LARGEST downstream join's

@@ -1,22 +1,16 @@
 """Minimal real WAV (RIFF PCM) codec — pure stdlib ``struct`` + ``numpy``.
 
-The audio leg of the multimodal lane, sibling of ``png.py``: WAV
-(RIFF/WAVE, a public Microsoft/IBM format) is a chunked container around
-raw PCM samples, so a correct parser needs nothing beyond the standard
-library. Supported: 16-bit signed little-endian PCM, mono or interleaved
-multi-channel, ``fmt `` + ``data`` chunks (unknown chunks are skipped,
-per the RIFF rule). Anything else (float PCM, ADPCM, 8/24-bit) raises
-``ValueError``.
+WAV (RIFF/WAVE, a public Microsoft/IBM format) is a chunked container
+around raw PCM samples, so a correct parser needs nothing beyond the
+standard library. Supported: 16-bit signed little-endian PCM, mono or
+interleaved multi-channel, ``fmt `` + ``data`` chunks (unknown chunks are
+skipped, per the RIFF rule). Anything else (float PCM, ADPCM, 8/24-bit)
+raises ``ValueError``.
 
-Decode correctness is machine-checked like the PNG lane: encode->decode
-identity in ``tests/test_wav.py``, and the ``mm_wav_features`` driver
-query derives per-doc samples from integer arithmetic, round-trips them
-through THIS codec, and emits integer features that the DuckDB oracle
-recomputes straight from the arithmetic — parity proves the container
-writer and parser.
-
-Scale shape: driver-free, runs inside Arrow-batched ``mapInPandas``
-kernels (``multimodal.decode_audio``), one clip per row, no shuffle.
+Decode correctness is checked by encode->decode identity, a golden header
+layout, chunk skipping and rejection cases in ``tests/test_wav.py``. No
+pipeline stage or driver query calls this module; it is a candidate for
+deletion (ROADMAP item 6).
 """
 
 from __future__ import annotations

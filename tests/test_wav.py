@@ -1,5 +1,5 @@
 """WAV codec: encode->decode identity, golden header, chunk skipping,
-corruption/unsupported rejection, and the Spark audio-feature path."""
+corruption/unsupported rejection."""
 
 from __future__ import annotations
 
@@ -56,16 +56,3 @@ def test_rejects_bad_and_unsupported():
     with pytest.raises(ValueError):
         encode_wav(samples.astype(np.int32), 8000)
 
-
-def test_wav_features_spark(spark, sf001_docs):
-    """Spark audio lane vs an in-driver recomputation from the formula."""
-    from imdedup_plus_spark import multimodal as MM
-
-    rows = MM.wav_features(sf001_docs.limit(6), "doc_id").collect()
-    assert len(rows) == 6
-    for r in rows:
-        s = MM.synth_samples(int(r["doc_id"])).astype(np.int64)
-        assert r.n_samples == s.size
-        assert r.amp_sum == int(s.sum())
-        neg = s < 0
-        assert r.zero_crossings == int(np.count_nonzero(neg[1:] != neg[:-1]))
