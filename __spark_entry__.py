@@ -414,7 +414,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _docs(spark, sf)
         best = C.best_base(_verified(spark, sf))
         ptx = SP.pair_texts_from_best_base(best, docs, ID)
-        return SP.extract_spans(ptx, CFG)
+        return SP.extract_spans(ptx)
 
     q["dedup_spans"] = _spans
     q["dedup_span_summary"] = lambda spark, sf: SP.span_summary(_spans(spark, sf))
@@ -469,7 +469,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sig = _sig(spark, sf)
         ver = _verified(spark, sf)
         cl = CL.clusters_from_pairs(sig, ver, ID)
-        spans = SP.extract_spans(SP.pair_texts_from_clusters(cl, docs, ID), CFG)
+        spans = SP.extract_spans(SP.pair_texts_from_clusters(cl, docs, ID))
         rec = SP.reconstruct_targets(spans, docs, ID)
         chk = rec.join(docs.select(F.col(ID).alias("id_b"), "text"), "id_b")
         return chk.select(
@@ -488,7 +488,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pairs = best.select(
             F.col("base_id").alias("id_a"), F.col("target_id").alias("id_b")
         )
-        return BD.extract_byte_spans(BD.pair_payloads(pairs, docs, ID), CFG)
+        return BD.extract_byte_spans(BD.pair_payloads(pairs, docs, ID))
 
     q["dedup_byte_spans"] = _byte_spans
     q["dedup_byte_summary"] = lambda spark, sf: BD.byte_span_summary(
@@ -503,7 +503,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pairs = cl.where(F.col(ID) != F.col("cluster_id")).select(
             F.col("cluster_id").alias("id_a"), F.col(ID).alias("id_b")
         )
-        spans = BD.extract_byte_spans(BD.pair_payloads(pairs, docs, ID), CFG)
+        spans = BD.extract_byte_spans(BD.pair_payloads(pairs, docs, ID))
         return BD.byte_roundtrip_check(spans, docs, ID)
 
     q["dedup_byte_roundtrip_check"] = _byte_roundtrip

@@ -129,7 +129,7 @@ def pair_payloads(
     )
 
 
-def extract_byte_spans(pair_hex: DataFrame, cfg: DedupConfig) -> DataFrame:
+def extract_byte_spans(pair_hex: DataFrame) -> DataFrame:
     """``(id_a, id_b, hex_a, hex_b)`` -> chunk-unit instruction rows.
 
     Runs the suffix-array LCS kernel (``suffix.suffix_spans``) over CDC

@@ -130,7 +130,8 @@ def verified_pairs(sig_df: DataFrame, cfg: DedupConfig, id_col: str) -> DataFram
 
 
 def _walk_buckets(
-    bands: DataFrame, cfg: DedupConfig, id_col: str, verify: bool = False
+    bands: DataFrame, cfg: DedupConfig, id_col: str, verify: bool = False,
+    new_col: str | None = None,
 ) -> DataFrame:
     """One row per pair emission: ``(id_a, id_b)``, plus ``(n_eq, inter,
     un)`` of the verified emissions when ``verify``.
@@ -145,6 +146,15 @@ def _walk_buckets(
     (``J <= min/max``) are pruned at emission. Pairs are oriented
     ``id_a < id_b``; for string ids Python's code-point order equals
     Spark's UTF-8 byte order.
+
+    ``new_col`` names a boolean column that marks new members: the
+    streaming epoch's insert+probe (``2df.c:458-516``) walks the stored
+    rows of the touched buckets with the arriving ones, so each run is
+    tiered by its size at arrival. Only emissions with a new member are
+    kept, pairs of two rows with one id (an id sent again) are dropped,
+    and each emission carries its ``band_id``: an id with two versions in
+    a run emits a pair twice in one band, so the caller counts distinct
+    bands.
     """
     import pyarrow as pa
 
@@ -190,6 +200,11 @@ def _walk_buckets(
             return
         first = np.cumsum(reach) - reach
         b = a + 1 + np.arange(a.size) - np.repeat(first, reach)
+        if new_col:
+            fresh = t.column(new_col).to_numpy(zero_copy_only=False)
+            idv = t.column(id_col).to_numpy(zero_copy_only=False)
+            keep = (fresh[a] | fresh[b]) & (idv[a] != idv[b])
+            a, b = a[keep], b[keep]
         if has_set:
             ns = t.column("n_set").to_numpy().astype(np.int64)
             lo, hi = np.minimum(ns[a], ns[b]), np.maximum(ns[a], ns[b])
@@ -217,6 +232,7 @@ def _walk_buckets(
             "id_a": pa.array(np.where(swap, ib, ia), type=ids.type),
             "id_b": pa.array(np.where(swap, ia, ib), type=ids.type),
             **checked,
+            **({"band_id": pa.array(bid[a])} if new_col else {}),
         })
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -252,6 +268,9 @@ def _walk_buckets(
     if verify:
         cols += ["sig", "shingle_set"]
         schema += ", n_eq bigint, inter bigint, un bigint"
+    if new_col:
+        cols.append(new_col)
+        schema += f", band_id {bands.schema['band_id'].dataType.simpleString()}"
     return (
         bands.select(*cols)
         .repartition("band_id", "band_hash")
@@ -556,6 +575,12 @@ def short_doc_pairs(
     distribution, so the chain keeps the whole bucket connected for
     connected-components while the pair count stays O(s * window) instead
     of s^2.
+
+    The chain stays outside ``_walk_buckets`` on purpose: it has no mega
+    cap, and the walker bounds its carry only by dropping runs above
+    ``mega_cap``. Folding the chain in would either make the carry
+    unbounded or drop a boilerplate short-page bucket instead of chaining
+    it, which changes the output.
     """
     from .textfns import simhash
 

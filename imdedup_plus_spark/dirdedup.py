@@ -195,7 +195,7 @@ def compress(
         F.col("ref_id").alias("id_a"), F.col("doc_id").alias("id_b")
     )
     spans = BD.extract_byte_spans(
-        BD.pair_payloads(pairs, docs, "doc_id", hex_col=_raw_hex()), cfg
+        BD.pair_payloads(pairs, docs, "doc_id", hex_col=_raw_hex())
     )
     spans.write.format("sidp").mode("overwrite").save(f"{work_dir}/spans")
 

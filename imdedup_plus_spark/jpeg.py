@@ -43,9 +43,7 @@ encoder's quantized coefficients EXACTLY (integer identity through
 zigzag + DC-prediction + Huffman + byte stuffing and back), which is
 what ``mm_jpeg_dct_stats`` checks against the DuckDB replay — the
 CHECK_DECOMPRESS discipline (``/root/reference/jpeg.c:583-603``) applied
-to the entropy layer. Pixel reconstruction (``decode_jpeg``) uses the
-float inverse transform and is NOT bit-replayable (JPEG is lossy); tests
-bound its error instead (PSNR).
+to the entropy layer.
 """
 
 from __future__ import annotations
@@ -653,25 +651,3 @@ def decode_jpeg_to_dct(data: bytes):
         raise ValueError("decode_jpeg_to_dct: single-component streams only")
     _cid, coefs, q, _sh, _sv = planes[0]
     return coefs, h, w, q
-
-
-_M_F = np.array(
-    [
-        [(math.sqrt(1.0 / 8) if u == 0 else 0.5)
-         * math.cos((2 * k + 1) * u * math.pi / 16) for k in range(8)]
-        for u in range(8)
-    ]
-)
-
-
-def decode_jpeg(data: bytes) -> np.ndarray:
-    """JFIF bytes -> grayscale uint8 pixels (lossy; float inverse DCT)."""
-    coefs, h, w, q = decode_jpeg_to_dct(data)
-    bh, bw = coefs.shape[:2]
-    out = np.zeros((bh * 8, bw * 8), dtype=np.float64)
-    for br in range(bh):
-        for bc in range(bw):
-            f = (coefs[br, bc] * q).astype(np.float64)
-            out[br * 8 : br * 8 + 8, bc * 8 : bc * 8 + 8] = _M_F.T @ f @ _M_F
-    px = np.clip(np.round(out + 128.0), 0, 255).astype(np.uint8)
-    return px[:h, :w]

@@ -315,7 +315,6 @@ class CheckpointedPipeline:
             "spans",
             lambda: SP.extract_spans(
                 SP.pair_texts_from_clusters(clusters, docs, idc),
-                cfg,
                 string_ids=dict(docs.dtypes)[idc] == "string",
             ),
         )

@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import OMIT_LOW_DELTA, DedupConfig
+from .config import OMIT_LOW_DELTA
 from .signatures import ascii_tokens
 from .suffix import suffix_spans
 
@@ -111,8 +111,7 @@ def greedy_spans(base_tokens: list[str], tgt_tokens: list[str],
     return out
 
 
-def extract_spans(pair_texts: DataFrame, cfg: DedupConfig,
-                  string_ids: bool = False) -> DataFrame:
+def extract_spans(pair_texts: DataFrame, string_ids: bool = False) -> DataFrame:
     """``(id_a, id_b, text_a, text_b)`` -> span instruction rows.
 
     ``text_a`` is the base, ``text_b`` the target. Tokenization here is

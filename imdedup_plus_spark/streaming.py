@@ -24,9 +24,8 @@ then insert self) as incremental DataFrame dataflow:
   signature store on ``id_part = pmod(xxhash64(id), n_parts)``, so each
   micro-batch reads only the store partitions its own keys hash into —
   probe I/O is proportional to the batch, not to the accumulated corpus;
-  bucket sizes are maintained **incrementally** in a per-epoch delta table
-  (one row per touched bucket per epoch) instead of being recomputed by
-  scanning the full band store;
+  a per-epoch delta table (one row per touched bucket per epoch) keeps
+  each bucket's live size as a sum, readable without a band-store scan;
 * **idempotent replays**: ``foreachBatch`` is at-least-once, so every
   state write is partitioned by ``epoch``; a replay first CLEARS the
   epoch's partitions (a crashed attempt may have left partials — possibly
@@ -38,17 +37,22 @@ then insert self) as incremental DataFrame dataflow:
   raises instead of silently dropping data; consumers (``read_pairs``)
   only see manifest-committed epochs.
 
-Incremental output == batch output **in the uncapped case** (no bucket
-ever crosses ``bucket_cap``): a pair (a, b) is emitted exactly when its
-later member arrives (the earlier member's bands are already in the
-store), with the same ``n_matching_bands``, verification arithmetic, and
-early size-ratio prune as the batch path — ``tests/test_streaming.py``
-asserts set equality against the batch pipeline. Under SCALE_CONFIG caps
-the cap/warm tier is evaluated against bucket sizes *as of arrival*
-(exactly like the reference's featureT probe), so a bucket that crosses
-the cap mid-stream yields a pair set that differs from a one-shot batch
-run while keeping the same recall property (see
-``candidate_pairs_probe``).
+Pairing is the batch walker's (``candidates._walk_buckets``): each epoch
+walks the stored band rows of the touched buckets together with the
+arriving ones, flagged new, and keeps the emissions with a new member. A
+bucket maps to one ``bh_part``, so a run holds the bucket's live members
+at arrival and is tiered by that size — the reference's featureT probe
+likewise sees state as of arrival. Incremental output == batch output
+**in the uncapped case** (no bucket ever crosses ``bucket_cap``): a pair
+(a, b) is emitted exactly when its later member arrives, with the same
+``n_matching_bands``, verification arithmetic, and size-ratio prune as
+the batch path — ``tests/test_streaming.py`` asserts set equality
+against the batch pipeline. Under SCALE_CONFIG caps a bucket that
+crosses the cap mid-stream yields a pair set that differs from a
+one-shot batch run (warm-tier rank adjacency is evaluated at arrival,
+not at end state) but keeps the same recall property: group members
+keep near-equal set sizes at every prefix of the stream, and
+``tests/test_streaming.py`` checks planted recall through this path.
 """
 
 from __future__ import annotations
@@ -59,119 +63,6 @@ from pyspark.sql import functions as F
 from . import candidates as C
 from . import signatures as S
 from .config import DedupConfig
-
-
-def candidate_pairs_probe(
-    bands_new: DataFrame, bands_all: DataFrame, cfg: DedupConfig, id_col: str,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Pair each *new* document against the full band index (old ∪ new).
-
-    Probe side = the new batch's bands; build side = all bands. A pair of
-    two new docs matches twice (each probes the other) — the distinct
-    band count collapses that. ``bucket_cap`` applies to the bucket size
-    *at probe time* (the reference's featureT probe likewise sees state
-    as of arrival); the early size-ratio prune is identical to the batch
-    path (``candidates.candidate_pairs_direct``).
-
-    With ``cfg.hot_window > 0`` the batch path's warm tier applies
-    incrementally too: members of warm buckets (cap < size <= mega_cap)
-    are ranked by ``(n_set, id)`` over the *accumulated* bucket and pairs
-    within ``hot_window`` ranks are emitted when at least one member is
-    new. The emitted pair set differs from a one-shot batch run (rank
-    adjacency is evaluated at arrival time, not at end state) but has the
-    same recall property — group members keep near-equal set sizes at
-    every prefix of the stream; tests/test_streaming.py checks planted
-    recall through the incremental path.
-
-    ``sizes`` (band_id, band_hash, bucket_size), when given, replaces the
-    groupBy over ``bands_all`` — the incremental path passes the
-    delta-table rollup so sizing never scans band membership rows. It only
-    needs to cover the buckets present in ``bands_new`` (a bucket key maps
-    to one store partition, so the pruned delta slice is complete for
-    them); ``bands_all`` likewise only needs those buckets' members.
-    """
-    has_set = "n_set" in bands_all.columns
-    if sizes is None:
-        sizes = bands_all.groupBy("band_id", "band_hash").agg(
-            F.count(F.lit(1)).alias("bucket_size")
-        )
-    ok = sizes.where(
-        (F.col("bucket_size") >= 2) & (F.col("bucket_size") <= cfg.bucket_cap)
-    ).select("band_id", "band_hash")
-    keep_cols = [id_col, "band_id", "band_hash"] + (["n_set"] if has_set else [])
-    probe = bands_new.join(ok, ["band_id", "band_hash"]).select(*keep_cols)
-    build = bands_all.join(ok, ["band_id", "band_hash"]).select(*keep_cols)
-
-    a, b = probe.alias("a"), build.alias("b")
-    pairs0 = a.join(b, ["band_id", "band_hash"], "inner").where(
-        F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
-    )
-    if has_set:
-        pairs0 = pairs0.where(
-            F.expr(
-                "least(a.n_set, b.n_set) * 100 >= "
-                f"greatest(a.n_set, b.n_set) * {cfg.verify_jaccard_pct}"
-            )
-        )
-    emissions = pairs0.select(
-        F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
-        F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
-        "band_id",
-    )
-
-    if cfg.hot_window > 0 and has_set:
-        from pyspark.sql import Window
-
-        warm_keys = sizes.where(
-            (F.col("bucket_size") > cfg.bucket_cap)
-            & (F.col("bucket_size") <= cfg.mega_cap)
-        ).select("band_id", "band_hash", "bucket_size")
-        warm = bands_all.join(warm_keys, ["band_id", "band_hash"]).select(
-            id_col, "band_id", "band_hash", "n_set", "bucket_size"
-        )
-        new_ids = bands_new.select(F.col(id_col).alias("__new_id__")).distinct()
-        warm = warm.join(
-            new_ids, warm[id_col] == new_ids["__new_id__"], "left"
-        ).withColumn("is_new", F.col("__new_id__").isNotNull()).drop("__new_id__")
-        rw = Window.partitionBy("band_id", "band_hash").orderBy(
-            F.col("n_set").asc(), F.col(id_col).asc()
-        )
-        ranked = warm.withColumn("r", F.row_number().over(rw))
-        # sequence(start, stop) DESCENDS when stop < start — guard the last rank
-        wa = ranked.where(F.col("r") < F.col("bucket_size")).select(
-            F.col(id_col).alias("ida"), "band_id", "band_hash",
-            F.col("n_set").alias("n_set_a"), F.col("is_new").alias("new_a"),
-            F.explode(
-                F.sequence(
-                    F.col("r") + 1,
-                    F.least(F.col("r") + cfg.hot_window, F.col("bucket_size")),
-                )
-            ).alias("rp"),
-        )
-        wb = ranked.select(
-            F.col(id_col).alias("idb"), "band_id", "band_hash",
-            F.col("n_set").alias("n_set_b"), F.col("is_new").alias("new_b"),
-            F.col("r").alias("rp"),
-        )
-        warm_pairs = wa.join(wb, ["band_id", "band_hash", "rp"]).where(
-            (F.col("new_a") | F.col("new_b"))
-            & F.expr(
-                "least(n_set_a, n_set_b) * 100 >= "
-                f"greatest(n_set_a, n_set_b) * {cfg.verify_jaccard_pct}"
-            )
-        )
-        emissions = emissions.unionByName(
-            warm_pairs.select(
-                F.least(F.col("ida"), F.col("idb")).alias("id_a"),
-                F.greatest(F.col("ida"), F.col("idb")).alias("id_b"),
-                "band_id",
-            )
-        )
-
-    return emissions.groupBy("id_a", "id_b").agg(
-        F.countDistinct("band_id").cast("long").alias("n_matching_bands")
-    )
 
 
 def _store_exists(spark: SparkSession, path: str) -> bool:
@@ -270,8 +161,8 @@ def incremental_dedup_batch(
 
     * ``bands/``        partitioned (epoch, bh_part) — the LSH index
     * ``bucket_deltas/``partitioned (epoch, bh_part) — per-epoch bucket
-      size increments (one row per touched bucket): bucket sizes are
-      maintained incrementally, never recomputed from band membership
+      size increments (one row per touched bucket); their sum per bucket
+      is the live bucket size
     * ``signatures/``   partitioned (epoch, id_part)
     * ``pairs/``        partitioned (epoch) — the output
     * ``retired/``      partitioned (epoch, id_part) — tombstones: ids
@@ -333,9 +224,9 @@ def incremental_dedup_batch(
     epoch_id`` guards against reading this epoch's own partial leftovers
     during a replay).
 
-    Probe I/O is proportional to the batch: the band store and the delta
-    table are read only for the ``bh_part`` values the new batch's bands
-    hash into, and the signature store only for the ``id_part`` values of
+    Probe I/O is proportional to the batch: the band store is read only
+    for the ``bh_part`` values the new batch's bands hash into, and the
+    signature store only for the ``id_part`` values of
     verified-candidate members — both are partition columns, so Spark
     prunes at file-listing time (PLANS.md shows the PartitionFilters).
     """
@@ -463,6 +354,10 @@ def incremental_dedup_batch(
     touched = [r[0] for r in bands_new.select("bh_part").distinct().collect()]
     band_cols = [c for c in bands_new.columns if c != "bh_part"]
 
+    # probe, then insert: the live stored rows of the touched buckets walk
+    # with the arriving ones (a bucket maps to one bh_part, so each run is
+    # the whole bucket at arrival) and only pairs with a new member emit
+    walked = bands_new.select(*band_cols, F.lit(True).alias("is_new"))
     if _store_exists(spark, bands_store):
         old_bands = _exclude_retired(
             spark.read.parquet(bands_store)
@@ -470,27 +365,14 @@ def incremental_dedup_batch(
             .select(*band_cols, "epoch"),
             retired,
             id_col,
-        ).select(*band_cols)
-        bands_all = old_bands.unionByName(bands_new.select(*band_cols))
-        old_deltas = (
-            spark.read.parquet(deltas_store)
-            .where(F.col("bh_part").isin(touched) & (F.col("epoch") != epoch_id))
-            .select("band_id", "band_hash", "delta")
-        )
-        sizes = (
-            old_deltas.unionByName(deltas_new.select("band_id", "band_hash", "delta"))
-            .groupBy("band_id", "band_hash")
-            .agg(F.sum("delta").alias("bucket_size"))
-        )
-    else:
-        bands_all = bands_new.select(*band_cols)
-        sizes = deltas_new.select(
-            "band_id", "band_hash", F.col("delta").alias("bucket_size")
-        )
-
-    cand = candidate_pairs_probe(
-        bands_new.select(*band_cols), bands_all, cfg, id_col, sizes=sizes
-    ).localCheckpoint(eager=True)
+        ).select(*band_cols, F.lit(False).alias("is_new"))
+        walked = old_bands.unionByName(walked)
+    cand = (
+        C._walk_buckets(walked, cfg, id_col, new_col="is_new")
+        .groupBy("id_a", "id_b")
+        .agg(F.countDistinct("band_id").cast("long").alias("n_matching_bands"))
+        .localCheckpoint(eager=True)
+    )
 
     if _store_exists(spark, sig_store):
         need_parts = [

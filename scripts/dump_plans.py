@@ -104,7 +104,7 @@ def main() -> None:
         ("candidate_pairs hot_window=4 (the same walker: warm runs pair each member with its hot_window successors in (n_set, id) order; still one exchange + one groupBy)", hotwin),
         ("ivf_ann_topk (broadcast codebook cross-join; one exchange on cell_id)", ivf),
         ("asof_join (union-interleave: ONE exchange on key, window, no range join)", asof),
-        ("extract_byte_spans (two id joins attach payload hex; shuffle-free mapInPandas kernel)", BD.extract_byte_spans(BD.pair_payloads(pairs.select("id_a", "id_b"), docs, "doc_id"), cfg)),
+        ("extract_byte_spans (two id joins attach payload hex; shuffle-free mapInPandas kernel)", BD.extract_byte_spans(BD.pair_payloads(pairs.select("id_a", "id_b"), docs, "doc_id"))),
         ("update_clusters (incremental fold: BroadcastHashJoin relabels the assignment — no corpus exchange; quotient CC is checkpoint-isolated upstream)", inc),
         ("distinct_shingle_estimate_kernel (KMV: mapInPandas bottom-k partials — <=k rows per chunk — then the only exchange is over the tiny partial set; the shingle universe is never shuffled)", M.distinct_shingle_estimate_kernel(sig_k)),
         ("cluster_keepers (argmax survivor per cluster: partial max_by aggregate BEFORE the exchange — a mega cluster ships one candidate row per task, NOT its membership — then ShuffledHashJoin join-back; NO per-cluster row_number window sort anywhere in the plan)", keepers),

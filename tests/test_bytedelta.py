@@ -6,7 +6,6 @@ from __future__ import annotations
 import random
 
 from imdedup_plus_spark import bytedelta as BD
-from imdedup_plus_spark.config import REFERENCE_CONFIG as CFG
 from imdedup_plus_spark.suffix import suffix_spans
 
 
@@ -83,7 +82,7 @@ def test_byte_spans_spark_roundtrip(spark, sf001_docs):
     pairs = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)], "id_a long, id_b long"
     )
-    spans = BD.extract_byte_spans(BD.pair_payloads(pairs, sf001_docs, "doc_id"), CFG)
+    spans = BD.extract_byte_spans(BD.pair_payloads(pairs, sf001_docs, "doc_id"))
     chk = BD.byte_roundtrip_check(spans, sf001_docs, "doc_id").collect()
     assert chk and all(r["byte_identical"] for r in chk)
 
@@ -96,7 +95,7 @@ def test_byte_summary_accounts_every_chunk(spark, sf001_docs):
         [(ids[0], i) for i in ids[1:]], "id_a long, id_b long"
     )
     pp = BD.pair_payloads(pairs, sf001_docs, "doc_id")
-    spans = BD.extract_byte_spans(pp, CFG)
+    spans = BD.extract_byte_spans(pp)
     summ = {
         r["id_b"]: r["copied_chunks"] + r["inserted_chunks"]
         for r in BD.byte_span_summary(spans).collect()

@@ -3,6 +3,7 @@ independent references, verification kernels."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import replace
 
 import pytest
@@ -369,14 +370,9 @@ def _run_bands(spark, runs):
     return df, members
 
 
-def test_walker_drops_a_mega_run_longer_than_one_batch(spark):
-    """A run longer than mega_cap and than one Arrow batch is dropped while
-    streaming; the quiet and warm runs around it in the same partition
-    still pair by their rules."""
-    from imdedup_plus_spark.config import DedupConfig
-
-    bands, m = _run_bands(spark, {5: 3, 9: 30, 13: 6, 17: 1})
-    cfg = DedupConfig(bucket_cap=4, mega_cap=10, hot_window=2)
+@contextmanager
+def _one_partition_batch7(spark):
+    """Every run in one partition, walked in 7-row Arrow batches."""
     confs = {
         "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
         "spark.sql.shuffle.partitions": "1",
@@ -385,18 +381,69 @@ def test_walker_drops_a_mega_run_longer_than_one_batch(spark):
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_walker_drops_a_mega_run_longer_than_one_batch(spark):
+    """A run longer than mega_cap and than one Arrow batch is dropped while
+    streaming; the quiet and warm runs around it in the same partition
+    still pair by their rules."""
+    from imdedup_plus_spark.config import DedupConfig
+
+    bands, m = _run_bands(spark, {5: 3, 9: 30, 13: 6, 17: 1})
+    cfg = DedupConfig(bucket_cap=4, mega_cap=10, hot_window=2)
+    with _one_partition_batch7(spark):
         windowed = sorted(tuple(r) for r in C.candidate_pairs(bands, cfg, "doc_id").collect())
         dropped = sorted(
             tuple(r)
             for r in C.candidate_pairs(bands, replace(cfg, hot_window=0), "doc_id").collect()
         )
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
     quiet = [(a, b, 1) for i, a in enumerate(m[5]) for b in m[5][i + 1:]]
     warm = [(a, b, 1) for i, a in enumerate(m[13]) for b in m[13][i + 1:i + 3]]
     assert windowed == sorted(quiet + warm)
     assert dropped == quiet
+
+
+def test_walker_new_member_mask(spark):
+    """The streaming epoch's walk: with a new-member column the walker
+    equals the unmasked walker filtered to pairs with a new member, over
+    quiet, warm and mega runs that straddle Arrow batches. An id present
+    twice in one run (sent again) pairs neither with itself nor twice in
+    one band."""
+    import random
+
+    from imdedup_plus_spark.config import DedupConfig
+
+    bands, m = _run_bands(spark, {5: 3, 9: 30, 13: 6, 17: 1, 21: 3})
+    rng = random.Random(7)
+    fresh = {i: rng.random() < 0.5 for ids in m.values() for i in ids}
+    p, q, r = m[21]
+    fresh.update({p: True, q: False, r: False})
+    flags = spark.createDataFrame(list(fresh.items()), "doc_id long, is_new boolean")
+    again = spark.createDataFrame(
+        [(r, 0, 21, 10, True)],
+        "doc_id long, band_id int, band_hash long, n_set int, is_new boolean",
+    )
+    walked = bands.join(flags, "doc_id").unionByName(again)
+    for hot_window in (0, 2):
+        cfg = DedupConfig(bucket_cap=4, mega_cap=10, hot_window=hot_window)
+        with _one_partition_batch7(spark):
+            emitted = C._walk_buckets(walked, cfg, "doc_id", new_col="is_new").persist()
+            self_pairs = emitted.where("id_a = id_b").count()
+            # the epoch's aggregation: distinct bands per pair
+            got = sorted(
+                tuple(x)
+                for x in emitted.groupBy("id_a", "id_b").agg(F.countDistinct("band_id")).collect()
+            )
+            plain = C.candidate_pairs(bands.where("band_hash != 21"), cfg, "doc_id").collect()
+            emitted.unpersist()
+        assert self_pairs == 0
+        want = [tuple(x) for x in plain if fresh[x.id_a] or fresh[x.id_b]]
+        assert got == sorted(want + [(p, q, 1), (p, r, 1), (q, r, 1)]), hot_window
+        assert any(a in m[13] for a, _, _ in got) == (hot_window > 0)
 
 
 def test_walker_string_ids_orient_by_code_point(spark):

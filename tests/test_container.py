@@ -37,7 +37,7 @@ def _spans_df(spark):
     sig = S.signature_kernel_arrow(docs, CFG, "doc_id")
     pairs = C.candidate_pairs(S.explode_bands(sig, CFG, "doc_id"), CFG, "doc_id")
     best = C.best_base(C.verify_pairs_kernel(pairs, sig, CFG, "doc_id"))
-    return SP.extract_spans(SP.pair_texts_from_best_base(best, docs, "doc_id"), CFG)
+    return SP.extract_spans(SP.pair_texts_from_best_base(best, docs, "doc_id"))
 
 
 def _sorted_rows(df):

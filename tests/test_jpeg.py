@@ -18,7 +18,6 @@ from imdedup_plus_spark.jpeg import (
     QUANT_LUMA,
     ZIGZAG,
     _pad_blocks,
-    decode_jpeg,
     decode_jpeg_to_dct,
     encode_jpeg,
     forward_dct_quant,
@@ -63,17 +62,6 @@ def test_extreme_blocks():
     ):
         coefs, _, _, _ = decode_jpeg_to_dct(encode_jpeg(img))
         assert (coefs == _expected_coefs(img)).all()
-
-
-def test_pixel_decode_quality_on_smooth_image():
-    """The float-IDCT pixel path is lossy but must be CLOSE on smooth
-    content (the synth gradient): PSNR well above noise level."""
-    img = synth_image(7)
-    px = decode_jpeg(encode_jpeg(img))
-    assert px.shape == img.shape
-    mse = float(np.mean((px.astype(float) - img.astype(float)) ** 2))
-    psnr = 10 * np.log10(255**2 / mse)
-    assert psnr > 20, f"PSNR {psnr:.1f} dB"
 
 
 def test_jfif_structure_and_validation():
@@ -229,8 +217,6 @@ def test_corrupt_entropy_fuzz_never_crashes():
     overread). Seeded, 200 trials."""
     import random
 
-    from imdedup_plus_spark.jpeg import decode_jpeg
-
     data = encode_jpeg(synth_image(5))
     sos = data.find(b"\xff\xda")
     rng = random.Random(0xC0FFEE)
@@ -240,6 +226,6 @@ def test_corrupt_entropy_fuzz_never_crashes():
             i = rng.randrange(sos + 10, len(b) - 2)
             b[i] = rng.randrange(255)  # 255 excluded: 0xFF starts a marker
         try:
-            decode_jpeg(bytes(b))
+            decode_jpeg_to_dct(bytes(b))
         except ValueError:
             pass

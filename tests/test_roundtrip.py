@@ -18,7 +18,7 @@ def test_cluster_mode_roundtrip(spark, fixture_corpus):
     )
     cl = CL.clusters_from_pairs(sig, ver, "url")
     spans = SP.extract_spans(
-        SP.pair_texts_from_clusters(cl, docs, "url"), CFG, string_ids=True
+        SP.pair_texts_from_clusters(cl, docs, "url"), string_ids=True
     )
     rec = SP.reconstruct_targets(spans, docs, "url")
     chk = rec.join(docs.select(F.col("url").alias("id_b"), "text"), "id_b")

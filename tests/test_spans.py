@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 from imdedup_plus_spark import spans as SP
-from imdedup_plus_spark.config import REFERENCE_CONFIG as CFG
 
 
 def test_identical_sequences_single_copy():
@@ -74,17 +73,16 @@ def test_extract_spans_dataframe(spark):
         "id_a long, id_b long, text_a string, text_b string",
     )
     rows = sorted(
-        SP.extract_spans(pairs, CFG).collect(), key=lambda r: r.instr_id
+        SP.extract_spans(pairs).collect(), key=lambda r: r.instr_id
     )
     assert [r.kind for r in rows] == ["COPY", "INSERT", "COPY"]
     assert rows[1].payload == "X Y"
 
 
 def test_omit_low_delta_pass_through(spark):
-    cfg = CFG
     pairs = spark.createDataFrame(
         [(1, 2, "a b c", " ".join(f"z{i}" for i in range(50)))],
         "id_a long, id_b long, text_a string, text_b string",
     )
-    rows = SP.extract_spans(pairs, cfg).collect()
+    rows = SP.extract_spans(pairs).collect()
     assert len(rows) == 1 and rows[0].kind == "INSERT" and rows[0].length == 50

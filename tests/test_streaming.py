@@ -13,8 +13,8 @@ from imdedup_plus_spark import signatures as S
 from imdedup_plus_spark import streaming as ST
 from imdedup_plus_spark.config import DedupConfig
 
-#: huge cap so probe-time and global bucket-cap semantics coincide — the
-#: cap-equality caveat is documented in candidate_pairs_probe
+#: huge cap so arrival-time and global bucket-cap semantics coincide — the
+#: cap-equality caveat is documented in the streaming module docstring
 CFG = DedupConfig(bucket_cap=1_000_000)
 
 PAIR_COLS = ["id_a", "id_b", "n_matching_bands", "n_eq", "inter", "un"]
